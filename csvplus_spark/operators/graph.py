@@ -22,6 +22,45 @@ from csvplus_spark.errors import CsvPlusError
 #: remainders are negligible, small enough that N·Q stays << 2^63
 PR_Q = 1 << 40
 
+#: edge lists up to this many rows are finished on the driver (one
+#: bounded collect, then exact numpy rounds) instead of in per-round
+#: Spark jobs. The value caps the driver collect; it is not a measured
+#: crossover and is unverified: on one machine the driver finish won at
+#: every size measured (docs/SCALE.md "Small graphs finish on the
+#: driver"), and no benchmark workload runs above it
+SMALL_GRAPH_EDGES = 200_000
+
+
+def _small_edges(edges: DataFrame):
+    """``edges`` as an Arrow table when it holds at most
+    :data:`SMALL_GRAPH_EDGES` rows, else None — one bounded job, so a
+    large graph pays one probe and keeps its distributed loop. Callers
+    cache ``edges`` first: the probe still computes every partition,
+    and the cache lets the distributed loop reuse that work."""
+    t = edges.limit(SMALL_GRAPH_EDGES + 1).toArrow()
+    return t if t.num_rows <= SMALL_GRAPH_EDGES else None
+
+
+def _dense_ids(x, y):
+    """``(ids, cx, cy)``: the sorted distinct non-NULL values of two
+    same-typed Arrow id columns and each row's int64 position in
+    ``ids`` (-1 for NULL). Arrow sorts ints numerically and strings
+    bytewise, as Spark does, so a minimum over positions is the
+    minimum id."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pc.unique(pa.chunked_array(x.chunks + y.chunks, x.type)) \
+        .drop_null()
+    ids = ids.take(pc.sort_indices(ids))
+
+    def pos(col):
+        return pc.index_in(col, value_set=ids).fill_null(-1) \
+            .to_numpy().astype(np.int64)
+
+    return ids, pos(x), pos(y)
+
 
 class GraphScaleError(CsvPlusError):
     """A graph input violates a documented scale contract.
@@ -96,24 +135,40 @@ def integer_pagerank(edges: DataFrame, src: str = "doc_id_1",
     edge endpoints (restrict-to-graph semantics — dangling corpus
     members carry no edges to rank on).
 
-    Scale shape: per round one groupBy(dst) integer-sum over the edge
-    list + one node-table join — the standard distributed PR; the
-    round count is the critical path (same argument as the CC
-    pointer-jumping note in docs/SCALE.md).
+    Small graphs (at most :data:`SMALL_GRAPH_EDGES` edges, found by one
+    bounded probe job) run the same recurrence on the driver in exact
+    int64 numpy arithmetic and come back as a small frame; the final
+    ``round(q/Q)`` stays a Spark expression on either path, so the
+    output is identical bit for bit. Larger graphs run the distributed
+    shape: per round one groupBy(dst) integer-sum over the edge list +
+    one node-table join — the standard distributed PR; the round count
+    is the critical path (same argument as the CC pointer-jumping note
+    in docs/SCALE.md).
     """
     if iters < 0 or damping_den <= 0 or not (0 <= damping_num
                                              <= damping_den):
         raise ValueError("integer_pagerank: need iters >= 0 and "
                          "0 <= damping_num <= damping_den")
+    # cached before the probe, so on a large graph und's cache below
+    # is filled from the probe's work instead of rerunning the upstream
     e = (edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
-         .filter(F.col("__s__") != F.col("__d__")))
+         .filter(F.col("__s__") != F.col("__d__"))).cache()
+    # the driver recurrence cannot overflow int64 while den·Q does not
+    # (every per-node mass and inflow stays ≤ Q); Spark's long math
+    # wraps where numpy's floor division would then differ
+    small = _small_edges(e) if damping_den * PR_Q < 1 << 63 else None
+    und = (e.unionByName(e.select(F.col("__d__").alias("__s__"),
+                                  F.col("__s__").alias("__d__")))
+           .distinct())
+    if small is not None:
+        e.unpersist()
+        return _ranked(_pagerank_on_driver(und, small, iters, damping_num,
+                                           damping_den), ndigits)
     # cache: the edge list is read once per round from BOTH sides of
     # the contribution join — uncached, every round re-runs the whole
     # upstream pair pipeline (a MinHash LSH edge source re-banded the
     # corpus per round: 132s → 9s measured at sf0.01)
-    und = (e.unionByName(e.select(F.col("__d__").alias("__s__"),
-                                  F.col("__s__").alias("__d__")))
-           .distinct()).cache()
+    und = und.cache()
     deg = und.groupBy("__s__").agg(F.count(F.lit(1)).alias("__deg__"))
     n_nodes = deg.groupBy().agg(
         F.count(F.lit(1)).alias("n")).scalar()
@@ -137,9 +192,47 @@ def integer_pagerank(edges: DataFrame, src: str = "doc_id_1",
         # dedup.py — the iterative join otherwise re-executes every
         # prior round on each reference)
         pr = pr.localCheckpoint(eager=False)
+    return _ranked(pr, ndigits)
+
+
+def _ranked(pr: DataFrame, ndigits: int) -> DataFrame:
+    """``(node, pr = round(q/Q))`` — one Spark expression for both
+    paths, so their rounding is identical."""
     return pr.select(F.col("__s__").alias("node"),
                      F.round(F.col("__q__") / F.lit(float(PR_Q)),
                              ndigits).alias("pr"))
+
+
+def _pagerank_on_driver(und: DataFrame, small, iters: int, num: int,
+                        den: int) -> DataFrame:
+    """``(__s__, __q__)`` of the integer recurrence over the collected
+    Arrow edge list ``small`` — the distributed rounds' arithmetic, in
+    int64 numpy (all quantities non-negative, so ``//`` is Spark's
+    ``div``)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    node_field = und.schema["__s__"]
+    typ = to_arrow_type(node_field.dataType)
+    ids, cs, cd = _dense_ids(small.column(0).cast(typ),
+                             small.column(1).cast(typ))
+    # `small` went through the __s__ != __d__ filter: no NULL, no self-loop
+    n_ids = len(ids)
+    pairs = np.unique(np.concatenate([cs * n_ids + cd, cd * n_ids + cs]))
+    u, v = pairs // n_ids, pairs % n_ids
+    deg = np.bincount(u, minlength=n_ids)
+    base = PR_Q // max(n_ids, 1)  # every id is an endpoint: deg ≥ 1
+    teleport = ((den - num) * base) // den
+    q = np.full(n_ids, base, dtype=np.int64)
+    for _ in range(iters):
+        inflow = np.zeros(n_ids, dtype=np.int64)
+        np.add.at(inflow, v, q[u] // deg[u])
+        q = (num * inflow) // den + teleport
+    table = pa.table({"__s__": ids, "__q__": pa.array(q, pa.int64())})
+    return und.sparkSession.createDataFrame(table, StructType([
+        node_field, StructField("__q__", LongType(), True)]))
 
 
 def triangle_count(edges: DataFrame, src: str = "doc_id_1",

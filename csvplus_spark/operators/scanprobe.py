@@ -47,6 +47,7 @@ exchange-vs-scan breakeven differs from this box.
 
 from __future__ import annotations
 
+import functools
 import os
 from urllib.parse import urlparse
 
@@ -74,26 +75,21 @@ _MODE_ENV = "CSVPLUS_KEYED_FANOUT"
 _MIN_BYTES_ENV = "CSVPLUS_KEYED_FANOUT_MIN_BYTES"
 _VEC_MIN_BYTES_ENV = "CSVPLUS_VECTOR_FANOUT_MIN_BYTES"
 
-#: footer metadata memo keyed on (path, size, mtime_ns) — METADATA
-#: caching only (never query results); invalidated by any rewrite
-_footer_cache: dict[tuple[str, int, int], tuple[int, int]] = {}
-
-
+@functools.lru_cache(maxsize=4096)
 def _footer_stats(path: str, size: int, mtime_ns: int) -> tuple[int, int]:
-    """(row_groups, uncompressed_bytes) from one parquet footer."""
-    key = (path, size, mtime_ns)
-    hit = _footer_cache.get(key)
-    if hit is None:
-        import pyarrow.parquet as pq
+    """(row_groups, uncompressed_bytes) from one parquet footer.
 
-        md = pq.ParquetFile(path).metadata
-        hit = (
-            md.num_row_groups,
-            sum(md.row_group(i).total_byte_size
-                for i in range(md.num_row_groups)),
-        )
-        _footer_cache[key] = hit
-    return hit
+    Memoized on (path, size, mtime_ns) — METADATA only (never query
+    results), invalidated by any rewrite, and bounded so a long-lived
+    session scanning ever-new files does not grow it without limit."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    return (
+        md.num_row_groups,
+        sum(md.row_group(i).total_byte_size
+            for i in range(md.num_row_groups)),
+    )
 
 
 def probe_uncompressed_bytes(df: DataFrame) -> int | None:

@@ -16,6 +16,22 @@ from csvplus_spark.operators.similarity import brute_force_topk, lsh_topk
 from csvplus_spark.operators.text import lang_id, simhash_table, text_stats
 
 
+@pytest.fixture
+def graph_paths(monkeypatch):
+    """Iterate a test body over both connected-components / PageRank
+    paths: the driver finish, then the distributed Spark loop
+    (SMALL_GRAPH_EDGES = -1 sends even an empty edge list there). A
+    loop rather than parametrize keeps each test's id unchanged."""
+    from csvplus_spark.operators import graph
+
+    def paths():
+        for name, limit in (("driver", graph.SMALL_GRAPH_EDGES),
+                            ("distributed", -1)):
+            monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", limit)
+            yield name
+    return paths
+
+
 def test_text_stats_values(spark):
     df = spark.createDataFrame([(1, "The cat, and the dog! of a tiny house nearby here.")], ["doc_id", "text"])
     row = text_stats(df).collect()[0]
@@ -327,7 +343,7 @@ def test_bpe_distributed_matches_reference(spark, sf_dir):
     assert len(got) == 80
 
 
-def test_simhash_reps_matches_cc_over_pairs(spark, sf_dir):
+def test_simhash_reps_matches_cc_over_pairs(spark, graph_paths, sf_dir):
     """simhash_reps' hash-collapsed CC must agree with brute-force
     connected components over simhash_near_pairs, with singletons as
     their own representative."""
@@ -352,8 +368,10 @@ def test_simhash_reps_matches_cc_over_pairs(spark, sf_dir):
     expect = {i: min(members) for r_, members in comp.items() for i in members}
     from csvplus_spark.operators.dedup import simhash_reps
 
-    got = {r["doc_id"]: r["rep_id"] for r in simhash_reps(docs, 3).collect()}
-    assert got == expect
+    for _ in graph_paths():
+        got = {r["doc_id"]: r["rep_id"]
+               for r in simhash_reps(docs, 3).collect()}
+        assert got == expect
 
 
 def test_brute_force_topk_matches_numpy(spark, sf_dir):
@@ -885,7 +903,7 @@ def test_repeated_spans_collapsed_identity(spark, sf_dir):
     assert (9_000_001, "") in plain_rm
 
 
-def test_dup_clusters_collapsed_identity(spark, sf_dir):
+def test_dup_clusters_collapsed_identity(spark, graph_paths, sf_dir):
     """The exact-collapse clusters path must be byte-identical to
     dup_clusters(ngram_jaccard_pairs(docs)) — on the raw corpus AND on
     a corpus with injected exact duplicates (where the collapse
@@ -905,15 +923,16 @@ def test_dup_clusters_collapsed_identity(spark, sf_dir):
     ).unionByName(spark.createDataFrame(
         [(900_001, "tiny doc"), (900_002, "tiny doc")],
         "doc_id long, text string"))
-    for docs in (base, dup):
-        want = {(r["doc_id"], r["cluster_id"]) for r in
-                dup_clusters(ngram_jaccard_pairs(docs, 0.6)).collect()}
-        got = {(r["doc_id"], r["cluster_id"]) for r in
-               dup_clusters_collapsed(docs, 0.6).collect()}
-        assert got == want
-    # the duplicated corpus must include every copy, labelled by the
-    # base component (representative = smallest id)
-    assert all(cid < 100_000 for _, cid in got)
+    for _ in graph_paths():
+        for docs in (base, dup):
+            want = {(r["doc_id"], r["cluster_id"]) for r in
+                    dup_clusters(ngram_jaccard_pairs(docs, 0.6)).collect()}
+            got = {(r["doc_id"], r["cluster_id"]) for r in
+                   dup_clusters_collapsed(docs, 0.6).collect()}
+            assert got == want
+        # the duplicated corpus must include every copy, labelled by the
+        # base component (representative = smallest id)
+        assert all(cid < 100_000 for _, cid in got)
 
 
 def test_token_budget_mix_rejects_negative_weights(spark):
@@ -1317,7 +1336,7 @@ def test_ngram_collapsed_identity(spark, sf_dir):
     assert not any(d1 == 9_000_001 for d1, _, _ in plain)
 
 
-def test_semantic_dedup_keep_drop(spark):
+def test_semantic_dedup_keep_drop(spark, graph_paths):
     """SemDeDup contract: near-identical vectors in one cell collapse
     to the min id; distant vectors stay their own canonical; every
     input id appears exactly once (operators/dedup.py::semantic_dedup)."""
@@ -1338,15 +1357,16 @@ def test_semantic_dedup_keep_drop(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id long, embedding array<float>")
-    got = {r["vec_id"]: (r["canonical_id"], r["is_canonical"])
-           for r in semantic_dedup(df, threshold=0.9, n_cells=3).collect()}
-    assert set(got) == {1, 2, 3, 11, 12, 20}
-    assert got[1] == (1, True) and got[11] == (1, False)
-    assert got[2] == (2, True) and got[12] == (2, False)
-    assert got[3] == (3, True)
-    assert got[20] == (20, True)    # negative similarity never pairs
-    # survivors = one per semantic group
-    assert sorted(i for i, (c, k) in got.items() if k) == [1, 2, 3, 20]
+    for _ in graph_paths():
+        got = {r["vec_id"]: (r["canonical_id"], r["is_canonical"])
+               for r in semantic_dedup(df, threshold=0.9, n_cells=3).collect()}
+        assert set(got) == {1, 2, 3, 11, 12, 20}
+        assert got[1] == (1, True) and got[11] == (1, False)
+        assert got[2] == (2, True) and got[12] == (2, False)
+        assert got[3] == (3, True)
+        assert got[20] == (20, True)    # negative similarity never pairs
+        # survivors = one per semantic group
+        assert sorted(i for i, (c, k) in got.items() if k) == [1, 2, 3, 20]
 
 
 def test_key_skew_report_values(spark):
@@ -1398,7 +1418,7 @@ def test_top_fraction_null_group_kept(spark):
     assert got == {1, 3}
 
 
-def test_semantic_dedup_string_ids(spark):
+def test_semantic_dedup_string_ids(spark, graph_paths):
     """semantic_dedup works for non-integer id columns end to end
     (review-s3 fix: seeds/centroid schema were hardcoded to long)."""
     from csvplus_spark.operators.dedup import semantic_dedup
@@ -1407,13 +1427,14 @@ def test_semantic_dedup_string_ids(spark):
         [("a", [1.0, 0.0]), ("b", [0.0, 1.0]),
          ("x", [0.999, 0.01]), ("z", [0.0, 0.0])],
         "vec_id string, embedding array<float>")
-    got = {r["vec_id"]: (r["canonical_id"], r["is_canonical"])
-           for r in semantic_dedup(df, threshold=0.9, n_cells=2,
-                                   id_col="vec_id").collect()}
-    assert got["a"] == ("a", True) and got["x"] == ("a", False)
-    assert got["b"] == ("b", True)
-    # zero vector: cosine is NULL in both engines → never pairs
-    assert got["z"] == ("z", True)
+    for _ in graph_paths():
+        got = {r["vec_id"]: (r["canonical_id"], r["is_canonical"])
+               for r in semantic_dedup(df, threshold=0.9, n_cells=2,
+                                       id_col="vec_id").collect()}
+        assert got["a"] == ("a", True) and got["x"] == ("a", False)
+        assert got["b"] == ("b", True)
+        # zero vector: cosine is NULL in both engines → never pairs
+        assert got["z"] == ("z", True)
 
 
 def test_unigram_logprob_values(spark):
@@ -1562,7 +1583,7 @@ def test_auto_n_cells_bounds_cell_size(spark, sf_dir):
     assert auto == explicit and auto
 
 
-def test_semantic_dedup_collapse_identity_law(spark, sf_dir):
+def test_semantic_dedup_collapse_identity_law(spark, graph_paths, sf_dir):
     """Scaled-consistency pin (VERDICT r6 item 2), fast CI form of
     tools/check_sf1_compose.py's semantic_dedup law: duplicate the
     corpus via key shift (copy c = vec_id + c*OFF, same embedding) and
@@ -1581,23 +1602,24 @@ def test_semantic_dedup_collapse_identity_law(spark, sf_dir):
         dup = dup.unionByName(
             emb.select((F.col("vec_id") + c * OFF).alias("vec_id"),
                        "embedding"))
-    base = semantic_dedup(emb, 0.4, n_cells=CELLS).collect()
-    got = {(r["vec_id"], r["canonical_id"], r["is_canonical"])
-           for r in semantic_dedup(dup, 0.4, n_cells=CELLS).collect()}
-
     nonzero = {r["vec_id"] for r in with_double_vec(emb)
                .select("vec_id",
                        cosine(F.col("__vec__"), F.col("__vec__")).alias("s"))
                .filter(F.col("s") >= 0.4).collect()}
-    want = set()
-    for r in base:
-        for c in range(COPIES):
-            if r["vec_id"] in nonzero:
-                want.add((r["vec_id"] + c * OFF, r["canonical_id"],
-                          r["is_canonical"] and c == 0))
-            else:  # zero-norm: NULL cosine everywhere, singleton per copy
-                want.add((r["vec_id"] + c * OFF, r["vec_id"] + c * OFF, True))
-    assert got == want and len(got) == COPIES * len(base)
+    for _ in graph_paths():
+        base = semantic_dedup(emb, 0.4, n_cells=CELLS).collect()
+        got = {(r["vec_id"], r["canonical_id"], r["is_canonical"])
+               for r in semantic_dedup(dup, 0.4, n_cells=CELLS).collect()}
+        want = set()
+        for r in base:
+            for c in range(COPIES):
+                if r["vec_id"] in nonzero:
+                    want.add((r["vec_id"] + c * OFF, r["canonical_id"],
+                              r["is_canonical"] and c == 0))
+                else:  # zero-norm: NULL cosine everywhere, singleton per copy
+                    want.add((r["vec_id"] + c * OFF, r["vec_id"] + c * OFF,
+                              True))
+        assert got == want and len(got) == COPIES * len(base)
 
 
 def test_semantic_contamination_flags_and_nulls(spark):
@@ -2181,7 +2203,7 @@ def test_hashed_linear_scorer_separates_labels(spark):
         hashed_linear_scorer(df, F.col("y"), n_buckets=0)
 
 
-def test_integer_pagerank_properties(spark):
+def test_integer_pagerank_properties(spark, graph_paths):
     """Integer PageRank: a hub (star center) out-ranks leaves; an
     isolated clique splits mass evenly; total mass ≈ 1 (integer-div
     remainders only); deterministic across evaluations."""
@@ -2192,15 +2214,76 @@ def test_integer_pagerank_properties(spark):
         [(0, i) for i in range(1, 5)]
         + [(10, 11), (11, 12), (10, 12)],
         "doc_id_1 long, doc_id_2 long")
-    out = {r.node: r.pr for r in integer_pagerank(edges).collect()}
-    assert out[0] > out[1]
-    assert out[1] == out[2] == out[3] == out[4]
-    assert out[10] == out[11] == out[12]
-    assert abs(sum(out.values()) - 1.0) < 1e-4
-    out2 = {r.node: r.pr for r in integer_pagerank(edges).collect()}
-    assert out == out2
-    with pytest.raises(ValueError):
-        integer_pagerank(edges, damping_num=21)
+    for _ in graph_paths():
+        out = {r.node: r.pr for r in integer_pagerank(edges).collect()}
+        assert out[0] > out[1]
+        assert out[1] == out[2] == out[3] == out[4]
+        assert out[10] == out[11] == out[12]
+        assert abs(sum(out.values()) - 1.0) < 1e-4
+        out2 = {r.node: r.pr for r in integer_pagerank(edges).collect()}
+        assert out == out2
+        with pytest.raises(ValueError):
+            integer_pagerank(edges, damping_num=21)
+
+
+def test_graph_paths_identical_on_edge_cases(spark, graph_paths):
+    """The driver finish and the distributed loop of dup_clusters,
+    _cc_min_label and integer_pagerank return the same rows AND the same
+    schema on the inputs the fast path could get wrong: an empty edge
+    list, self-loops only, a NULL endpoint, isolated ``nodes=`` ids,
+    int32 and mixed int32/int64 ids (the rest are int64), string ids,
+    non-nullable columns and a chain longer than max_iter rounds could
+    cover without pointer jumping. The driver path leaves nothing
+    persisted."""
+    from csvplus_spark.operators.dedup import _cc_min_label, dup_clusters
+    from csvplus_spark.operators.graph import integer_pagerank
+
+    def edges(rows, t="long"):
+        return spark.createDataFrame(rows, f"doc_id_1 {t}, doc_id_2 {t}")
+
+    inputs = {
+        "empty": edges([]),
+        "self_loops": edges([(1, 1), (2, 2)]),
+        "null_endpoint": edges([(1, None), (2, 3), (None, 4), (3, 4)]),
+        "int32": edges([(1, 2), (3, 2), (5, 6)], "int"),
+        "mixed_width": spark.createDataFrame(
+            [(1, 2), (3, 2), (5, 6)], "doc_id_1 int, doc_id_2 long"),
+        "strings": edges([("b", "a"), ("c", "d"), ("a", "e")], "string"),
+        "chain": edges([(i, i + 1) for i in range(60)]),
+        "not_nullable": spark.range(8).select(
+            F.col("id").alias("doc_id_1"),
+            (F.col("id") % 3).alias("doc_id_2")),
+    }
+    sym = spark.createDataFrame([(1, 2), (2, 1), (5, 6), (6, 5)],
+                                "a long, b long")
+    nodes = spark.createDataFrame([(1,), (2,), (5,), (6,), (9,), (None,)],
+                                  "a long")
+    ops = [(f"{op}/{name}", fn, e) for name, e in inputs.items()
+           for op, fn in (("cc", dup_clusters), ("pr", integer_pagerank))]
+    ops += [("cc/nodes", lambda e: _cc_min_label(e, nodes), sym),
+            ("pr0/int32", lambda e: integer_pagerank(e, iters=0),
+             inputs["int32"])]
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    results = {}
+    for path in graph_paths():
+        before = persisted()
+        for key, fn, e in ops:
+            out = fn(e)
+            results.setdefault(key, []).append(
+                (out.schema, sorted(map(tuple, out.collect()), key=repr)))
+        if path == "driver":  # the probe's cache is dropped again
+            assert persisted() <= before
+    for key, (driver, distributed) in results.items():
+        assert driver == distributed, key
+    assert results["cc/nodes"][0][1] == sorted(
+        [(1, 1), (2, 1), (5, 5), (6, 5), (9, 9), (None, None)], key=repr)
+    assert results["cc/null_endpoint"][0][1] == sorted(
+        [(None, None), (1, 1), (2, 2), (3, 2), (4, 2)], key=repr)
+    assert results["cc/chain"][0][1] == sorted(
+        [(i, 0) for i in range(61)], key=repr)
+    assert results["pr/empty"][0][1] == []
 
 
 def test_triangle_count_exact(spark):
@@ -2574,7 +2657,7 @@ def test_cohort_retention_pre_epoch_floor(spark):
     assert out == {(-1, 0): 1, (-1, 1): 1, (0, 0): 1}
 
 
-def test_semantic_dedup_collapse_identity(spark):
+def test_semantic_dedup_collapse_identity(spark, graph_paths):
     """r8 duplication-immunity: semantic_dedup(collapse=True) must be
     output-BYTE-IDENTICAL to the plain path on a corpus with heavy
     exact duplication, including the edges the collapse must respect —
@@ -2593,16 +2676,17 @@ def test_semantic_dedup_collapse_identity(spark):
              (12, [0.9, 0.1, 0.0]),       # near A
              (13, [0.0, 0.0, 0.0]), (14, [0.0, 0.0, 0.0])]  # zero-norm
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plain = sorted(tuple(r) for r in
-                   semantic_dedup(df, 0.4, n_cells=4, collapse=False)
-                   .collect())
-    fast = sorted(tuple(r) for r in
-                  semantic_dedup(df, 0.4, n_cells=4, collapse=True)
-                  .collect())
-    assert plain == fast
-    out = dict((r[0], r[1]) for r in fast)
-    assert out[13] == 13 and out[14] == 14  # zero vectors stay singletons
-    assert out[5] == 0 and out[12] == 0     # dup group + near-dup share A's min id
+    for _ in graph_paths():
+        plain = sorted(tuple(r) for r in
+                       semantic_dedup(df, 0.4, n_cells=4, collapse=False)
+                       .collect())
+        fast = sorted(tuple(r) for r in
+                      semantic_dedup(df, 0.4, n_cells=4, collapse=True)
+                      .collect())
+        assert plain == fast
+        out = dict((r[0], r[1]) for r in fast)
+        assert out[13] == 13 and out[14] == 14  # zero vectors stay singletons
+        assert out[5] == 0 and out[12] == 0     # dup group + near-dup share A's min id
 
 
 def test_simhash_pair_cap(spark, sf_dir):

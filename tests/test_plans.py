@@ -422,3 +422,27 @@ def test_keyed_fan_out_gate(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "auto")
     ck = docs.localCheckpoint(eager=False)
     assert not scan_fan_out_wanted(ck)
+
+
+def test_footer_memo_is_bounded(tmp_path):
+    """The parquet-footer memo behind the fan-out probe is a bounded
+    LRU keyed on (path, size, mtime_ns): a long-lived session scanning
+    ever-new files must not grow it without limit, and a rewrite of
+    the same path is a new key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from csvplus_spark.operators.scanprobe import _footer_stats
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": list(range(10))}), path)
+    _footer_stats.cache_clear()
+    limit = _footer_stats.cache_info().maxsize
+    assert limit is not None and limit > 0
+    rgs, unc = _footer_stats(path, 1, 0)
+    assert rgs == 1 and unc > 0
+    for mtime in range(1, limit + 50):
+        assert _footer_stats(path, 1, mtime) == (rgs, unc)
+    info = _footer_stats.cache_info()
+    assert info.currsize == limit and info.misses == limit + 50
+    _footer_stats.cache_clear()
