@@ -418,13 +418,13 @@ def q_dedup_ngram(spark, sf_dir):
 
 
 def q_dedup_ngram_fast(spark, sf_dir):
-    """ngram_jaccard_pairs with exact-duplicate collapse — output
-    byte-identical to `dedup_ngram` (same oracle), Σdf² blocking cost
-    measured over the deduplicated corpus (operators/dedup.py)."""
-    from csvplus_spark.operators.dedup import ngram_jaccard_pairs_collapsed
+    """ngram_jaccard_pairs(collapse=True): exact-duplicate collapse —
+    output byte-identical to `dedup_ngram` (same oracle), Σdf² blocking
+    cost measured over the deduplicated corpus (operators/dedup.py)."""
+    from csvplus_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs_collapsed(
-        load_table(spark, sf_dir, "documents").df, 0.6)
+    return ngram_jaccard_pairs(
+        load_table(spark, sf_dir, "documents").df, 0.6, collapse=True)
 
 
 def q_ann_recall(spark, sf_dir):
@@ -473,13 +473,13 @@ def q_dedup_minhash(spark, sf_dir):
 
 
 def q_dedup_minhash_fast(spark, sf_dir):
-    """minhash_dedup_pairs with exact-duplicate collapse — output
-    byte-identical to `dedup_minhash` (same oracle), candidate volume
-    duplication-immune (operators/dedup.py)."""
-    from csvplus_spark.operators.dedup import minhash_dedup_pairs_collapsed
+    """minhash_dedup_pairs(collapse=True): exact-duplicate collapse —
+    output byte-identical to `dedup_minhash` (same oracle), candidate
+    volume duplication-immune (operators/dedup.py)."""
+    from csvplus_spark.operators.dedup import minhash_dedup_pairs
 
-    return minhash_dedup_pairs_collapsed(
-        load_table(spark, sf_dir, "documents").df, 0.6)
+    return minhash_dedup_pairs(
+        load_table(spark, sf_dir, "documents").df, 0.6, collapse=True)
 
 
 def q_simhash(spark, sf_dir):
@@ -1608,17 +1608,17 @@ def q_ivf2_seeded(spark, sf_dir):
 
 def q_fuzzy_join_fast(spark, sf_dir):
     """Duplication-immune cross-table fuzzy join (operators/dedup.py::
-    minhash_join_collapsed): same oracle as fuzzy_join — outputs are
-    byte-identical by the collapse-identity argument — with band +
+    minhash_join(collapse=True)): same oracle as fuzzy_join — outputs
+    are byte-identical by the collapse-identity argument — with band +
     verify volume shrunk ×(f_L·f_R) on duplicated corpora."""
     import pyspark.sql.functions as F
 
-    from csvplus_spark.operators.dedup import minhash_join_collapsed
+    from csvplus_spark.operators.dedup import minhash_join
 
     docs = load_table(spark, sf_dir, "documents").df
-    return minhash_join_collapsed(docs.filter(F.col("doc_id") % 2 == 0),
-                                  docs.filter(F.col("doc_id") % 2 == 1),
-                                  0.6)
+    return minhash_join(docs.filter(F.col("doc_id") % 2 == 0),
+                        docs.filter(F.col("doc_id") % 2 == 1),
+                        0.6, collapse=True)
 
 
 def q_pq_topk(spark, sf_dir):
@@ -6457,14 +6457,14 @@ GROUP BY 1
 
 
 def q_dedup_containment_fast(spark, sf_dir):
-    """Duplication-immune containment pairs (ngram_containment_pairs_
-    collapsed): exact-copy collapse → rep-space containment → expand;
-    byte-identical to q_dedup_containment (shared oracle), cost bounded
-    by the DISTINCT corpus."""
-    from csvplus_spark.operators.dedup import ngram_containment_pairs_collapsed
+    """Duplication-immune containment pairs (ngram_containment_pairs(
+    collapse=True)): exact-copy collapse → rep-space containment →
+    expand; byte-identical to q_dedup_containment (shared oracle), cost
+    bounded by the DISTINCT corpus."""
+    from csvplus_spark.operators.dedup import ngram_containment_pairs
 
     docs = load_table(spark, sf_dir, "documents").df
-    return ngram_containment_pairs_collapsed(docs, 0.8)
+    return ngram_containment_pairs(docs, 0.8, collapse=True)
 
 
 def q_cms_topk(spark, sf_dir):

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import _dense_ids, _small_edges
-from .scanprobe import keyed_fan_out
+from .scanprobe import collapse_wanted, keyed_fan_out
 from .text import fingerprint, hash60, tokens
 
 SHINGLE_K = 3
@@ -60,7 +60,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     # bm25/ccnet fan-out pattern) was A/B'd and REVERTED — the two fp
     # consumers shuffle by the same key, so AQE's runtime exchange
     # reuse already computes the fingerprint pass once (direct query:
-    # parity), while the collapsed dedup variants wrap exact_dedup in
+    # parity), while the collapse=True dedup paths wrap exact_dedup in
     # their own .cache() and the nested checkpoint only added a second
     # materialization + unknown-size SMJ flips (dedup_minhash_fast
     # 1.33x, dedup_keep_best_fast 1.13x local).
@@ -96,7 +96,7 @@ def shingle_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # stage runs at full machine width instead of at the scan's
     # row-group count (1 at sf0.1, 5 at sf10 — the compressed corpus
     # parquet reads as a handful of splits however many cores exist).
-    # ``fan_out=False`` skips it: the collapsed variants feed a reps
+    # ``fan_out=False`` skips it: the collapse=True paths feed a reps
     # JOIN whose output is already hash(id)-partitioned, and an
     # explicit repartition there is a redundant second exchange
     # (fuzzy_join_fast read 1.25-1.36x with it).
@@ -123,28 +123,41 @@ def _shingle_sizes(pairs: DataFrame) -> DataFrame:
     return pairs.groupBy("__id__").agg(F.count(F.lit(1)).alias("__n__"))
 
 
-def _verify_jaccard(ex: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+def _score_pairs(inter: DataFrame, sizes1: DataFrame, sizes2: DataFrame,
+                 threshold: float, metric: str = "jaccard") -> DataFrame:
+    """Score (d1, d2, inter) intersection counts against the
+    (__id__, __n__) shingle-set sizes of each side and keep the pairs
+    at or above ``threshold``: Jaccard inter / (n1 + n2 − inter), or
+    containment inter / min(n1, n2). Returns (doc_id_1, doc_id_2,
+    ``metric``)."""
+    n1, n2, i = F.col("s1.__n__"), F.col("s2.__n__"), F.col("inter")
+    score = i / (n1 + n2 - i) if metric == "jaccard" else i / F.least(n1, n2)
+    return (
+        inter.join(sizes1.alias("s1"), F.col("d1") == F.col("s1.__id__"))
+        .join(sizes2.alias("s2"), F.col("d2") == F.col("s2.__id__"))
+        .withColumn(metric, score)
+        .filter(F.col(metric) >= threshold)
+        .select(F.col("d1").alias("doc_id_1"), F.col("d2").alias("doc_id_2"), metric)
+    )
+
+
+def _verify_jaccard(ex: DataFrame, cand: DataFrame, threshold: float,
+                    ey: DataFrame | None = None) -> DataFrame:
     """Exact Jaccard for candidate (d1, d2) pairs via a join-based
-    intersection count over the (doc, shingle) table — all codegen, no
-    interpreted array ops (shared by the ngram and minhash paths)."""
+    intersection count over the (doc, shingle) tables — ``ex`` holds
+    the d1 side, ``ey`` (default ``ex``) the d2 side — all codegen, no
+    interpreted array ops (shared by the MinHash self-pair and
+    cross-table paths)."""
+    ey = ex if ey is None else ey
     inter = (
         ex.alias("x")
         .join(cand, F.col("x.__id__") == F.col("d1"))
-        .join(ex.alias("y"),
+        .join(ey.alias("y"),
               (F.col("y.__id__") == F.col("d2")) & (F.col("x.__s__") == F.col("y.__s__")))
         .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sizes = _shingle_sizes(ex)
-    return (
-        inter.join(sizes.alias("s1"), F.col("d1") == F.col("s1.__id__"))
-        .join(sizes.alias("s2"), F.col("d2") == F.col("s2.__id__"))
-        .withColumn("jaccard",
-                    F.col("inter")
-                    / (F.col("s1.__n__") + F.col("s2.__n__") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("d1").alias("doc_id_1"), F.col("d2").alias("doc_id_2"), "jaccard")
-    )
+    return _score_pairs(inter, _shingle_sizes(ex), _shingle_sizes(ey), threshold)
 
 
 #: shingles in more documents than this are "stop shingles" and are
@@ -162,6 +175,7 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     hot_df: int | None = HOT_SHINGLE_DF,
     shingles: DataFrame | None = None,
+    collapse: bool = False,
 ) -> DataFrame:
     """EXACT near-dup pairs: Jaccard over word-trigram shingle sets.
     Returns (doc_id_1, doc_id_2, jaccard).
@@ -194,7 +208,77 @@ def ngram_jaccard_pairs(
     — correct on any corpus, but only safe at scale when the caller
     KNOWS no shingle is hot enough to make a quadratic bucket (e.g.
     boilerplate already stripped upstream).
+
+    ``collapse=True`` runs all of the above over one representative
+    per exact-duplicate group and expands the result
+    (:func:`_expand_rep_pairs`): byte-identical output, with the Σdf²
+    blocking volume measured over the DEDUPLICATED corpus —
+    duplication factor f cuts it ×f² (this pair family scaled 8.3× at
+    the 10× validation point without it). The cutoff argument holds in
+    rep space like in any other corpus. It cannot take ``shingles``
+    (that table covers every doc, not the representatives). Off by
+    default: on an already-deduplicated corpus the fingerprint pass is
+    pure overhead. Pinned by test_ngram_collapsed_identity and the
+    driver query `dedup_ngram_fast` (same oracle as `dedup_ngram`).
     """
+    return _ngram_pairs(df, threshold, text_col, id_col, hot_df, shingles,
+                        collapse, "jaccard")
+
+
+def ngram_containment_pairs(
+    df: DataFrame,
+    threshold: float = 0.8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    hot_df: int | None = HOT_SHINGLE_DF,
+    shingles: DataFrame | None = None,
+    collapse: bool = False,
+) -> DataFrame:
+    """EXACT containment near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|)
+    over word-trigram shingle sets — catches SUBSET/SUPERSET
+    duplication (a page embedded in a longer page, a doc plus appended
+    boilerplate) that symmetric Jaccard structurally misses: for
+    B ⊇ A, J = |A|/|B| vanishes as B grows while C stays 1.0.
+    Returns (doc_id_1, doc_id_2, containment).
+
+    Same shared-cold-shingle blocking as :func:`ngram_jaccard_pairs`
+    (Σ|bucket|² bounded by the df cutoff), with a DIFFERENT fallback
+    argument: a qualifying pair missed by the cold join intersects
+    only in hot shingles, so inter ≤ h_A and inter ≤ h_B while
+    inter ≥ t·min(n_A, n_B) — the SMALLER member is hot-heavy at its
+    own size (h ≥ t·n); nothing constrains the larger member's ratio.
+    Hence the fallback is the HOT equi-join restricted to pairs with a
+    hot-heavy member (they share ≥1 hot shingle by inter ≥ 1 > 0):
+    cost Σ_hot |bucket ∩ hh|·|bucket| — linear in the corpus times the
+    (tiny, boilerplate-only) hot-heavy set, never df². Exact
+    intersections are then completed per candidate exactly as in the
+    Jaccard path.
+
+    ``collapse=True`` is the exact-duplicate collapse of
+    :func:`ngram_jaccard_pairs`: containment is a SET function of the
+    shingle sets too, so the identity holds verbatim (cross pairs
+    inherit the rep pair's containment, intra pairs score exactly 1.0
+    ≥ any threshold). The plain path's 30× duplication probe hits the
+    copies² shuffle-disk wall exactly like the raw cluster graph did;
+    this is the scale path. Pinned by
+    test_containment_collapsed_identity and `dedup_containment_fast`.
+    """
+    return _ngram_pairs(df, threshold, text_col, id_col, hot_df, shingles,
+                        collapse, "containment")
+
+
+def _ngram_pairs(df: DataFrame, threshold: float, text_col: str,
+                 id_col: str, hot_df: int | None,
+                 shingles: DataFrame | None, collapse: bool,
+                 metric: str) -> DataFrame:
+    """Shared body of :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs` (``metric`` names which). The two
+    differ only in the fallback candidate set and the score."""
+    if collapse:
+        return _expand_rep_pairs(
+            df, text_col, id_col, shingles, metric,
+            lambda reps, sp: _ngram_pairs(reps, threshold, text_col, id_col,
+                                          hot_df, sp, False, metric))
     ex = (shingles if shingles is not None
           else shingle_pairs(df, text_col, id_col)).cache()
     sizes = _shingle_sizes(ex)
@@ -232,17 +316,31 @@ def ngram_jaccard_pairs(
             exh = ex.filter(is_hot).cache()
             exc = ex.filter(~is_hot)
         cold = _inter_join(exc)
+        # hot-heavy at own size: ≥ t of the doc's shingles are hot
         hh = (
             exh.groupBy("__id__").agg(F.count(F.lit(1)).alias("__h__"))
             .join(sizes, "__id__")
             .filter(F.col("__h__") >= F.lit(threshold) * F.col("__n__"))
             .select("__id__")
         )
+        if metric == "jaccard":  # both members hot-heavy: all hh pairs
+            missed = (
+                hh.alias("a")
+                .join(hh.alias("b"), F.col("a.__id__") < F.col("b.__id__"))
+                .select(F.col("a.__id__").alias("d1"), F.col("b.__id__").alias("d2"))
+            )
+        else:  # the smaller member hot-heavy: hot equi-join from hh
+            missed = (
+                exh.join(hh, "__id__").alias("a")
+                .join(exh.alias("y"),
+                      (F.col("a.__s__") == F.col("y.__s__"))
+                      & (F.col("a.__id__") != F.col("y.__id__")))
+                .select(F.least("a.__id__", "y.__id__").alias("d1"),
+                        F.greatest("a.__id__", "y.__id__").alias("d2"))
+                .distinct()
+            )
         fallback = (
-            hh.alias("a")
-            .join(hh.alias("b"), F.col("a.__id__") < F.col("b.__id__"))
-            .select(F.col("a.__id__").alias("d1"), F.col("b.__id__").alias("d2"))
-            .join(cold.select("d1", "d2"), ["d1", "d2"], "left_anti")
+            missed.join(cold.select("d1", "d2"), ["d1", "d2"], "left_anti")
             .withColumn("__ic__", F.lit(0).cast("long"))
         )
         cand = cold.unionByName(fallback)
@@ -262,125 +360,7 @@ def ngram_jaccard_pairs(
             .withColumn("inter", F.col("__ic__") + F.coalesce("__ih__", F.lit(0)))
             .select("d1", "d2", "inter")
         )
-    return (
-        inter.join(sizes.alias("s1"), F.col("d1") == F.col("s1.__id__"))
-        .join(sizes.alias("s2"), F.col("d2") == F.col("s2.__id__"))
-        .withColumn("jaccard",
-                    F.col("inter")
-                    / (F.col("s1.__n__") + F.col("s2.__n__") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("d1").alias("doc_id_1"), F.col("d2").alias("doc_id_2"), "jaccard")
-    )
-
-
-def ngram_containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hot_df: int | None = HOT_SHINGLE_DF,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """EXACT containment near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|)
-    over word-trigram shingle sets — catches SUBSET/SUPERSET
-    duplication (a page embedded in a longer page, a doc plus appended
-    boilerplate) that symmetric Jaccard structurally misses: for
-    B ⊇ A, J = |A|/|B| vanishes as B grows while C stays 1.0.
-    Returns (doc_id_1, doc_id_2, containment).
-
-    Same shared-cold-shingle blocking as :func:`ngram_jaccard_pairs`
-    (Σ|bucket|² bounded by the df cutoff), with a DIFFERENT fallback
-    argument: a qualifying pair missed by the cold join intersects
-    only in hot shingles, so inter ≤ h_A and inter ≤ h_B while
-    inter ≥ t·min(n_A, n_B) — the SMALLER member is hot-heavy at its
-    own size (h ≥ t·n); nothing constrains the larger member's ratio.
-    Hence the fallback is the HOT equi-join restricted to pairs with a
-    hot-heavy member (they share ≥1 hot shingle by inter ≥ 1 > 0):
-    cost Σ_hot |bucket ∩ hh|·|bucket| — linear in the corpus times the
-    (tiny, boilerplate-only) hot-heavy set, never df². Exact
-    intersections are then completed per candidate exactly as in the
-    Jaccard path.
-    """
-    ex = (shingles if shingles is not None
-          else shingle_pairs(df, text_col, id_col)).cache()
-    sizes = _shingle_sizes(ex)
-
-    def _inter_join(src: DataFrame) -> DataFrame:
-        return (
-            src.alias("a")
-            .join(src.alias("b"),
-                  (F.col("a.__s__") == F.col("b.__s__"))
-                  & (F.col("a.__id__") < F.col("b.__id__")))
-            .groupBy(F.col("a.__id__").alias("d1"),
-                     F.col("b.__id__").alias("d2"))
-            .agg(F.count(F.lit(1)).alias("__ic__"))
-        )
-
-    cap = 10_000
-    hot_vals = [] if hot_df is None else [r[0] for r in (
-        ex.groupBy("__s__").agg(F.count(F.lit(1)).alias("__df__"))
-        .filter(F.col("__df__") > hot_df)
-        .select("__s__").limit(cap + 1).collect()
-    )]
-    if not hot_vals:
-        inter = _inter_join(ex).withColumnRenamed("__ic__", "inter")
-    else:
-        if len(hot_vals) > cap:
-            hot_set = (
-                ex.groupBy("__s__").agg(F.count(F.lit(1)).alias("__df__"))
-                .filter(F.col("__df__") > hot_df).select("__s__")
-            )
-            exh = ex.join(hot_set, "__s__").select("__id__", "__s__").cache()
-            exc = ex.join(hot_set, "__s__", "left_anti")
-        else:
-            is_hot = F.col("__s__").isin(hot_vals)
-            exh = ex.filter(is_hot).cache()
-            exc = ex.filter(~is_hot)
-        cold = _inter_join(exc)
-        # hot-heavy AT OWN SIZE — the smaller member of any missed pair
-        hh = (
-            exh.groupBy("__id__").agg(F.count(F.lit(1)).alias("__h__"))
-            .join(sizes, "__id__")
-            .filter(F.col("__h__") >= F.lit(threshold) * F.col("__n__"))
-            .select("__id__")
-        )
-        fallback = (
-            exh.join(hh, "__id__").alias("a")
-            .join(exh.alias("y"),
-                  (F.col("a.__s__") == F.col("y.__s__"))
-                  & (F.col("a.__id__") != F.col("y.__id__")))
-            .select(F.least("a.__id__", "y.__id__").alias("d1"),
-                    F.greatest("a.__id__", "y.__id__").alias("d2"))
-            .distinct()
-            .join(cold.select("d1", "d2"), ["d1", "d2"], "left_anti")
-            .withColumn("__ic__", F.lit(0).cast("long"))
-        )
-        cand = cold.unionByName(fallback)
-        ih = (
-            exh.alias("x")
-            .join(cand.select("d1", "d2"), F.col("x.__id__") == F.col("d1"))
-            .join(exh.alias("y"),
-                  (F.col("y.__id__") == F.col("d2"))
-                  & (F.col("x.__s__") == F.col("y.__s__")))
-            .groupBy("d1", "d2")
-            .agg(F.count(F.lit(1)).alias("__ih__"))
-        )
-        inter = (
-            cand.join(ih, ["d1", "d2"], "left")
-            .withColumn("inter",
-                        F.col("__ic__") + F.coalesce("__ih__", F.lit(0)))
-            .select("d1", "d2", "inter")
-        )
-    return (
-        inter.join(sizes.alias("s1"), F.col("d1") == F.col("s1.__id__"))
-        .join(sizes.alias("s2"), F.col("d2") == F.col("s2.__id__"))
-        .withColumn("containment",
-                    F.col("inter")
-                    / F.least(F.col("s1.__n__"), F.col("s2.__n__")))
-        .filter(F.col("containment") >= threshold)
-        .select(F.col("d1").alias("doc_id_1"),
-                F.col("d2").alias("doc_id_2"), "containment")
-    )
+    return _score_pairs(inter, sizes, sizes, threshold, metric)
 
 
 def minhash_signatures(
@@ -518,6 +498,7 @@ def minhash_dedup_pairs(
     shingles: DataFrame | None = None,
     hot_band_cap: int | None = None,
     hot_band_splits: int = 16,
+    collapse: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, exact-verified.
 
@@ -531,10 +512,30 @@ def minhash_dedup_pairs(
     ``hot_band_cap`` (opt-in): buckets beyond this size run the
     output-identical triangle decomposition of
     :func:`_band_pairs_triangle` — set it when a boilerplate-heavy
-    corpus leaves near-identical (not byte-identical — use the
-    collapsed variant for those) signature groups big enough that one
+    corpus leaves near-identical (not byte-identical — use
+    ``collapse=True`` for those) signature groups big enough that one
     (band, sig) key's m² pairs dominate a task.
+
+    ``collapse=True`` bands and verifies one representative per
+    exact-duplicate group and expands the result
+    (:func:`_expand_rep_pairs`): byte-identical output,
+    duplication-immune candidate volume. Every copy of a doc carries
+    the same signature, so at duplication factor f the LSH candidates
+    and the verify join behind them grow ×f² with zero information
+    (measured: `dedup_minhash` 28s at the 10× point, 32s at 30× — both
+    dominated by copy×copy candidates). Identity: bands and exact
+    Jaccard depend only on the text, so (a, b) is a candidate iff
+    (rep_a, rep_b) is, at the same Jaccard; copies collide in EVERY
+    band, so the plain path emits every intra-group pair at J = 1.0
+    when the doc has ≥1 shingle. It cannot take ``shingles``. Pinned
+    by test_minhash_collapsed_identity and `dedup_minhash_fast`.
     """
+    if collapse:
+        return _expand_rep_pairs(
+            df, text_col, id_col, shingles, "jaccard",
+            lambda reps, sp: minhash_dedup_pairs(
+                reps, threshold, num_hashes, rows_per_band, text_col, id_col,
+                sp, hot_band_cap, hot_band_splits))
     # ONE shingle pass shared by the band path and the exact verify
     ex = (shingles if shingles is not None
           else shingle_pairs(df, text_col, id_col)).cache()
@@ -560,74 +561,44 @@ def minhash_dedup_pairs(
     return _verify_jaccard(ex, cand, threshold)
 
 
-def minhash_dedup_pairs_collapsed(
-    df: DataFrame,
-    threshold: float = 0.6,
-    num_hashes: int = 32,
-    rows_per_band: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`minhash_dedup_pairs` with exact-duplicate collapse:
-    byte-identical output, duplication-immune candidate volume — the
-    `dup_clusters_collapsed` trick applied to the MinHash family.
+def _exact_reps(df: DataFrame, text_col: str, id_col: str,
+                cache: bool = True) -> tuple[DataFrame, DataFrame]:
+    """The exact-duplicate collapse prologue: ``(ex, reps)`` — the
+    :func:`exact_dedup` membership table of ``df`` and the rows of
+    ``df`` that are their fingerprint's min-id representative.
+    ``cache`` keeps ``ex``: it feeds both the reps filter (which drives
+    the whole rep-space lineage) and the member expansion, and
+    uncached it re-runs the fingerprint scan per branch."""
+    ex = exact_dedup(df, text_col, id_col)
+    if cache:
+        ex = ex.cache()
+    return ex, df.join(ex.filter(F.col("is_canonical")).select(id_col), id_col)
 
-    On a crawl corpus with duplication factor f, every copy of a doc
-    carries the same signature, so LSH candidate volume (and the
-    verify join behind it) blows up ×f² while adding zero information
-    (measured: `dedup_minhash` 28s at the 10× point, 32s at 30× —
-    both dominated by copy×copy candidates). Collapse to one
-    representative per normalized-text fingerprint, run band + verify
-    over reps only, then expand with output-sized joins.
 
-    Identity argument:
-      * signatures/bands depend only on the text → candidate (a, b)
-        exists in the plain path iff (rep_a, rep_b) is a candidate in
-        rep space; exact Jaccard depends only on the shingle set →
-        J(a, b) = J(rep_a, rep_b). Cross-cluster pairs are therefore
-        exactly the rep pairs expanded over both memberships.
-      * copies collide in EVERY band (identical signatures), so the
-        plain path emits every intra-cluster pair at J = 1.0 —
-        provided the doc has ≥1 shingle (shingle-free docs never
-        reach the band table). The expansion adds those directly.
+def _expand_rep_pairs(df: DataFrame, text_col: str, id_col: str,
+                      shingles: DataFrame | None, metric: str,
+                      rep_pairs_of) -> DataFrame:
+    """``collapse=True`` of the self-pair family (n-gram Jaccard,
+    containment, MinHash): ``rep_pairs_of(reps, rep_shingles)`` runs
+    the plain operator over one representative per normalized-text
+    fingerprint, and its verified pairs expand back to doc space.
 
-    OPT-IN, not the default (same policy as
-    ``canonicalize_clusters(collapse=True)``): on an
-    already-deduplicated corpus the fingerprint pass is pure overhead.
-    Equality is pinned by
-    tests/test_llm_ops.py::test_minhash_collapsed_identity and the
-    driver query `dedup_minhash_fast` (same oracle as
-    `dedup_minhash`).
-    """
-    # cache: ex feeds BOTH the reps filter (driving the whole band +
-    # verify lineage) and the member expansion — uncached it re-runs
-    # the fingerprint scan per branch (same convention as the shared
-    # shingle table)
-    ex = exact_dedup(df, text_col, id_col).cache()
-    reps = df.join(ex.filter(F.col("is_canonical")).select(id_col), id_col)
-    # ONE shingle table over reps, shared by band + verify + the
+    Identity: ``metric`` is a SET function of the shingle sets and
+    exact copies have identical sets, so cross-cluster pairs are the
+    rep pairs expanded over both memberships (the value carries over),
+    and intra-cluster pairs score 1.0 — for clusters whose rep has ≥1
+    shingle only, since shingle-free docs never reach any blocking or
+    banding table in the plain paths. Both joins are output-sized."""
+    if shingles is not None:
+        raise ValueError(
+            "collapse=True shingles the representatives itself; a "
+            "caller's shingles= table covers every document")
+    ex, reps = _exact_reps(df, text_col, id_col)
+    # ONE shingle table over reps, shared by the operator and the
     # membership check below (fan_out=False: the reps join already
     # partitioned by id — see shingle_pairs)
     sp = shingle_pairs(reps, text_col, id_col, fan_out=False)
-    rep_pairs = minhash_dedup_pairs(reps, threshold, num_hashes,
-                                    rows_per_band, text_col, id_col,
-                                    shingles=sp)
-    return _expand_rep_pairs(ex, rep_pairs, sp, id_col)
-
-
-def _expand_rep_pairs(ex: DataFrame, rep_pairs: DataFrame,
-                      rep_shingles: DataFrame, id_col: str,
-                      metric: str = "jaccard") -> DataFrame:
-    """Expand a representative-space verified pair list back to doc
-    space: cross-cluster rep pairs over both memberships (the metric
-    carries over — identical shingle sets) + intra-cluster pairs at
-    metric = 1.0 for clusters whose rep has ≥1 shingle (shingle-free
-    docs never reach any blocking/banding table in the plain paths).
-    Both joins are output-sized. Shared by the minhash, ngram, and
-    containment collapsed variants — ``metric`` names the carried
-    column (any SET function of the shingle sets expands this way:
-    exact copies have identical sets, so every cross pair inherits the
-    rep pair's value and every intra pair scores 1.0)."""
+    rep_pairs = rep_pairs_of(reps, sp)
     members = ex.select(F.col("canonical_id").alias("__r__"),
                         F.col(id_col).alias("__m__"))
     cross = (
@@ -638,7 +609,7 @@ def _expand_rep_pairs(ex: DataFrame, rep_pairs: DataFrame,
                 F.greatest("ma.__m__", "mb.__m__").alias("doc_id_2"),
                 metric)
     )
-    shingled = rep_shingles.select(F.col("__id__").alias("__r__")).distinct()
+    shingled = sp.select(F.col("__id__").alias("__r__")).distinct()
     mm = members.join(shingled, "__r__")
     intra = (
         mm.alias("p")
@@ -650,53 +621,6 @@ def _expand_rep_pairs(ex: DataFrame, rep_pairs: DataFrame,
                 F.lit(1.0).alias(metric))
     )
     return cross.unionByName(intra)
-
-
-def ngram_jaccard_pairs_collapsed(
-    df: DataFrame,
-    threshold: float = 0.6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs` with exact-duplicate collapse —
-    byte-identical output, Σdf² candidate volume measured over the
-    DEDUPLICATED corpus (duplication factor f cuts it ×f²; this pair
-    family scaled 8.3× at the 10× validation point and its cluster
-    sibling hit the 30× disk wall precisely because of copy×copy
-    shingle blocking). Identity argument and policy are
-    :func:`minhash_dedup_pairs_collapsed`'s; the lossless hot-shingle
-    cutoff holds in rep space like any other corpus. OPT-IN; pinned
-    by tests/test_llm_ops.py::test_ngram_collapsed_identity and the
-    driver query `dedup_ngram_fast` (same oracle as `dedup_ngram`)."""
-    ex = exact_dedup(df, text_col, id_col).cache()  # see minhash variant
-    reps = df.join(ex.filter(F.col("is_canonical")).select(id_col), id_col)
-    sp = shingle_pairs(reps, text_col, id_col, fan_out=False)
-    rep_pairs = ngram_jaccard_pairs(reps, threshold, text_col, id_col,
-                                    shingles=sp)
-    return _expand_rep_pairs(ex, rep_pairs, sp, id_col)
-
-
-def ngram_containment_pairs_collapsed(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`ngram_containment_pairs` with exact-duplicate collapse —
-    byte-identical output, duplication-immune cost. Containment is a
-    pure SET function of the shingle sets, so the collapse identity of
-    the jaccard/minhash variants applies verbatim (exact copies have
-    identical sets: cross pairs inherit the rep pair's containment,
-    intra pairs score exactly 1.0 ≥ any threshold). The plain path's
-    30× duplication probe hits the copies² shuffle-disk wall exactly
-    like the raw cluster graph did; this is the scale path."""
-    ex = exact_dedup(df, text_col, id_col).cache()
-    reps = df.join(ex.filter(F.col("is_canonical")).select(id_col), id_col)
-    sp = shingle_pairs(reps, text_col, id_col, fan_out=False)
-    rep_pairs = ngram_containment_pairs(reps, threshold, text_col, id_col,
-                                        shingles=sp)
-    return _expand_rep_pairs(ex, rep_pairs, sp, id_col,
-                             metric="containment")
 
 
 def semantic_dedup(
@@ -742,7 +666,7 @@ def semantic_dedup(
     ``collapse=True`` (default, r8): EXACT-duplicate vectors collapse
     to their min-id representative before cell assignment, and only
     reps flow through the BLAS / rescore / CC stages — the same
-    duplication-immune trick as :func:`ngram_dedup_pairs_collapsed`.
+    duplication-immune trick as :func:`dup_clusters_collapsed`.
     The sf10 probe measured the plain path at 23.7× per 10× data at
     duplication factor 100 (the CC stage walks ×f² duplicate-pair
     edges); the collapsed path is output-BYTE-IDENTICAL because
@@ -1009,7 +933,6 @@ def canonicalize_clusters(
     threshold: float = 0.6,
     text_col: str = "text",
     id_col: str = "doc_id",
-    collapse: bool = False,
 ) -> DataFrame:
     """Dedup end-game: pick the SURVIVOR of each near-dup cluster.
 
@@ -1022,16 +945,6 @@ def canonicalize_clusters(
     Returns (doc_id, cluster_id, canonical_id, keep). Shapes: the CC
     loop (see dup_clusters) + one quality pass + one per-cluster
     window — nothing quadratic beyond the pair graph itself.
-
-    ``collapse=True`` computes clusters through the exact-duplicate
-    collapse (:func:`dup_clusters_collapsed`) — identical clusters,
-    pair-graph cost shrunk by the duplication factor squared. Flip it
-    for crawl-shaped corpora with meaningful exact duplication
-    (measured cold at the 10×-duplicated validation scale: 9.2s vs
-    33.9s); leave it off for already-deduplicated input, where the
-    extra fingerprint pass only adds cost (~10% at sf0.1, and ~3.5s
-    inside build_training_set's lazy plan, which re-evaluates the
-    upstream stages once more per added reference).
     """
     from pyspark.sql import Window
 
@@ -1039,8 +952,6 @@ def canonicalize_clusters(
 
     if pairs is not None:
         clusters = dup_clusters(pairs)
-    elif collapse:
-        clusters = dup_clusters_collapsed(docs, threshold, text_col, id_col)
     else:
         clusters = dup_clusters(
             ngram_jaccard_pairs(docs, threshold, text_col, id_col))
@@ -1294,9 +1205,7 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
     the driver query `dedup_clusters_fast` (same oracle as
     `dedup_clusters`).
     """
-    ex = exact_dedup(docs, text_col, id_col)
-    reps = docs.join(
-        ex.filter(F.col("is_canonical")).select(id_col), id_col)
+    ex, reps = _exact_reps(docs, text_col, id_col, cache=False)
     # ONE shingle table, shared: ngram_jaccard_pairs caches exactly
     # this frame, so the membership check below reads the cache instead
     # of re-running tokenize + posexplode + distinct over the reps
@@ -1485,15 +1394,7 @@ def embedding_near_pairs(
     # unique per-id fingerprint so they stay singletons — their
     # pairwise sim is NULL in the plain path and never links them.
     if collapse is None:
-        # auto (r14): collapse machinery only pays when the quadratic
-        # stages are expensive — probe the input's decoded size; an
-        # unprobeable input (checkpoint, remote) collapses, the
-        # scale-safe default
-        from .scanprobe import KEYED_FAN_OUT_MIN_BYTES, \
-            probe_uncompressed_bytes
-
-        nbytes = probe_uncompressed_bytes(emb)
-        collapse = nbytes is None or nbytes >= KEYED_FAN_OUT_MIN_BYTES
+        collapse = collapse_wanted(emb)
     collapsed = collapse and method in ("grid", "lsh")
     members = grp = None
     if collapsed:
@@ -2006,7 +1907,7 @@ def snapshot_diff(current: DataFrame, previous: DataFrame,
 def minhash_join(left: DataFrame, right: DataFrame,
                  threshold: float = 0.6, num_hashes: int = 32,
                  rows_per_band: int = 2, text_col: str = "text",
-                 id_col: str = "doc_id", fan_out: bool = True) -> DataFrame:
+                 id_col: str = "doc_id", collapse: bool = False) -> DataFrame:
     """Fuzzy CROSS-TABLE join by MinHash-LSH: near-duplicate pairs
     (left_id, right_id, jaccard ≥ threshold) between two corpora —
     aligning a new crawl snapshot against the previous one without
@@ -2021,9 +1922,28 @@ def minhash_join(left: DataFrame, right: DataFrame,
     (left, right) — and a pair appears once. Scale: both band tables
     shuffle once on (band, sig); candidate volume is governed by true
     cross-corpus similarity, not |L|·|R|.
+
+    ``collapse=True`` collapses each side to one representative per
+    normalized-text fingerprint, joins the reps, and expands the
+    verified rep pairs through both membership tables with
+    output-sized joins: byte-identical output, duplication-immune cost
+    (at duplication factors f_L, f_R the plain join's candidate AND
+    output volumes grow ×(f_L·f_R) — measured: 30× exact-copy scaling
+    took fuzzy_join 1.74s→15.7s). Identity: signatures and exact
+    Jaccard depend only on the text, so (a, b) is a plain-path pair
+    iff (rep_a, rep_b) is a rep-space pair with the same jaccard —
+    including identical-text cross-table pairs, whose reps collide in
+    every band (J = 1.0) when the text has ≥1 shingle; shingle-free
+    docs never reach banding in EITHER path. Pinned by
+    test_minhash_join_collapsed_identity and `fuzzy_join_fast`.
     """
-    exl = shingle_pairs(left, text_col, id_col, fan_out=fan_out).cache()
-    exr = shingle_pairs(right, text_col, id_col, fan_out=fan_out).cache()
+    if collapse:
+        ml, left = _exact_reps(left, text_col, id_col)
+        mr, right = _exact_reps(right, text_col, id_col)
+    # a collapsed side is the output of its reps join, already
+    # partitioned by id — no fan-out (see shingle_pairs)
+    exl = shingle_pairs(left, text_col, id_col, fan_out=not collapse).cache()
+    exr = shingle_pairs(right, text_col, id_col, fan_out=not collapse).cache()
     bl = minhash_bands(left, num_hashes, rows_per_band, text_col,
                        id_col, pairs=exl)
     br = minhash_bands(right, num_hashes, rows_per_band, text_col,
@@ -2036,68 +1956,15 @@ def minhash_join(left: DataFrame, right: DataFrame,
         .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"))
         .distinct()
     )
-    inter = (
-        exl.alias("x")
-        .join(cand, F.col("x.__id__") == F.col("d1"))
-        .join(exr.alias("y"),
-              (F.col("y.__id__") == F.col("d2"))
-              & (F.col("x.__s__") == F.col("y.__s__")))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1, s2 = _shingle_sizes(exl), _shingle_sizes(exr)
+    pairs = _verify_jaccard(exl, cand, threshold, exr).select(
+        F.col("doc_id_1").alias("left_id"),
+        F.col("doc_id_2").alias("right_id"), "jaccard")
+    if not collapse:
+        return pairs
+    ml, mr = (m.select(F.col("canonical_id").alias("__r__"),
+                       F.col(id_col).alias("__m__")) for m in (ml, mr))
     return (
-        inter.join(s1.alias("s1"), F.col("d1") == F.col("s1.__id__"))
-        .join(s2.alias("s2"), F.col("d2") == F.col("s2.__id__"))
-        .withColumn("jaccard",
-                    F.col("inter")
-                    / (F.col("s1.__n__") + F.col("s2.__n__")
-                       - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("d1").alias("left_id"),
-                F.col("d2").alias("right_id"), "jaccard")
-    )
-
-
-def minhash_join_collapsed(left: DataFrame, right: DataFrame,
-                           threshold: float = 0.6, num_hashes: int = 32,
-                           rows_per_band: int = 2, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
-    """:func:`minhash_join` with per-side exact-duplicate collapse —
-    byte-identical output, duplication-immune cost (the cross-table
-    sibling of :func:`minhash_dedup_pairs_collapsed`). On corpora
-    with duplication factors f_L, f_R the plain join's candidate AND
-    output volumes scale ×(f_L·f_R) with zero information gain
-    (measured: 30× exact-copy scaling took fuzzy_join 1.74s→15.7s,
-    NOTES r7 probes); here bands and verify run over one
-    representative per normalized-text fingerprint per side, and the
-    verified rep pairs expand through both membership tables with
-    output-sized joins.
-
-    Identity: signatures and exact Jaccard depend only on the text,
-    so (a, b) is a plain-path pair iff (rep_a, rep_b) is a rep-space
-    pair with the same jaccard — including identical-text cross-table
-    pairs, whose reps collide in every band (J = 1.0), provided the
-    text has ≥1 shingle; shingle-free docs never reach banding in
-    EITHER path, so the equality is exact. Pinned by
-    test_minhash_join_collapsed_identity.
-    """
-    exl = exact_dedup(left, text_col, id_col).cache()
-    exr = exact_dedup(right, text_col, id_col).cache()
-    reps_l = left.join(exl.filter(F.col("is_canonical")).select(id_col),
-                       id_col)
-    reps_r = right.join(exr.filter(F.col("is_canonical")).select(id_col),
-                        id_col)
-    # fan_out=False: the per-side reps joins already partition by id
-    rep_pairs = minhash_join(reps_l, reps_r, threshold, num_hashes,
-                             rows_per_band, text_col, id_col,
-                             fan_out=False)
-    ml = exl.select(F.col("canonical_id").alias("__r__"),
-                    F.col(id_col).alias("__m__"))
-    mr = exr.select(F.col("canonical_id").alias("__r__"),
-                    F.col(id_col).alias("__m__"))
-    return (
-        rep_pairs
+        pairs
         .join(ml.alias("ma"), F.col("left_id") == F.col("ma.__r__"))
         .join(mr.alias("mb"), F.col("right_id") == F.col("mb.__r__"))
         .select(F.col("ma.__m__").alias("left_id"),

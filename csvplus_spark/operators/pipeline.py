@@ -56,8 +56,7 @@ def build_training_set(
     one shingle equi-join with the probe side as build side; the split
     is a pure hash filter. Nothing here collects to the driver.
     """
-    from .dedup import (canonicalize_clusters, contamination_check,
-                        exact_dedup)
+    from .dedup import _exact_reps, canonicalize_clusters, contamination_check
     from .sampling import train_val_test_split
     from .text import text_stats
 
@@ -71,8 +70,7 @@ def build_training_set(
     # existing d2 checkpoint, and the write+read of O(corpus) bytes
     # costs about what the saved tokenize pass does (interleaved A/B
     # inconclusive inside the box noise band). Shape left as-is.
-    ex = exact_dedup(d1, text_col, id_col)
-    d2 = d1.join(ex.filter(F.col("is_canonical")).select(id_col), id_col)
+    _, d2 = _exact_reps(d1, text_col, id_col, cache=False)
     sh2 = None
     if with_centrality:
         # d2 fans out into canonicalization AND the centrality graph —

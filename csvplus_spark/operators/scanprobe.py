@@ -116,6 +116,17 @@ def probe_uncompressed_bytes(df: DataFrame) -> int | None:
     return total
 
 
+def collapse_wanted(df: DataFrame) -> bool:
+    """The auto (``collapse=None``) exact-duplicate collapse gate of
+    ``embedding_near_pairs`` and the span operators: the fingerprint
+    and membership machinery only pays when the quadratic stages are
+    expensive, so collapse when the input's decoded size reaches
+    ``KEYED_FAN_OUT_MIN_BYTES`` — or is unknowable (checkpoint,
+    remote), the scale-safe default."""
+    nbytes = probe_uncompressed_bytes(df)
+    return nbytes is None or nbytes >= KEYED_FAN_OUT_MIN_BYTES
+
+
 def scan_fan_out_wanted(df: DataFrame,
                         min_bytes: int | None = None) -> bool:
     """True when an explicit keyed repartition ahead of this frame's

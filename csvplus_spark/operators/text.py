@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .scanprobe import doc_fan_out, keyed_fan_out
+from .scanprobe import collapse_wanted, doc_fan_out, keyed_fan_out
 
 # languages and their (tiny, deterministic) stopword lists for the
 # n-gram/stopword language-ID heuristic; alphabetical order is the
@@ -861,11 +861,7 @@ def _collapse_by_raw_text(df: DataFrame, text_col: str, id_col: str,
     would drop those docs from the expansion) — all NULL texts share
     one group, which is exact: they all produce zero lines/tokens."""
     if collapse is None:
-        from .scanprobe import (KEYED_FAN_OUT_MIN_BYTES,
-                                probe_uncompressed_bytes)
-
-        nbytes = probe_uncompressed_bytes(df)
-        collapse = nbytes is None or nbytes >= KEYED_FAN_OUT_MIN_BYTES
+        collapse = collapse_wanted(df)
     if not collapse:
         return None, None
     fpt = df.select(

@@ -1281,13 +1281,10 @@ def test_remove_repeated_spans_surgical(spark):
 
 
 def test_minhash_collapsed_identity(spark, sf_dir):
-    """minhash_dedup_pairs_collapsed == minhash_dedup_pairs on a corpus
+    """minhash_dedup_pairs collapse=True == collapse=False on a corpus
     with injected exact duplicates (incl. a shingle-free twin pair that
     must stay absent from both outputs)."""
-    from csvplus_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        minhash_dedup_pairs_collapsed,
-    )
+    from csvplus_spark.operators.dedup import minhash_dedup_pairs
 
     docs = load_table(spark, sf_dir, "documents").df.select("doc_id", "text")
     base = docs.limit(40)
@@ -1305,19 +1302,19 @@ def test_minhash_collapsed_identity(spark, sf_dir):
     plain = {(r["doc_id_1"], r["doc_id_2"], r["jaccard"])
              for r in minhash_dedup_pairs(corpus, 0.6).collect()}
     fast = {(r["doc_id_1"], r["doc_id_2"], r["jaccard"])
-            for r in minhash_dedup_pairs_collapsed(corpus, 0.6).collect()}
+            for r in minhash_dedup_pairs(corpus, 0.6, collapse=True).collect()}
     assert fast == plain
     assert len(plain) >= 17          # the injected copies alone pair up
     assert not any(d1 == 9_000_001 for d1, _, _ in plain)
 
 
 def test_ngram_collapsed_identity(spark, sf_dir):
-    """ngram_jaccard_pairs_collapsed == ngram_jaccard_pairs on a corpus
-    with injected exact duplicates + a shingle-free twin pair."""
-    from csvplus_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_collapsed,
-    )
+    """ngram_jaccard_pairs collapse=True == collapse=False on a corpus
+    with injected exact duplicates + a shingle-free twin pair; the
+    collapse refuses a caller's shingle table (it covers every doc,
+    not the representatives)."""
+    from csvplus_spark.operators.dedup import (ngram_jaccard_pairs,
+                                               shingle_pairs)
 
     docs = load_table(spark, sf_dir, "documents").df.select("doc_id", "text")
     base = docs.limit(40)
@@ -1330,10 +1327,13 @@ def test_ngram_collapsed_identity(spark, sf_dir):
     plain = {(r["doc_id_1"], r["doc_id_2"], r["jaccard"])
              for r in ngram_jaccard_pairs(corpus, 0.6).collect()}
     fast = {(r["doc_id_1"], r["doc_id_2"], r["jaccard"])
-            for r in ngram_jaccard_pairs_collapsed(corpus, 0.6).collect()}
+            for r in ngram_jaccard_pairs(corpus, 0.6, collapse=True).collect()}
     assert fast == plain
     assert len(plain) >= 12
     assert not any(d1 == 9_000_001 for d1, _, _ in plain)
+    with pytest.raises(ValueError, match="shingles"):
+        ngram_jaccard_pairs(corpus, 0.6, shingles=shingle_pairs(corpus),
+                            collapse=True)
 
 
 def test_semantic_dedup_keep_drop(spark, graph_paths):
@@ -2038,8 +2038,7 @@ def test_minhash_join_collapsed_identity(spark):
     """The collapsed cross-table join must equal the plain one on a
     corpus with exact duplicates on BOTH sides (incl. identical-text
     cross-table pairs at J=1.0)."""
-    from csvplus_spark.operators.dedup import (minhash_join,
-                                               minhash_join_collapsed)
+    from csvplus_spark.operators.dedup import minhash_join
 
     tmpl = "the quick brown fox jumps over the lazy dog variant"
     left = spark.createDataFrame(
@@ -2053,7 +2052,7 @@ def test_minhash_join_collapsed_identity(spark):
     plain = {(r.left_id, r.right_id, r.jaccard) for r in
              minhash_join(left, right, 0.5).collect()}
     fast = {(r.left_id, r.right_id, r.jaccard) for r in
-            minhash_join_collapsed(left, right, 0.5).collect()}
+            minhash_join(left, right, 0.5, collapse=True).collect()}
     assert plain == fast and len(plain) >= 8 * 6
 
 
@@ -2437,15 +2436,26 @@ def test_containment_hot_fallback_is_lossless(spark, sf_dir):
 
 
 def test_containment_collapsed_identity(spark, sf_dir):
-    from csvplus_spark.operators.dedup import (
-        ngram_containment_pairs, ngram_containment_pairs_collapsed)
+    """ngram_containment_pairs collapse=True == collapse=False on the
+    corpus plus injected exact copies and a shingle-free twin pair (the
+    corpus alone has no exact duplicates, so only the injected rows
+    build groups of ≥2)."""
+    from csvplus_spark.operators.dedup import ngram_containment_pairs
 
-    docs = load_table(spark, sf_dir, "documents").df
+    docs = load_table(spark, sf_dir, "documents").df.select("doc_id", "text")
+    copies = docs.limit(12).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    twins = spark.createDataFrame(
+        [(9_000_001, "tiny tiny"), (9_000_002, "tiny tiny")],
+        "doc_id long, text string")
+    corpus = docs.unionByName(copies).unionByName(twins)
     plain = {(r[0], r[1], round(r[2], 9))
-             for r in ngram_containment_pairs(docs, 0.8).collect()}
-    fast = {(r[0], r[1], round(r[2], 9))
-            for r in ngram_containment_pairs_collapsed(docs, 0.8).collect()}
+             for r in ngram_containment_pairs(corpus, 0.8).collect()}
+    fast = {(r[0], r[1], round(r[2], 9)) for r in
+            ngram_containment_pairs(corpus, 0.8, collapse=True).collect()}
     assert plain and fast == plain
+    assert sum(d2 >= 1_000_000 for _, d2, _ in plain) >= 12
+    assert not any(d1 == 9_000_001 for d1, _, _ in plain)
 
 
 def test_kcore_peels_pendants_keeps_triangle(spark):
