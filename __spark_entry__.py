@@ -22,10 +22,21 @@ import os
 import sys
 from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO)
+# executors unpickle the UDFs defined here and in csvplus_spark by
+# module reference: put this directory on the Python workers' path,
+# whatever the working directory — through the environment a JVM
+# launched later inherits, and the worker environment of a running one
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [_REPO, os.environ.get("PYTHONPATH")]))
+if SparkContext._active_spark_context is not None:
+    SparkContext._active_spark_context.environment["PYTHONPATH"] = \
+        os.environ["PYTHONPATH"]
 
 from csvplus_spark import like_, load_table  # noqa: E402
 from csvplus_spark.functions.predicates import any_  # noqa: E402

@@ -70,13 +70,16 @@ class Index:
 
         The reference's O(log n) binary search maps to a prefix-key
         filter; over sorted/bucketed parquet this prunes partitions and
-        row groups, the distributed analogue of O(log n).
+        row groups, the distributed analogue of O(log n). A ``None``
+        value matches nothing: NULL keys never match, in either mode.
         """
         if len(values) > len(self.columns):
             raise ValueError("too many values for index columns")
         cond = None
         for col, val in zip(self.columns, values):
-            c = self._key(col) == F.lit(str(val) if self.frame.string_mode else val)
+            if self.frame.string_mode and val is not None:
+                val = str(val)
+            c = self._key(col) == F.lit(val)
             cond = c if cond is None else (cond & c)
         df = self.frame.df if cond is None else self.frame.df.filter(cond)
         return Frame(df, [(c, True) for c in self.columns], self.frame.string_mode)

@@ -38,6 +38,8 @@ from typing import Iterable, Iterator, Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scanprobe import fan_out
+
 #: ASCII approximation of the GPT-2 pre-tokenizer pattern
 _PRETOK = re.compile(
     r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+(?!\S)|\s+"
@@ -234,8 +236,6 @@ def bpe_token_counts(df: DataFrame,
             ]
             yield pd.DataFrame({id_col: pdf[id_col],
                                 "n_tokens_bpe": pd.Series(counts, dtype="int64")})
-
-    from .text import fan_out
 
     return fan_out(src).mapInPandas(
         _count, f"{id_col} {id_dt}, n_tokens_bpe long")

@@ -25,6 +25,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scanprobe import scan_disk_bytes
+
 #: metadata struct carried next to every blob
 MEDIA_META_DDL = (
     "media_meta struct<kind string, byte_len long, content_md5 string, magic string>"
@@ -671,27 +673,10 @@ def repartition_for_blobs(df: DataFrame, avg_blob_bytes: int,
     rows within the 2× that partition sizing tolerates. Only when
     neither is available (non-file source, remote scheme) does it fall
     back to one eager count()."""
-    import os
-    from urllib.parse import urlparse
-
     rows_per_part = max(1, target_partition_bytes // max(1, avg_blob_bytes))
     n = approx_rows
     if n is None:
-        try:
-            files = df.inputFiles()
-        except Exception:
-            files = []
-        total = 0
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("file", ""):
-                total = 0
-                break
-            try:
-                total += os.path.getsize(p.path)
-            except OSError:
-                total = 0
-                break
+        total = scan_disk_bytes(df)
         if total:
             n = max(1, total // max(1, avg_blob_bytes))
     if n is None:

@@ -1,6 +1,6 @@
-"""Scan-width probe: decide at PLAN-BUILD time whether an explicit
-keyed repartition ("fan-out") ahead of a compute-heavy first stage is
-worth its exchange (r14, guide §2.5 "input skew" + r13 verdict item 1).
+"""Scan probe: the one place that looks at a frame's scan files to make
+a PLAN-BUILD-time decision (r14, guide §2.5 "input skew" + r13 verdict
+item 1).
 
 Round 13 added unconditional ``repartition(F.col(id))`` calls before
 every per-doc/per-vector compute stage because the bench corpora
@@ -12,37 +12,46 @@ extra shuffle costs more than the serialized scan saves — the r13
 driver bench regressed ~1.4x at sf0.1) or when the scan already
 yields machine-width splits (real clusters reading many files).
 
-This module makes the fan-out CONDITIONAL on what the scan can
-actually deliver, probed from parquet FOOTER METADATA — a local
-~1-3 ms read per file, cached by (path, size, mtime), never a Spark
-job. The decision:
+Every decision here reads the same walk: ``inputFiles()``, then a
+local-scheme check and ``os.stat`` per file, then — only where the
+policy needs it — the parquet FOOTER METADATA (a local ~1-3 ms read
+per file, cached by (path, size, mtime), never a Spark job). Each
+policy stops walking as soon as no later file can change its answer.
+The three policies ("width" = ``defaultParallelism``):
 
-  * input files unknown (checkpointed/derived frame) → SKIP: the
-    frame's partitioning was set by an upstream exchange, and a second
-    keyed exchange on top measured 1.25-1.36x WORSE (r13 §J,
-    fuzzy_join_fast);
-  * ≥ machine-width files, or ≥ machine-width row groups → SKIP: the
-    scan itself feeds every core;
-  * total UNCOMPRESSED bytes below ``KEYED_FAN_OUT_MIN_BYTES`` → SKIP:
-    the exchange costs more than the single-threaded head start
-    (driver-bench scale; measured r13: ~60 queries 0.4-0.9x);
-  * remote scheme or unreadable footer with few files → FAN OUT: a
-    handful of unsplittable remote objects is exactly the 100 TB
-    input-skew case the repartition exists for;
-  * otherwise (big, few-row-group local input — the sf10 shape)
-    → FAN OUT.
+  ==============================  =============  ===========  ========
+  scan                            keyed fan-out  round-robin  collapse
+  ==============================  =============  ===========  ========
+  no input files (derived or      skip           skip         collapse
+  checkpointed frame)
+  ≥ width files                   skip           skip         by size
+  a remote file, or one that      FAN OUT        skip         collapse
+  cannot be stat'ed
+  a local file with no parquet    FAN OUT        by size      collapse
+  footer
+  ≥ width row groups              skip           by size      by size
+  otherwise, "by size"            FAN OUT if     FAN OUT if   collapse
+                                  decoded ≥      on disk ≤    if decoded
+                                  floor          256 MB       ≥ floor
+  ==============================  =============  ===========  ========
+
+Keyed fan-out (:func:`keyed_fan_out`, ahead of per-doc/per-vector
+compute): a derived frame was partitioned by an upstream exchange, and
+a second keyed exchange on top measured 1.25-1.36x WORSE (r13 §J,
+fuzzy_join_fast); a few unsplittable remote objects are exactly the
+100 TB input-skew case it exists for; below the floor the exchange
+costs more than the single-threaded head start (r13: ~60 queries
+0.4-0.9x). Round-robin (:func:`fan_out`, ahead of Python-heavy
+stages) fires only on small, local, narrow input. Collapse
+(:func:`collapse_wanted`): unknowable size means collapse, the
+scale-safe default. :func:`scan_disk_bytes` lends the same walk to the
+blob partition estimate of ``multimodal.repartition_for_blobs``.
 
 Uncompressed bytes (parquet ``total_byte_size``) rather than file
-size because the duplication-heavy corpora these operators exist for
-compress 30-100x: the sf10 documents table is 6 MB on disk and 181 MB
-decoded, and the compute (tokenize, md5, d² folds) scales with the
-DECODED bytes.
-
-``CSVPLUS_KEYED_FANOUT`` overrides the probe: ``always`` / ``never``
-pin the r13 / r12 plan shapes (used by the plan-pin tests so the
-at-scale shape stays pinned at test SFs), ``auto`` (default) probes.
-``CSVPLUS_KEYED_FANOUT_MIN_BYTES`` tunes the floor for clusters whose
-exchange-vs-scan breakeven differs from this box.
+size for the keyed gates because the duplication-heavy corpora these
+operators exist for compress 30-100x: the sf10 documents table is
+6 MB on disk and 181 MB decoded, and the compute (tokenize, md5, d²
+folds) scales with the DECODED bytes.
 """
 
 from __future__ import annotations
@@ -71,9 +80,11 @@ KEYED_FAN_OUT_MIN_BYTES = 32 * 1024 * 1024
 #: (0.2 MB) on the plain scan.
 VECTOR_FAN_OUT_MIN_BYTES = 512 * 1024
 
-_MODE_ENV = "CSVPLUS_KEYED_FANOUT"
-_MIN_BYTES_ENV = "CSVPLUS_KEYED_FANOUT_MIN_BYTES"
-_VEC_MIN_BYTES_ENV = "CSVPLUS_VECTOR_FANOUT_MIN_BYTES"
+#: fan_out only repartitions inputs below this size — large inputs get
+#: their parallelism from native file splitting, and shuffling them
+#: would cost more than the single-threaded head start
+FAN_OUT_MAX_BYTES = 256 * 1024 * 1024
+
 
 @functools.lru_cache(maxsize=4096)
 def _footer_stats(path: str, size: int, mtime_ns: int) -> tuple[int, int]:
@@ -92,28 +103,40 @@ def _footer_stats(path: str, size: int, mtime_ns: int) -> tuple[int, int]:
     )
 
 
-def probe_uncompressed_bytes(df: DataFrame) -> int | None:
-    """Total DECODED bytes across the frame's scan files, or None when
-    unknowable without a job (non-file source, remote scheme,
-    checkpointed frame, unreadable footer)."""
+def _scan_files(df: DataFrame) -> list[str]:
+    """The frame's scan files; empty for a derived/checkpointed frame
+    or a non-file source. Deliberately NOT ``df.rdd``: that compiles
+    the physical plan a second time (~1s of cold latency per query,
+    measured), while the listing is already cached by the scan."""
     try:
-        files = df.inputFiles()
+        return df.inputFiles()
     except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
+        return []
+
+
+def _sizes(files: list[str], decoded: bool,
+           stop: float = float("inf")) -> tuple[int, int] | None:
+    """The one walk over scan files: summed ``(row_groups, bytes)``,
+    the bytes DECODED (footers read lazily, file by file) or on disk
+    (stat only, row groups 0). None when a file cannot be probed here
+    — remote scheme, stat fails, or (decoded) no parquet footer. Stops
+    once the bytes reach ``stop``."""
+    row_groups = total = 0
     for f in files:
         p = urlparse(f)
         if p.scheme not in ("file", ""):
             return None
         try:
             st = os.stat(p.path)
-            _, unc = _footer_stats(p.path, st.st_size, st.st_mtime_ns)
+            rgs, size = (_footer_stats(p.path, st.st_size, st.st_mtime_ns)
+                         if decoded else (0, st.st_size))
         except Exception:
             return None
-        total += unc
-    return total
+        row_groups += rgs
+        total += size
+        if total >= stop:
+            break
+    return row_groups, total
 
 
 def collapse_wanted(df: DataFrame) -> bool:
@@ -122,70 +145,76 @@ def collapse_wanted(df: DataFrame) -> bool:
     and membership machinery only pays when the quadratic stages are
     expensive, so collapse when the input's decoded size reaches
     ``KEYED_FAN_OUT_MIN_BYTES`` — or is unknowable (checkpoint,
-    remote), the scale-safe default."""
-    nbytes = probe_uncompressed_bytes(df)
-    return nbytes is None or nbytes >= KEYED_FAN_OUT_MIN_BYTES
+    remote), the scale-safe default. Stops reading footers once the
+    floor is reached: no later file can turn the answer."""
+    files = _scan_files(df)
+    floor = KEYED_FAN_OUT_MIN_BYTES
+    sizes = _sizes(files, decoded=True, stop=floor) if files else None
+    return sizes is None or sizes[1] >= floor
 
 
 def scan_fan_out_wanted(df: DataFrame,
                         min_bytes: int | None = None) -> bool:
     """True when an explicit keyed repartition ahead of this frame's
     first compute stage would buy parallelism the scan cannot deliver
-    (see module docstring for the decision table). ``min_bytes``
-    overrides the decoded-size floor — vector-fold call sites pass
-    ``vector_min_bytes()``."""
-    mode = os.environ.get(_MODE_ENV, "auto")
-    if mode == "always":
-        return True
-    if mode == "never":
-        return False
+    (see the module docstring's table). ``min_bytes`` overrides the
+    decoded-size floor (default ``KEYED_FAN_OUT_MIN_BYTES``, read at
+    call time) — vector-fold call sites pass
+    ``VECTOR_FAN_OUT_MIN_BYTES``. Walks every file even past width
+    row groups: a later unprobeable file still means fan out."""
     width = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return False
-    if not files:
-        return False  # derived/checkpointed: partitioned upstream
-    if len(files) >= width:
-        return False  # the scan already feeds every core
+    files = _scan_files(df)
+    if not files or len(files) >= width:
+        return False  # partitioned upstream / the scan feeds every core
+    sizes = _sizes(files, decoded=True)
+    if sizes is None:
+        return True  # remote or unprobeable: scale-safe default
     if min_bytes is None:
-        min_bytes = int(os.environ.get(_MIN_BYTES_ENV,
-                                       KEYED_FAN_OUT_MIN_BYTES))
-    row_groups = 0
-    uncompressed = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("file", ""):
-            return True  # few remote objects: assume cluster-scale
-        try:
-            st = os.stat(p.path)
-            rgs, unc = _footer_stats(p.path, st.st_size, st.st_mtime_ns)
-        except Exception:
-            return True  # local but unprobeable: scale-safe default
-        row_groups += rgs
-        uncompressed += unc
-    if row_groups >= width:
-        return False  # row groups alone already split machine-wide
-    return uncompressed >= min_bytes
-
-
-def vector_min_bytes() -> int:
-    """The vector-fold floor (env-tunable)."""
-    return int(os.environ.get(_VEC_MIN_BYTES_ENV,
-                              VECTOR_FAN_OUT_MIN_BYTES))
+        min_bytes = KEYED_FAN_OUT_MIN_BYTES
+    # row groups alone may already split machine-wide
+    return sizes[0] < width and sizes[1] >= min_bytes
 
 
 def keyed_fan_out(df: DataFrame, *cols: Column | str,
                   min_bytes: int | None = None) -> DataFrame:
     """``df.repartition(*cols)`` when the probe says the scan is both
-    big and narrower than the machine; ``df`` unchanged otherwise."""
+    big and narrower than the machine; ``df`` unchanged otherwise.
+    In method chains: ``df.transform(keyed_fan_out, id_col)``."""
     return df.repartition(*cols) \
         if scan_fan_out_wanted(df, min_bytes) else df
 
 
-def doc_fan_out(*cols: Column | str):
-    """``.transform()``-shaped :func:`keyed_fan_out` for method
-    chains: ``df.select(...).transform(doc_fan_out(id_col)).select(...)``."""
-    def _apply(df: DataFrame) -> DataFrame:
-        return keyed_fan_out(df, *cols)
-    return _apply
+def fan_out(df: DataFrame) -> DataFrame:
+    """Spread a SMALL narrow input across the cluster before a
+    compute-heavy first stage (per-row md5/tokenize/explode work).
+
+    A small parquet file with one row group reads as ONE partition, so
+    everything before the first shuffle runs single-threaded no matter
+    how many cores exist. When the input is a handful of small local
+    files, a round-robin repartition (a few MB of shuffle) buys
+    full-width execution. At real scale this is a no-op by
+    construction: many files, remote storage, or > FAN_OUT_MAX_BYTES
+    on disk all skip the shuffle — nothing is added to a 100 TB plan.
+
+    Use it ONLY ahead of Python-heavy stages (mapInPandas /
+    applyInPandas, e.g. winnow's rolling scan) where one-partition
+    execution serializes real work. For pure-JVM codegen first stages
+    (tokenize/explode/hash) the A/B at sf0.1 showed the extra shuffle
+    LOSES ~0.5-1s per query vs just letting the single-threaded scan
+    feed the first aggregate's map side — don't sprinkle it there.
+    """
+    width = df.sparkSession.sparkContext.defaultParallelism
+    files = _scan_files(df)
+    if not files or len(files) >= width:
+        return df
+    sizes = _sizes(files, decoded=False, stop=FAN_OUT_MAX_BYTES + 1)
+    if sizes is None or sizes[1] > FAN_OUT_MAX_BYTES:
+        return df  # remote storage / big input: assume cluster scale
+    return df.repartition(width)
+
+
+def scan_disk_bytes(df: DataFrame) -> int:
+    """On-disk bytes of the frame's scan files; 0 when unknowable
+    without a job (no input files, remote scheme, stat fails)."""
+    sizes = _sizes(_scan_files(df), decoded=False)
+    return sizes[1] if sizes else 0

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .scanprobe import keyed_fan_out, vector_min_bytes
+from .scanprobe import VECTOR_FAN_OUT_MIN_BYTES, keyed_fan_out
 
 
 def _dot(a, b) -> F.Column:
@@ -299,7 +299,7 @@ def seed_voronoi_distances(v: DataFrame, n_cells: int,
     # the narrow (id, vec) rows fans it out to full width (measured on
     # kmeans's identical fold: sf10 0.32x); the seeds collect above
     # stays on the un-fanned frame.
-    return (keyed_fan_out(v, id_col, min_bytes=vector_min_bytes())
+    return (keyed_fan_out(v, id_col, min_bytes=VECTOR_FAN_OUT_MIN_BYTES)
             .crossJoin(packed)
             .withColumn("__ds__", ds)
             .drop("__cents__"))
@@ -904,7 +904,7 @@ def kmeans_assign(df: DataFrame, k: int, iters: int = 2,
     # exchanges are the tiny ≤k·d update aggregates either way.
     v = with_double_vec(df.select(id_col, vec_col), vec_col)
     v = keyed_fan_out(v.select(id_col, "__vec__"), id_col,
-                      min_bytes=vector_min_bytes())
+                      min_bytes=VECTOR_FAN_OUT_MIN_BYTES)
     seeds = v.orderBy(F.col(id_col)).limit(k)
     cent = seeds.select(F.col(id_col).alias("__cell__"),
                         F.col("__vec__").alias("__cent__"))
@@ -970,7 +970,7 @@ def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16, iters: int = 0,
     # (see seed_voronoi_distances); the seed collect below stays on
     # the un-fanned frame
     subs = keyed_fan_out(v, id_col,
-                         min_bytes=vector_min_bytes()).select(
+                         min_bytes=VECTOR_FAN_OUT_MIN_BYTES).select(
         id_col, F.posexplode(_subvectors(F.col("__vec__"), m, dim))
         .alias("sub", "__svec__"))
     # bounded k-row driver collect for the seed→cell numbering (same
@@ -1047,7 +1047,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, m: int = 8,
     # r13 (guide §2.5): fan out before the n·m·k encode folds (see
     # seed_voronoi_distances — 1-2 row-group scans serialize them)
     subs = keyed_fan_out(v, id_col,
-                         min_bytes=vector_min_bytes()).select(
+                         min_bytes=VECTOR_FAN_OUT_MIN_BYTES).select(
         id_col, F.posexplode(_subvectors(F.col("__vec__"), m, dim))
         .alias("sub", "__svec__"))
 
@@ -1316,7 +1316,7 @@ def kcenter_select(df: DataFrame, k: int = 8, id_col: str = "vec_id",
     # row-group scan (see seed_voronoi_distances)
     v = (with_double_vec(df.select(id_col, vec_col))
          .select(F.col(id_col).alias("vid"), F.col("__vec__").alias("e"))
-         .transform(lambda d: keyed_fan_out(d, "vid"))
+         .transform(keyed_fan_out, "vid")
          .cache())
     c = (v.orderBy("vid").limit(1)
          .select(F.col("vid").alias("cid"), F.col("e").alias("ce")))

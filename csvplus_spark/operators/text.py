@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .scanprobe import collapse_wanted, doc_fan_out, keyed_fan_out
+from .scanprobe import collapse_wanted, fan_out, keyed_fan_out
 
 # languages and their (tiny, deterministic) stopword lists for the
 # n-gram/stopword language-ID heuristic; alphabetical order is the
@@ -36,61 +36,6 @@ def tokens(col: str = "text") -> Column:
     """Lowercased word tokens via regexp — identical semantics in
     Spark and DuckDB (`regexp_extract_all`)."""
     return F.expr(f"regexp_extract_all(lower({col}), '{TOKEN_RE}', 0)")
-
-
-#: fan_out only repartitions inputs below this size — large inputs get
-#: their parallelism from native file splitting, and shuffling them
-#: would cost more than the single-threaded head start
-FAN_OUT_MAX_BYTES = 256 * 1024 * 1024
-
-
-def fan_out(df: DataFrame) -> DataFrame:
-    """Spread a SMALL narrow input across the cluster before a
-    compute-heavy first stage (per-row md5/tokenize/explode work).
-
-    A small parquet file with one row group reads as ONE partition, so
-    everything before the first shuffle runs single-threaded no matter
-    how many cores exist. When the input is a handful of small local
-    files, a round-robin repartition (a few MB of shuffle) buys
-    full-width execution. At real scale this is a no-op by
-    construction: many files, remote storage, or > FAN_OUT_MAX_BYTES
-    all skip the shuffle — nothing is added to a 100 TB plan.
-
-    The probe is ``inputFiles()`` + local stat (~ms, file listing is
-    already cached by the scan); deliberately NOT ``df.rdd`` — that
-    compiles the physical plan a second time (~1s of cold latency per
-    query, measured).
-
-    Use it ONLY ahead of Python-heavy stages (mapInPandas /
-    applyInPandas, e.g. winnow's rolling scan) where one-partition
-    execution serializes real work. For pure-JVM codegen first stages
-    (tokenize/explode/hash) the A/B at sf0.1 showed the extra shuffle
-    LOSES ~0.5-1s per query vs just letting the single-threaded scan
-    feed the first aggregate's map side — don't sprinkle it there.
-    """
-    import os
-    from urllib.parse import urlparse
-
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not files or len(files) >= target:
-        return df
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("file", ""):
-            return df  # remote storage: assume cluster-scale input
-        try:
-            total += os.path.getsize(p.path)
-        except OSError:
-            return df
-    if total > FAN_OUT_MAX_BYTES:
-        return df
-    return df.repartition(target)
 
 
 def hash60(col: Column) -> Column:
@@ -221,7 +166,7 @@ def simhash_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # (no exchange of token rows) and the per-token md5 work runs at
     # full machine width instead of the scan's row-group count
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(
         F.col(id_col),
         F.explode(F.array_distinct(tokens(text_col))).alias("__tok__"),
@@ -263,7 +208,7 @@ def repetition_stats(df: DataFrame, n: int = 5, text_col: str = "text",
     # corpus exchange carries raw text instead of (id, pos, token)
     # rows, and tokenize runs at full width (see shingle_pairs)
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(
         F.col(id_col),
         F.posexplode(tokens(text_col)).alias("__pos__", "__tok__"),
@@ -620,7 +565,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text",
     # instead of (doc, term) partial counts, and tokenize runs at full
     # machine width instead of the scan's row-group count.
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col), F.explode(tokens(text_col)).alias("term")))
     tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     # r13 (verdict item 4): the trivially-true ``tf > 0`` filter blocks
@@ -674,7 +619,7 @@ def bm25_top_terms(df: DataFrame, k: int = 3, k1: float = 1.2,
     # (doc, term) aggregate feeding the checkpoint becomes
     # exchange-free and the tokenize pass runs at full width
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col), F.explode(tokens(text_col)).alias("term")))
     # tf fans out to FOUR consumers (the score join, dl, dfreq, and
     # the avgdl scalar subquery). AQE exchange reuse cannot collapse
@@ -738,7 +683,7 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     # runs at full machine width instead of the scan's row-group
     # count (1 split at sf0.1, 5 at sf10).
     src = df.select(F.col(id_col), F.col(text_col)) \
-        .transform(doc_fan_out(id_col))
+        .transform(keyed_fan_out, id_col)
     tok = src.select(
         F.col(id_col),
         F.explode_outer(tokens(text_col)).alias("__tok__"),
@@ -811,7 +756,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     # r13 batch 6 (guide §2.3): doc-level repartition — the per-doc
     # aggregate reuses hash(id) and tokenize runs at full width
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(
         F.col(id_col),
         F.explode_outer(tokens(text_col)).alias("__tok__"),
@@ -1075,7 +1020,7 @@ def novel_bigram_stats(df: DataFrame, text_col: str = "text",
     # window and the per-(doc, bigram) count reuse hash(id); the one
     # corpus exchange carries raw text (see shingle_pairs)
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(
         F.col(id_col),
         F.posexplode(tokens(text_col)).alias("__pos__", "__tok__"),
@@ -1199,7 +1144,7 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
     # exploded (id, pos, term) rows (~4x wider); the window keeps only
     # its per-partition sort.
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col),
                    F.posexplode_outer(tokens(text_col))
                    .alias("pos", "term")))
@@ -1319,7 +1264,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     # it to vocab-sized rows before its exchange — repartitioning that
     # pass would ADD a corpus exchange for nothing).
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col),
                    F.posexplode_outer(tokens(text_col))
                    .alias("pos", "term")))
@@ -1475,7 +1420,7 @@ def dsir_logweights(df: DataFrame, target: Column,
     # keeps only its per-partition sort.
     tok = (df.select(F.col(id_col), target.alias("__tgt__"),
                      F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col), "__tgt__",
                    F.posexplode_outer(tokens(text_col))
                    .alias("pos", "term")))
@@ -1581,7 +1526,7 @@ def bm25_search(df: DataFrame, query_terms: list[str], k: int = 10,
     # and the tokenize passes run at full width; AQE exchange reuse
     # shares the one text shuffle between the two consumers
     tok = (df.select(F.col(id_col), F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col), F.explode(tokens(text_col)).alias("term")))
     # full-corpus doc lengths (one integer aggregate) — BM25 needs dl
     # even for query-term scoring. r13 (guide §2.4, the bm25_top_terms
@@ -1665,7 +1610,7 @@ def hashed_linear_scorer(df: DataFrame, label: Column,
     # plan's only remaining data-sized one.)
     tok = (df.select(F.col(id_col), label.cast("int").alias("__y__"),
                      F.col(text_col))
-           .transform(doc_fan_out(id_col))
+           .transform(keyed_fan_out, id_col)
            .select(F.col(id_col), "__y__",
                    F.posexplode_outer(tokens(text_col))
                    .alias("pos", "term")))

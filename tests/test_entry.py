@@ -44,3 +44,35 @@ def test_coverage_query_index_matches_queries():
     # has an oracle (bpe_counts graduated via in-plan bounds + frozen
     # pinned literals)
     assert set(em.oracle_sql()) == qs
+
+
+def test_entry_runs_from_any_cwd(sf_dir, tmp_path):
+    """The entry module works when launched from a directory that is
+    not the repo: executors must import both ``__spark_entry__`` and
+    ``csvplus_spark`` to unpickle the multimodal decode UDFs. A fresh
+    process, so the JVM and its Python workers start from scratch."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = "\n".join([
+        "import sys",
+        f"sys.path.insert(0, {repo!r})",
+        "import __spark_entry__ as e",
+        "from csvplus_spark import get_spark",
+        "spark = get_spark('any-cwd')",
+        f"rows = e.queries()['multimodal_flac'](spark, {sf_dir!r}).collect()",
+        "print('rows', len(rows))",
+        "spark.stop()",
+    ])
+    # the repo must reach the workers only through the entry module
+    path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+            if p and os.path.abspath(p) != repo]
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(path),
+               SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "rows 500" in out.stdout, out.stdout

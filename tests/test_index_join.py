@@ -85,6 +85,21 @@ def test_find_and_sub_index(spark, sf_dir):
         idx.sub_index("7", "1")  # strict prefix only
 
 
+def test_find_none_matches_nothing(spark):
+    """NULL keys never match: ``find(None)`` must not hit the literal
+    text "None" in string mode, nor the NULL key row in either mode."""
+    rows = [{"k": "None", "v": "a"}, {"k": "x", "v": "b"},
+            {"k": None, "v": "c"}]
+    for string_mode in (True, False):
+        idx = take_rows(spark, rows, schema="k string, v string",
+                        string_mode=string_mode).index_on("k")
+        assert idx.find(None).to_rows() == [], string_mode
+        assert not idx.has(None), string_mode
+        assert [r["v"] for r in idx.find("None").to_rows()] == ["a"]
+    two = take_rows(spark, [{"k": "None", "j": "1"}, {"k": None, "j": "1"}])
+    assert two.index_on("k", "j").sub_index(None).find("1").to_rows() == []
+
+
 def test_index_persistence_roundtrip(spark, sf_dir, tmp_path):
     cust = load_table(spark, sf_dir, "customer", string_mode=True)
     idx = cust.unique_index_on("c_custkey")

@@ -339,6 +339,15 @@ def test_bm25_single_explode_via_checkpoint(spark, sf_dir):
     assert "ExistingRDD" in plan
 
 
+def _force_keyed_fan_out(monkeypatch):
+    """Open the keyed fan-out gate on every frame, derived ones too —
+    the at-scale plan shape at test SF."""
+    from csvplus_spark.operators import scanprobe
+
+    monkeypatch.setattr(scanprobe, "scan_fan_out_wanted",
+                        lambda df, min_bytes=None: True)
+
+
 def test_text_stats_single_doc_exchange(spark, sf_dir, monkeypatch):
     """r13 batch 5: both text_stats subtrees (per-doc token aggregate
     and the base projection) read ONE id-keyed repartition of the doc
@@ -348,10 +357,10 @@ def test_text_stats_single_doc_exchange(spark, sf_dir, monkeypatch):
     the id column (plus broadcast builds) — no token-level or
     aggregate-keyed exchange appears. r14: the repartition is gated by
     scanprobe (it only fires on big, narrow scans), so the AT-SCALE
-    shape is pinned with the force override."""
+    shape is pinned by forcing the gate open."""
     import re
 
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "always")
+    _force_keyed_fan_out(monkeypatch)
     plan = _plan(spark, sf_dir, "text_stats")
     shuffles = re.findall(r"Exchange hashpartitioning\(([^,)]+)", plan)
     assert shuffles, "expected the doc-level repartition exchange"
@@ -366,7 +375,7 @@ def test_shingle_window_rides_doc_repartition(spark, sf_dir, monkeypatch):
     on dedup_ngram: every hashpartitioning exchange keys on the doc
     id or on shingle-join keys, never on (id, pos). r14: forced mode
     pins the at-scale shape (see test_text_stats_single_doc_exchange)."""
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "always")
+    _force_keyed_fan_out(monkeypatch)
     plan = _plan(spark, sf_dir, "dedup_ngram")
     assert "Exchange hashpartitioning(__pos__" not in plan
     assert "hashpartitioning(__id__#" in plan  # the doc repartition
@@ -380,7 +389,7 @@ def test_doc_repartition_feeds_per_doc_aggregates(spark, sf_dir,
     sits BELOW the explode (carrying text bytes at full scan width)
     and the aggregate/window above it adds no token-level exchange.
     r14: forced mode pins the at-scale shape."""
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "always")
+    _force_keyed_fan_out(monkeypatch)
     for name in ("simhash", "gopher_quality", "repetition_stats"):
         plan = _plan(spark, sf_dir, name)
         assert "hashpartitioning(doc_id" in plan, name
@@ -391,37 +400,101 @@ def test_doc_repartition_feeds_per_doc_aggregates(spark, sf_dir,
             assert key not in plan, (name, key)
 
 
-def test_keyed_fan_out_gate(spark, sf_dir, monkeypatch):
+def test_keyed_fan_out_gate(spark, sf_dir, monkeypatch, tmp_path):
     """r14 (r13 verdict item 1): the doc/id repartitions fire ONLY
     when the scan is both big (decoded bytes ≥ the floor) and narrower
     than the machine. At test SF the input decodes to well under the
-    floor, so auto mode must SKIP the exchange (the r12 shape); with
+    floor, so the gate must SKIP the exchange (the r12 shape); with
     the floor lowered to 0 the same probe must FIRE it (the r13/sf10
-    shape); 'never' pins the skip regardless."""
-    from csvplus_spark.operators.scanprobe import scan_fan_out_wanted
+    shape). The round-robin ``fan_out`` fires only on small, local
+    input narrower than the machine."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from csvplus_spark.operators import scanprobe
+    from csvplus_spark.operators.scanprobe import fan_out, scan_fan_out_wanted
     from csvplus_spark.operators.text import text_stats
 
     docs = em.load_table(spark, sf_dir, "documents").df
 
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "auto")
     assert not scan_fan_out_wanted(docs)  # tiny input: skip
     plan_auto = text_stats(docs)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "REPARTITION_BY_COL" not in plan_auto
 
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT_MIN_BYTES", "0")
+    monkeypatch.setattr(scanprobe, "KEYED_FAN_OUT_MIN_BYTES", 0)
     assert scan_fan_out_wanted(docs)  # floor at 0: the sf10 branch
     plan_big = text_stats(docs)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "REPARTITION_BY_COL" in plan_big
 
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "never")
-    assert not scan_fan_out_wanted(docs)
-
     # derived/checkpointed frames (no input files) never re-fan
-    monkeypatch.setenv("CSVPLUS_KEYED_FANOUT", "auto")
     ck = docs.localCheckpoint(eager=False)
     assert not scan_fan_out_wanted(ck)
+
+    # round-robin: a tiny local parquet fans out to machine width; a
+    # checkpointed frame and a scan of ≥ width files are left alone
+    width = spark.sparkContext.defaultParallelism
+    for i in range(width):
+        pq.write_table(pa.table({"x": [i]}), str(tmp_path / f"{i}.parquet"))
+    tiny = spark.read.parquet(str(tmp_path / "0.parquet"))
+    plan = fan_out(tiny)._jdf.queryExecution().logical().toString()
+    assert f"Repartition {width}, true" in plan, plan
+    assert fan_out(ck) is ck
+    wide = spark.read.parquet(str(tmp_path))
+    assert len(wide.inputFiles()) >= width
+    assert fan_out(wide) is wide
+
+    # a later file that cannot be stat'ed still means fan out (and
+    # collapse, and no round-robin), even once the row groups read so
+    # far reach machine width
+    if width > 2:
+        rg = tmp_path / "rg"
+        rg.mkdir()
+        pq.write_table(pa.table({"x": list(range(width))}),
+                       str(rg / "a.parquet"), row_group_size=1)
+        pq.write_table(pa.table({"x": [0]}), str(rg / "b.parquet"))
+        two = spark.read.parquet(str(rg))
+        assert not scan_fan_out_wanted(two)  # ≥ width row groups
+        (rg / "b.parquet").unlink()
+        assert scan_fan_out_wanted(two)
+        assert scanprobe.collapse_wanted(two)
+        assert fan_out(two) is two
+
+
+def test_collapse_probe_stops_at_floor(spark, monkeypatch, tmp_path):
+    """The collapse gate reads parquet footers only until the decoded
+    size reaches the floor — a later file cannot turn "collapse" into
+    "don't" — and reads them all when the input stays below it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from csvplus_spark.operators import scanprobe
+
+    n = 20
+    for i in range(n):
+        pq.write_table(pa.table({"x": list(range(10))}),
+                       str(tmp_path / f"p{i:02d}.parquet"))
+    df = spark.read.parquet(str(tmp_path))
+    assert len(df.inputFiles()) == n
+    one = pq.ParquetFile(str(tmp_path / "p00.parquet")).metadata \
+        .row_group(0).total_byte_size
+    reads = []
+    real = scanprobe._footer_stats
+
+    def counted(*args):
+        reads.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(scanprobe, "_footer_stats", counted)
+    monkeypatch.setattr(scanprobe, "KEYED_FAN_OUT_MIN_BYTES", 3 * one)
+    assert scanprobe.collapse_wanted(df)
+    assert 0 < len(reads) < n, len(reads)
+
+    reads.clear()
+    monkeypatch.setattr(scanprobe, "KEYED_FAN_OUT_MIN_BYTES", n * one + 1)
+    assert not scanprobe.collapse_wanted(df)
+    assert len(reads) == n
 
 
 def test_footer_memo_is_bounded(tmp_path):

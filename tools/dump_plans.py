@@ -3,13 +3,23 @@ docs/PLANS.md — reviewable evidence that the optimizations SCALE.md
 claims are in the actual plans.
 
 Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py --json OUT sf_dir [query ...]
+
+``--json`` writes ``{query: normalized optimized logical plan}`` for
+every query of ``queries()`` (or only the named ones) instead. The
+normalization drops what differs between two runs of the same code —
+expression ids, lambda-variable suffixes, RDD ids and ``plan_id`` tags
+— and no plan string is truncated, so running it on two checkouts and
+``diff``-ing the files shows exactly the queries whose plan changed.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -102,7 +112,40 @@ SHOW = [
 ]
 
 
+#: (pattern, replacement) pairs that erase run-to-run ids from a plan
+_NORMALIZE = [
+    (r"#\d+L?", "#"),
+    (r"\bx_\d+", "x_"),
+    (r"(ExistingRDD|LogicalRDD)\[\d+\]", r"\1[]"),
+    (r"plan_id=\d+", "plan_id="),
+]
+
+
+def dump_json(out_path: str, sf_dir: str, names: list[str]) -> None:
+    import __spark_entry__ as e
+    from csvplus_spark import get_spark
+
+    spark = get_spark("plan-json")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000000")
+    qs = e.queries()
+    plans = {}
+    for name in names or sorted(qs):
+        plan = qs[name](spark, sf_dir)._jdf.queryExecution() \
+            .optimizedPlan().toString()
+        for pat, rep in _NORMALIZE:
+            plan = re.sub(pat, rep, plan)
+        plans[name] = plan
+        spark.catalog.clearCache()
+    with open(out_path, "w") as f:
+        json.dump(plans, f, indent=1, sort_keys=True)
+    print(f"wrote {out_path} ({len(plans)} plans)")
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--json"]:
+        dump_json(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     import __spark_entry__ as e
