@@ -623,6 +623,55 @@ def _expand_rep_pairs(df: DataFrame, text_col: str, id_col: str,
     return cross.unionByName(intra)
 
 
+def _collapse_vectors(v: DataFrame, id_col: str, pin: bool = False
+                      ) -> tuple[DataFrame, DataFrame]:
+    """Exact-duplicate vector collapse of ``(id_col, __vec__)`` rows:
+    ``grp`` is ``(__fp__, __rep__, __vec__, __g__)``, one min-id
+    representative per distinct vector with its group size, and
+    ``members`` maps every id to its ``__rep__``. ``pin`` pins both
+    with a lazy localCheckpoint.
+
+    The fingerprint is the md5 of the exact double-array rendering
+    (the dedup_exact pattern: the shuffle KEY stays 128-bit while the
+    vector rides as payload). A row is COLLAPSIBLE only when its
+    squared norm is a finite positive number; every other row gets a
+    unique ``z:id`` fingerprint and stays a singleton, exactly as on
+    the plain path, where its pairwise sim never links it:
+      * sq is NULL for a NULL vector AND for a vector containing a
+        NULL element (the fold propagates it), and their pairwise
+        cosine is NULL (r8 review: the earlier ``isNull | sq==0``
+        guard evaluated NULL for partial-NULL vectors and fell through
+        to the md5 branch, merging them and breaking byte-identity);
+      * zero-norm vectors have a NULL cosine in both engines;
+      * NaN / Inf vectors (r13 ADVICE): Spark orders NaN above every
+        double, so ``sq > 0`` alone admits them, and their intra-group
+        self-sim (NaN) would pass a Spark-side ``sim >= threshold``
+        filter while embedding_near_pairs' uncollapsed NumPy prefilter
+        drops those pairs — ``sq < inf`` is false for both NaN
+        (ordered greatest) and Inf."""
+    from .similarity import _sq_norm
+
+    sq = _sq_norm(F.col("__vec__"))
+    collapsible = F.coalesce(
+        (sq > 0.0) & (sq < F.lit(float("inf"))), F.lit(False))
+    fp = F.when(collapsible, F.md5(F.col("__vec__").cast("string"))) \
+        .otherwise(F.concat(F.lit("z:"), F.col(id_col).cast("string")))
+    vg = v.withColumn("__fp__", fp)
+    grp = vg.groupBy("__fp__").agg(
+        F.min(id_col).alias("__rep__"),
+        F.min_by("__vec__", F.col(id_col)).alias("__vec__"),
+        F.count(F.lit(1)).alias("__g__"),
+    )
+    if pin:
+        grp = grp.localCheckpoint(eager=False)
+    members = (vg.select(F.col(id_col), "__fp__")
+               .join(grp.select("__fp__", "__rep__"), "__fp__")
+               .select(F.col(id_col), "__rep__"))
+    if pin:
+        members = members.localCheckpoint(eager=False)
+    return grp, members
+
+
 def semantic_dedup(
     emb: DataFrame,
     threshold: float = 0.4,
@@ -674,8 +723,9 @@ def semantic_dedup(
     (d2, cell) tie-break), cosine depends only on vector values, seeds
     are still drawn from the FULL id space (``seed_src``), reps are
     group minima, and a group is itself a sim=1 clique in the plain
-    graph. Zero-norm vectors never collapse (their pairwise cosine is
-    NULL in both engines, so the plain path leaves them singletons);
+    graph. Vectors without a finite positive norm (NULL, NULL element,
+    zero, NaN, Inf) never collapse: they keep a unique fingerprint and
+    run exactly as on the plain path (see _collapse_vectors);
     thresholds within 1e-12 of 1.0 disable the collapse (a float
     self-cosine can fall below such a threshold, so group-clique
     membership is no longer guaranteed).
@@ -698,30 +748,7 @@ def semantic_dedup(
     v = keyed_fan_out(v, id_col)
     members = None
     if collapse:
-        # fingerprint = md5 of the exact double-array rendering (the
-        # dedup_exact pattern: the shuffle KEY stays 128-bit while the
-        # vector rides as payload); zero-norm vectors get a unique
-        # per-id fingerprint so they never merge
-        sq = F.aggregate(F.transform(F.col("__vec__"), lambda x: x * x),
-                         F.lit(0.0), lambda acc, x: acc + x)
-        # a row is COLLAPSIBLE only when its squared norm is a real
-        # positive number: sq is NULL for a NULL vector AND for a
-        # vector containing a NULL element (the fold propagates it) —
-        # both must stay singletons, because their pairwise cosine is
-        # NULL in the plain path and never links them (r8 review: the
-        # earlier `isNull | sq==0` guard evaluated NULL for
-        # partial-NULL vectors and fell through to the md5 branch,
-        # merging them and breaking byte-identity)
-        collapsible = F.coalesce(sq > 0.0, F.lit(False))
-        fp = F.when(collapsible, F.md5(F.col("__vec__").cast("string"))) \
-            .otherwise(F.concat(F.lit("z:"), F.col(id_col).cast("string")))
-        vg = v.withColumn("__fp__", fp)
-        grp = vg.groupBy("__fp__").agg(
-            F.min(id_col).alias("__rep__"),
-            F.min_by("__vec__", F.col(id_col)).alias("__vec__"))
-        members = (vg.select(F.col(id_col), "__fp__")
-                   .join(grp.select("__fp__", "__rep__"), "__fp__")
-                   .select(F.col(id_col), "__rep__"))
+        grp, members = _collapse_vectors(v, id_col)
         work = grp.select(F.col("__rep__").alias(id_col), "__vec__")
     else:
         work = v
@@ -1388,41 +1415,17 @@ def embedding_near_pairs(
 
     # exact-duplicate collapse (see docstring): run the quadratic
     # stages over one rep per distinct vector, expand at the end.
-    # Fingerprint = md5 of the exact double-array rendering (the
-    # semantic_dedup pattern); rows whose squared norm is not a real
-    # positive number (NULL vector, NULL element, zero norm) get a
-    # unique per-id fingerprint so they stay singletons — their
-    # pairwise sim is NULL in the plain path and never links them.
+    # Rows without a finite positive norm stay singletons (see
+    # _collapse_vectors).
     if collapse is None:
         collapse = collapse_wanted(emb)
     collapsed = collapse and method in ("grid", "lsh")
     members = grp = None
     if collapsed:
-        sq = F.aggregate(F.transform(F.col("__vec__"), lambda x: x * x),
-                         F.lit(0.0), lambda acc, x: acc + x)
-        # finite positive norm only (r13 ADVICE): Spark orders NaN
-        # above every double, so ``sq > 0`` alone admits NaN/Inf
-        # vectors whose intra-group self-sim (NaN) would pass the
-        # Spark-side ``sim >= threshold`` filter while the uncollapsed
-        # NumPy prefilter drops those pairs — ``sq < inf`` is false
-        # for both NaN (ordered greatest) and Inf
-        collapsible = F.coalesce(
-            (sq > 0.0) & (sq < F.lit(float("inf"))), F.lit(False))
-        fp = F.when(collapsible, F.md5(F.col("__vec__").cast("string"))) \
-            .otherwise(F.concat(F.lit("z:"), F.col(id_col).cast("string")))
-        vg = v.withColumn("__fp__", fp)
         # grp feeds the method pipeline, the membership join AND the
         # intra-group self-sim; members feeds four expansion joins —
         # both pinned lazily so the fingerprint pass runs once
-        grp = vg.groupBy("__fp__").agg(
-            F.min(id_col).alias("__rep__"),
-            F.min_by("__vec__", F.col(id_col)).alias("__vec__"),
-            F.count(F.lit(1)).alias("__g__"),
-        ).localCheckpoint(eager=False)
-        members = (vg.select(F.col(id_col), "__fp__")
-                   .join(grp.select("__fp__", "__rep__"), "__fp__")
-                   .select(F.col(id_col), "__rep__")
-                   .localCheckpoint(eager=False))
+        grp, members = _collapse_vectors(v, id_col, pin=True)
         v = grp.select(F.col("__rep__").alias(id_col), "__vec__")
 
     if method == "lsh":

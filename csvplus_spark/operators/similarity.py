@@ -1,17 +1,28 @@
-"""Similarity search over embedding columns (BASELINE.json north-star;
-no reference counterpart).
+"""Similarity search, clustering and quantization over embedding
+columns (BASELINE.json north-star; no reference counterpart).
 
-Two paths:
-  * brute_force_topk — exact cosine top-k; the query side is expected
-    to be small (it is broadcast), so the corpus is scanned once with
-    the dot product evaluated in codegen (zip_with + aggregate). At
-    100 TB the corpus scan parallelizes perfectly and there is NO
-    shuffle on the corpus — only the broadcast of queries and a
-    per-partition top-k (window over query id).
-  * lsh_topk — random-hyperplane (sign) LSH: deterministic md5-derived
-    ±1 hyperplanes → b-bit bucket key; candidates = same-bucket (or
-    neighboring-band) pairs, exact-reranked. The bucket join is the
-    only shuffle, keyed by (band, bucket).
+Every operator here is built from a few shared folds, each defined
+once so the DuckDB oracle replays one expression, not several copies:
+  * ``_dot`` / ``_sq_norm`` / ``_norm`` / ``cosine`` — sequential
+    left folds over ``zip_with`` / ``transform``, engine-exact;
+  * ``_d2`` — the left-fold squared L2 distance;
+  * ``_pack`` + ``_dists`` — a centroid table packed into ONE broadcast
+    row and folded in-row to ``array<struct<__null__, __d2__, key>>``:
+    the assignment stage of seeded IVF, SemDeDup, KMeans, PQ and
+    ``ivf_append``. ``array_min`` of it is the argmin and
+    ``slice(array_sort(...))`` the top-p probes; both order by d²,
+    NULL distances last (the oracle's ``ORDER BY d2, cell``), then by
+    the lower key;
+  * ``_quantized_mean`` — per-group element-wise means over
+    floor(x·2^20) bigint sums (KMeans / PQ updates, mean pooling),
+    independent of float addition order;
+  * ``_vector_dim`` — the one dimension probe, read from the first
+    non-NULL vector.
+
+Search is exact (``brute_force_topk`` for a broadcast query batch,
+``grid_topk`` for large batches) or approximate: sign-LSH, IVF and
+two-level IVF candidates are exact-reranked with ``cosine``; PQ ranks
+by asymmetric ``_d2`` distances to the codebook.
 """
 
 from __future__ import annotations
@@ -27,9 +38,62 @@ def _dot(a, b) -> F.Column:
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
+def _sq_norm(a) -> F.Column:
+    """Squared L2 norm: the left fold ``_norm`` takes the root of."""
+    return F.aggregate(F.transform(a, lambda x: x * x),
+                       F.lit(0.0), lambda acc, v: acc + v)
+
+
 def _norm(a) -> F.Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, v: acc + v))
+    return F.sqrt(_sq_norm(a))
+
+
+def _d2(a, b) -> F.Column:
+    """Exact squared L2 distance: the left fold the SQL oracle replays."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _pack(table: DataFrame, name: str, *fields: str) -> DataFrame:
+    """``table`` as ONE broadcast row: column ``name`` holds
+    ``array<struct<fields>>``. Crossjoined to a vector frame it lets
+    :func:`_dists` fold every centroid in-row, with no fan-out rows."""
+    return F.broadcast(table.groupBy().agg(
+        F.collect_list(F.struct(*fields)).alias(name)))
+
+
+def _dists(packed: str, vec, key: str, centroid: str,
+           part: tuple[str, F.Column] | None = None) -> F.Column:
+    """``array<struct<__null__, __d2__, key>>``: the :func:`_d2` of
+    ``vec`` to every centroid of the :func:`_pack` column ``packed``
+    (only those whose field ``part[0]`` equals ``part[1]``, when given).
+
+    The struct order IS the tie-break rule of every seeded and KMeans
+    assignment: ``array_min`` takes the argmin and
+    ``slice(array_sort(...), 1, p)`` the top-p probes, both ordering
+    by d² with NULLs last, then by lower key. A struct field sorts
+    NULL first, so ``__null__`` leads: otherwise a NULL vector or
+    centroid would win every argmin, where the oracle's
+    ``ORDER BY d2, cell`` puts it last (after NaN, which both engines
+    order above every number). The second transform keeps the fold
+    to one evaluation per centroid."""
+    arr = F.col(packed)
+    if part is not None:
+        field, value = part
+        arr = F.filter(arr, lambda s: s[field] == value)
+    ds = F.transform(arr, lambda s: F.struct(
+        _d2(vec, s[centroid]).alias("__d2__"), s[key].alias(key)))
+    return F.transform(ds, lambda t: F.struct(
+        t["__d2__"].isNull().alias("__null__"), t["__d2__"].alias("__d2__"),
+        t[key].alias(key)))
+
+
+def _vector_dim(v: DataFrame) -> int | None:
+    """Length of the first non-NULL ``__vec__`` (one bounded probe
+    job); None when ``v`` holds no non-NULL vector."""
+    first = (v.filter(F.col("__vec__").isNotNull())
+             .select(F.size("__vec__")).limit(1).collect())
+    return first[0][0] if first else None
 
 
 def cosine(a, b) -> F.Column:
@@ -257,8 +321,9 @@ def seed_voronoi_distances(v: DataFrame, n_cells: int,
     orderable id type works.
 
     Returns ``(…v columns…, __ds__)`` where ``__ds__`` is an
-    ``array<struct<__d2__, cell>>`` with one entry per seed, computed
-    IN-ROW against a single packed broadcast row. r13 (guide §2.3/2.4):
+    ``array<struct<__null__, __d2__, cell>>`` (see :func:`_dists`) with
+    one entry per seed, computed IN-ROW against a single packed
+    broadcast row. r13 (guide §2.3/2.4):
     the previous form fan-joined the seed table — n·n_cells rows, each
     carrying the full vector payload, built only to be funneled back
     through per-id argmin/top-probe windows (a shuffle of n·n_cells
@@ -282,17 +347,8 @@ def seed_voronoi_distances(v: DataFrame, n_cells: int,
         [(r[id_col], [float(x) for x in r["__vec__"]]) for r in seeds],
         f"cell {id_dt}, centroid array<double>")
 
-    def d2(a, b):  # exact squared L2, same left-fold as the oracle
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    packed = F.broadcast(cent.groupBy().agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("__cents__")))
-    ds = F.transform(
-        F.col("__cents__"),
-        lambda s: F.struct(d2(F.col("__vec__"), s["centroid"])
-                           .alias("__d2__"), s["cell"].alias("cell")))
+    packed = _pack(cent, "__cents__", "cell", "centroid")
+    ds = _dists("__cents__", F.col("__vec__"), "cell", "centroid")
     # r13 (guide §2.5): the embeddings parquet compresses to 1-2 row
     # groups at bench scales, so this n·cells fold — the assignment's
     # whole compute — ran on 1-2 cores. One id-keyed repartition of
@@ -431,19 +487,12 @@ def ivf_append(spark, path: str, vectors: DataFrame,
     v = with_double_vec(vectors, vec_col).select(
         F.col(id_col).alias("corpus_id"), F.col("__vec__"))
 
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    ad = v.join(F.broadcast(cent)) \
-        .withColumn("__d2__", d2(F.col("__vec__"), F.col("centroid")))
-    w = Window.partitionBy("corpus_id").orderBy("__d2__", "cell")
+    best = F.array_min(_dists("__cents__", F.col("__vec__"), "cell",
+                              "centroid"))
     assigned = (
-        ad.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") == 1)
+        v.crossJoin(_pack(cent, "__cents__", "cell", "centroid"))
         .select("corpus_id", F.col("__vec__").alias("vec"),
-                F.col("cell").alias("__cell__"))
+                best["cell"].alias("__cell__"))
     )
     assigned.write.mode("append").partitionBy("__cell__").parquet(path)
 
@@ -837,6 +886,32 @@ def ann_recall(exact: DataFrame, approx: DataFrame,
 KMEANS_Q = float(1 << 20)
 
 
+def _quantized_mean(df: DataFrame, keys: list, vec: F.Column,
+                    out: str, *extra: F.Column) -> DataFrame:
+    """``(keys…, extra…, out)``: per ``keys`` group (column names or
+    aliased columns of ``df``), the element-wise mean of the ``vec``
+    arrays over floor(x·2^20) bigint sums (see KMEANS_Q), divided per
+    dimension in dimension order. ``extra`` are further aggregates over
+    the per-dimension ``__s__`` / ``__c__`` rows. NULL vectors
+    contribute nothing."""
+    ex = df.select(*keys, F.posexplode(vec).alias("dim", "x"))
+    keys = ex.columns[:len(keys)]
+    sums = (ex.withColumn("__q__",
+                          F.floor(F.col("x") * F.lit(KMEANS_Q)).cast("long"))
+            .groupBy(*keys, "dim")
+            .agg(F.sum("__q__").alias("__s__"),
+                 F.count(F.lit(1)).alias("__c__")))
+    return (sums.groupBy(*keys)
+            .agg(F.array_sort(
+                F.collect_list(F.struct("dim", "__s__", "__c__")))
+                .alias("__a__"), *extra)
+            .withColumn(out, F.transform(
+                F.col("__a__"),
+                lambda t: t["__s__"].cast("double")
+                / t["__c__"] / F.lit(KMEANS_Q)))
+            .drop("__a__"))
+
+
 def kmeans_assign(df: DataFrame, k: int, iters: int = 2,
                   id_col: str = "vec_id",
                   vec_col: str = "embedding") -> DataFrame:
@@ -868,11 +943,6 @@ def kmeans_assign(df: DataFrame, k: int, iters: int = 2,
         raise ValueError(f"kmeans_assign: need k > 0, iters >= 0, "
                          f"got k={k}, iters={iters}")
 
-    def d2(a, b):  # exact squared L2, same left fold as the oracle
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
     def assign_to(vecs: DataFrame, cent: DataFrame) -> DataFrame:
         # r13 (guide §2.3/2.4): the old form broadcast-joined the ≤k
         # centroids (an n·k row fan-out, every row carrying the full
@@ -884,15 +954,9 @@ def kmeans_assign(df: DataFrame, k: int, iters: int = 2,
         # lexicographic minimum as min(struct(...)). The vector rides
         # along so the update pass needs no join back (ids are unique
         # by the operator's contract — seeds are the k lowest ids).
-        packed = F.broadcast(cent.groupBy().agg(
-            F.collect_list(F.struct("__cell__", "__cent__"))
-            .alias("__cs__")))
-        best = F.array_min(F.transform(
-            F.col("__cs__"),
-            lambda s: F.struct(
-                d2(F.col("__vec__"), s["__cent__"]).alias("__d2__"),
-                s["__cell__"].alias("__cell__"))))
-        return (vecs.crossJoin(packed)
+        best = F.array_min(_dists("__cs__", F.col("__vec__"), "__cell__",
+                                  "__cent__"))
+        return (vecs.crossJoin(_pack(cent, "__cs__", "__cell__", "__cent__"))
                 .select(id_col, "__vec__",
                         best["__cell__"].alias("cell")))
 
@@ -910,24 +974,9 @@ def kmeans_assign(df: DataFrame, k: int, iters: int = 2,
                         F.col("__vec__").alias("__cent__"))
     assign = assign_to(v, cent)
     for _ in range(iters):
-        sums = (assign
-                .select("cell", F.posexplode("__vec__").alias("dim", "x"))
-                .withColumn("__q__",
-                            F.floor(F.col("x") * F.lit(KMEANS_Q))
-                            .cast("long"))
-                .groupBy("cell", "dim")
-                .agg(F.sum("__q__").alias("__s__"),
-                     F.count(F.lit(1)).alias("__c__")))
-        cent = (sums.groupBy("cell")
-                .agg(F.array_sort(
-                    F.collect_list(F.struct("dim", "__s__", "__c__")))
-                    .alias("__a__"))
-                .select(F.col("cell").alias("__cell__"),
-                        F.transform(
-                            F.col("__a__"),
-                            lambda t: t["__s__"].cast("double")
-                            / t["__c__"] / F.lit(KMEANS_Q))
-                        .alias("__cent__")))
+        cent = _quantized_mean(assign, ["cell"], F.col("__vec__"),
+                               "__cent__") \
+            .select(F.col("cell").alias("__cell__"), "__cent__")
         assign = assign_to(v, cent)
     return assign.select(id_col, "cell")
 
@@ -960,10 +1009,9 @@ def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16, iters: int = 0,
                          f" got m={m}, k={k}, iters={iters}")
     v = with_double_vec(df.select(id_col, vec_col), vec_col)
     if dim is None:
-        first = v.select(F.size("__vec__")).limit(1).collect()
-        if not first:
-            raise ValueError("pq_codebooks: empty input")
-        dim = first[0][0]
+        dim = _vector_dim(v)
+        if dim is None:
+            raise ValueError("pq_codebooks: no non-NULL vector to seed from")
     if dim % m:
         raise ValueError(f"pq_codebooks: m={m} must divide dim={dim}")
     # r13 (guide §2.5): fan out before the per-iteration n·m·k folds
@@ -983,46 +1031,19 @@ def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16, iters: int = 0,
         f"{id_col} {id_dt}, cell int")
     cb = (subs.join(F.broadcast(ranks), id_col)
           .select("sub", "cell", F.col("__svec__").alias("centroid")))
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
     for _ in range(iters):
         # r13: in-row argmin (see pq_encode) — no n·m·k fan-out, no
         # per-(id, sub) aggregate exchange; the subvector rides along
         # so the update pass needs no join back ((id, sub) is unique).
-        packed = F.broadcast(cb.groupBy().agg(
-            F.collect_list(F.struct("sub", "cell", "centroid"))
-            .alias("__cb__")))
-        best = F.array_min(F.transform(
-            F.filter(F.col("__cb__"), lambda s: s["sub"] == F.col("sub")),
-            lambda s: F.struct(d2(F.col("__svec__"), s["centroid"])
-                               .alias("__d2__"), s["cell"].alias("cell"))))
-        assign = (subs.crossJoin(packed)
+        best = F.array_min(_dists("__cb__", F.col("__svec__"), "cell",
+                                  "centroid", part=("sub", F.col("sub"))))
+        assign = (subs.crossJoin(_pack(cb, "__cb__", "sub", "cell",
+                                       "centroid"))
                   .select(id_col, "sub", "__svec__",
                           best["cell"].alias("cell"))
                   .filter(F.col("cell").isNotNull()))
-        sums = (assign
-                .select("sub", "cell",
-                        F.posexplode("__svec__").alias("dim", "x"))
-                .withColumn("__q__",
-                            F.floor(F.col("x") * F.lit(KMEANS_Q))
-                            .cast("long"))
-                .groupBy("sub", "cell", "dim")
-                .agg(F.sum("__q__").alias("__s__"),
-                     F.count(F.lit(1)).alias("__c__")))
-        cb = (sums.groupBy("sub", "cell")
-              .agg(F.array_sort(
-                  F.collect_list(F.struct("dim", "__s__", "__c__")))
-                  .alias("__a__"))
-              .select("sub", "cell",
-                      F.transform(
-                          F.col("__a__"),
-                          lambda t: t["__s__"].cast("double")
-                          / t["__c__"] / F.lit(KMEANS_Q))
-                      .alias("centroid")))
+        cb = _quantized_mean(assign, ["sub", "cell"], F.col("__svec__"),
+                             "centroid")
     return cb
 
 
@@ -1038,10 +1059,11 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, m: int = 8,
     searchable from a fraction of the footprint."""
     v = with_double_vec(df.select(id_col, vec_col), vec_col)
     if dim is None:
-        first = v.select(F.size("__vec__")).limit(1).collect()
-        if not first:
-            raise ValueError("pq_encode: empty input")
-        dim = first[0][0]
+        # no non-NULL vector: a NULL vector's subvectors are NULL at any
+        # width, so width 1 serves (empty input gives the empty frame)
+        dim = _vector_dim(v)
+        if dim is None:
+            dim = m
     if dim % m:
         raise ValueError(f"pq_encode: m={m} must divide dim={dim}")
     # r13 (guide §2.5): fan out before the n·m·k encode folds (see
@@ -1050,12 +1072,6 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, m: int = 8,
                          min_bytes=VECTOR_FAN_OUT_MIN_BYTES).select(
         id_col, F.posexplode(_subvectors(F.col("__vec__"), m, dim))
         .alias("sub", "__svec__"))
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
     # r13 (guide §2.3/2.4): in-row argmin against the packed codebook
     # broadcast (m·k entries, filtered per row to the row's subspace)
     # — the old form built an n·m·k row fan-out and funneled it back
@@ -1063,14 +1079,10 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, m: int = 8,
     # lexicographic (d2, cell) tie-break, zero exchanges. The not-null
     # filter mirrors the old inner join's behavior for a subspace with
     # no codebook rows (degenerate input only).
-    packed = F.broadcast(codebooks.groupBy().agg(
-        F.collect_list(F.struct("sub", "cell", "centroid"))
-        .alias("__cb__")))
-    best = F.array_min(F.transform(
-        F.filter(F.col("__cb__"), lambda s: s["sub"] == F.col("sub")),
-        lambda s: F.struct(d2(F.col("__svec__"), s["centroid"])
-                           .alias("__d2__"), s["cell"].alias("cell"))))
-    return (subs.crossJoin(packed)
+    best = F.array_min(_dists("__cb__", F.col("__svec__"), "cell",
+                              "centroid", part=("sub", F.col("sub"))))
+    return (subs.crossJoin(_pack(codebooks, "__cb__", "sub", "cell",
+                                 "centroid"))
             .withColumn("__code__", best["cell"])
             .filter(F.col("__code__").isNotNull())
             .select(id_col, "sub", F.col("__code__").alias("code")))
@@ -1097,25 +1109,20 @@ def pq_topk(queries: DataFrame, codes: DataFrame, codebooks: DataFrame,
 
     v = with_double_vec(queries.select(id_col, vec_col), vec_col)
     if dim is None:
-        first = v.select(F.size("__vec__")).limit(1).collect()
-        if not first:
-            raise ValueError("pq_topk: empty queries")
-        dim = first[0][0]
+        # as in pq_encode: no non-NULL query fixes no width, and width 1
+        # serves NULL queries (empty queries give the empty frame)
+        dim = _vector_dim(v)
+        if dim is None:
+            dim = m
     if dim % m:
         raise ValueError(f"pq_topk: m={m} must divide dim={dim}")
     qsubs = v.select(
         F.col(id_col).alias("query_id"),
         F.posexplode(_subvectors(F.col("__vec__"), m, dim))
         .alias("sub", "__svec__"))
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
     dtab = (qsubs.join(F.broadcast(codebooks), "sub")
             .select("query_id", "sub", "cell",
-                    d2(F.col("__svec__"), F.col("centroid"))
+                    _d2(F.col("__svec__"), F.col("centroid"))
                     .alias("__d2__")))
     scored = (
         codes.select(F.col(id_col).alias("corpus_id"), "sub", "code")
@@ -1190,23 +1197,13 @@ def ivf2_seeded_topk(
                        v[id_col] == sub_ids["__c2__"])
                 .select("__c1__", "__c2__",
                         F.col("__vec__").alias("__sv__")))
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    packed2 = F.broadcast(subseeds.groupBy().agg(
-        F.collect_list(F.struct("__c1__", "__c2__", "__sv__"))
-        .alias("__ss__")))
+    packed2 = _pack(subseeds, "__ss__", "__c1__", "__c2__", "__sv__")
 
     def sub_dists(vec):
         # distances of ``vec`` to the subs of ITS coarse cell (the
         # packed array is filtered per row on __c1__ == cell)
-        return F.transform(
-            F.filter(F.col("__ss__"), lambda s: s["__c1__"] == F.col("cell")),
-            lambda s: F.struct(d2(vec, s["__sv__"]).alias("__d2__"),
-                               s["__c2__"].alias("__c2__")))
+        return _dists("__ss__", vec, "__c2__", "__sv__",
+                      part=("__c1__", F.col("cell")))
 
     # fine assignment: argmin over the vector's OWN coarse cell's subs
     assign = (a1.crossJoin(packed2)
@@ -1257,26 +1254,11 @@ def mean_pool_embeddings(df: DataFrame, group_col: str,
     (group, dim) map-combined aggregate + one collect_list bounded by
     the dimension count. NULL vectors are skipped (groups with only
     NULLs are absent)."""
-    ex = (df.select(F.col(group_col).alias("__g__"),
-                    F.posexplode(F.transform(F.col(vec_col),
-                                             lambda x: x.cast("double")))
-                    .alias("dim", "x"))
-          .withColumn("__q__",
-                      F.floor(F.col("x") * F.lit(KMEANS_Q)).cast("long")))
-    sums = (ex.groupBy("__g__", "dim")
-            .agg(F.sum("__q__").alias("__s__"),
-                 F.count(F.lit(1)).alias("__c__")))
-    return (sums.groupBy("__g__")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("dim", "__s__", "__c__")))
-                .alias("__a__"),
-                F.max("__c__").alias("n_members"))
-            .select(F.col("__g__").alias(group_col),
-                    F.transform(F.col("__a__"),
-                                lambda t: t["__s__"].cast("double")
-                                / t["__c__"] / F.lit(KMEANS_Q))
-                    .alias("pooled"),
-                    F.col("n_members")))
+    return (_quantized_mean(df, [F.col(group_col).alias("__g__")],
+                            F.transform(F.col(vec_col),
+                                        lambda x: x.cast("double")),
+                            "pooled", F.max("__c__").alias("n_members"))
+            .select(F.col("__g__").alias(group_col), "pooled", "n_members"))
 
 
 def kcenter_select(df: DataFrame, k: int = 8, id_col: str = "vec_id",
@@ -1308,9 +1290,6 @@ def kcenter_select(df: DataFrame, k: int = 8, id_col: str = "vec_id",
     batch variants (k-center with per-round multi-pick) trade
     approximation for fewer passes — out of scope here.
     """
-    d2 = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v)
     # r13 (guide §2.5): fan out before caching — every round's d² folds
     # read the cached partitions, which otherwise mirror the 1-2
     # row-group scan (see seed_voronoi_distances)
@@ -1333,7 +1312,7 @@ def kcenter_select(df: DataFrame, k: int = 8, id_col: str = "vec_id",
     # rounds are simply empty.
     state = (v.crossJoin(F.broadcast(c))
              .filter(F.col("vid") != F.col("cid"))
-             .select("vid", "e", d2(F.col("e"), F.col("ce")).alias("mind2")))
+             .select("vid", "e", _d2(F.col("e"), F.col("ce")).alias("mind2")))
     for i in range(1, k):
         state = state.localCheckpoint(eager=False)
         mx = state.agg(F.max("mind2").alias("mx"))
@@ -1351,7 +1330,7 @@ def kcenter_select(df: DataFrame, k: int = 8, id_col: str = "vec_id",
                  .filter(F.col("vid") != F.col("cid"))
                  .select("vid", "e",
                          F.least(F.col("mind2"),
-                                 d2(F.col("e"), F.col("ce"))).alias("mind2")))
+                                 _d2(F.col("e"), F.col("ce"))).alias("mind2")))
     out = outs[0]
     for o in outs[1:]:
         out = out.unionAll(o)

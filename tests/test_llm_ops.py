@@ -1880,7 +1880,9 @@ def test_pq_family_properties(spark, sf_dir):
     """PQ invariants: codebook is exactly m·k rows at iters=0 (the
     seed subvectors); codes are in [0, k); ADC self-distance ranks a
     vector first for its own probe when codes are distinctive; m must
-    divide dim."""
+    divide dim. The dimension is read from a non-NULL vector, so a
+    NULL first row changes nothing; empty input encodes and searches
+    to an empty frame of the normal schema, but seeds no codebook."""
     import pyspark.sql.functions as F
 
     from csvplus_spark.operators.similarity import (pq_codebooks,
@@ -1905,6 +1907,66 @@ def test_pq_family_properties(spark, sf_dir):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
     with pytest.raises(ValueError):
         pq_codebooks(emb, m=7, k=8)
+
+    holed = spark.createDataFrame(
+        [(0, None), (1, [1.0, 0.0, 0.0, 1.0]), (2, [0.0, 1.0, 1.0, 0.0]),
+         (3, [1.0, 1.0, 0.0, 0.0])], "vec_id long, embedding array<float>")
+    hcb = pq_codebooks(holed, m=2, k=2, iters=1)
+    hcodes = pq_encode(holed, hcb, m=2)
+    assert hcodes.count() == 8
+    htop = pq_topk(holed, hcodes, hcb, k=2, m=2)
+    assert {r.query_id for r in htop.collect()} == {0, 1, 2, 3}
+    empty = holed.limit(0)
+    for got, full in ((pq_encode(empty, hcb, m=2), hcodes),
+                      (pq_topk(empty, hcodes, hcb, k=2, m=2), htop)):
+        assert got.schema == full.schema and got.count() == 0
+    with pytest.raises(ValueError):
+        pq_codebooks(empty, m=2, k=2)
+
+
+def test_null_distance_never_wins_argmin(spark, tmp_path):
+    """A NULL seed vector has a NULL distance to every vector. Every
+    assignment orders NULL distances LAST, like the oracles' ``ORDER BY
+    d2, cell`` in DuckDB, so it never wins an argmin: kmeans_assign
+    matches _kmeans_sql() run by DuckDB on the same rows, and neither
+    pq_encode nor ivf_append hands a non-NULL vector to the
+    NULL-distance cell."""
+    import json
+
+    import duckdb
+    import pyarrow as pa
+
+    import __spark_entry__ as e
+    from csvplus_spark.operators.similarity import (ivf_append,
+                                                    kmeans_assign,
+                                                    pq_codebooks, pq_encode)
+
+    rows = [(0, None), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.9, 0.1])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+        "embedding": pa.array([r[1] for r in rows],
+                              pa.list_(pa.float32()))}))
+    for iters in (0, 2):
+        want = sorted(con.execute(e._kmeans_sql(k=2, iters=iters)).fetchall())
+        got = sorted(tuple(r) for r in
+                     kmeans_assign(df, 2, iters=iters).collect())
+        assert got == want
+
+    cb = pq_codebooks(df, m=2, k=2)
+    assert {r.cell for r in cb.collect() if r.centroid is None} == {0}
+    codes = pq_encode(df.filter(F.col("vec_id") > 0), cb, m=2).collect()
+    assert len(codes) == 6 and all(r.code == 1 for r in codes)
+
+    path = tmp_path / "ivf"
+    path.mkdir()
+    (path / "_ivf_centroids.json").write_text(
+        json.dumps([None, [1.0, 0.0], [0.0, 1.0]]))
+    ivf_append(spark, str(path), df)
+    cells = {r["corpus_id"]: r["__cell__"]
+             for r in spark.read.parquet(str(path)).collect()}
+    assert cells == {0: 0, 1: 1, 2: 2, 3: 1}
 
 
 def test_minhash_join_cross_table(spark):
@@ -2672,7 +2734,10 @@ def test_semantic_dedup_collapse_identity(spark, graph_paths):
     output-BYTE-IDENTICAL to the plain path on a corpus with heavy
     exact duplication, including the edges the collapse must respect —
     zero-norm vectors (pairwise cosine NULL → singletons either way)
-    and a duplicate sitting among the would-be seed ids."""
+    and a duplicate sitting among the would-be seed ids. Exact copies
+    of every vector without a finite positive norm (NaN, ±Inf, a NULL
+    element, zero) must not collapse either: they run exactly as on
+    the plain path."""
     from csvplus_spark.operators.dedup import semantic_dedup
 
     rows = []
@@ -2685,18 +2750,26 @@ def test_semantic_dedup_collapse_identity(spark, graph_paths):
     rows += [(10, [0.0, 0.0, 1.0]), (11, [0.0, 0.0, 1.0]),
              (12, [0.9, 0.1, 0.0]),       # near A
              (13, [0.0, 0.0, 0.0]), (14, [0.0, 0.0, 0.0])]  # zero-norm
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for _ in graph_paths():
-        plain = sorted(tuple(r) for r in
-                       semantic_dedup(df, 0.4, n_cells=4, collapse=False)
-                       .collect())
-        fast = sorted(tuple(r) for r in
-                      semantic_dedup(df, 0.4, n_cells=4, collapse=True)
-                      .collect())
-        assert plain == fast
-        out = dict((r[0], r[1]) for r in fast)
-        assert out[13] == 13 and out[14] == 14  # zero vectors stay singletons
-        assert out[5] == 0 and out[12] == 0     # dup group + near-dup share A's min id
+    nan, inf = float("nan"), float("inf")
+    odd = [(20 + 2 * i + j, v) for i, v in enumerate(
+        [[nan, 0.0, 0.0], [inf, 0.0, 0.0], [-inf, 0.0, 0.0],
+         [None, 1.0, 0.0], [0.0, 0.0, 0.0]]) for j in range(2)]
+    for extra in ([], odd):
+        df = spark.createDataFrame(rows + extra,
+                                   "vec_id long, embedding array<float>")
+        for _ in graph_paths():
+            plain = sorted(tuple(r) for r in
+                           semantic_dedup(df, 0.4, n_cells=4, collapse=False)
+                           .collect())
+            fast = sorted(tuple(r) for r in
+                          semantic_dedup(df, 0.4, n_cells=4, collapse=True)
+                          .collect())
+            assert plain == fast
+            if extra:
+                continue
+            out = dict((r[0], r[1]) for r in fast)
+            assert out[13] == 13 and out[14] == 14  # zero vectors stay singletons
+            assert out[5] == 0 and out[12] == 0     # dup group + near-dup share A's min id
 
 
 def test_simhash_pair_cap(spark, sf_dir):

@@ -115,7 +115,10 @@ SHOW = [
 #: (pattern, replacement) pairs that erase run-to-run ids from a plan
 _NORMALIZE = [
     (r"#\d+L?", "#"),
-    (r"\bx_\d+", "x_"),
+    # PySpark names lambda variables x_N / y_N / z_N from ONE
+    # process-global counter, so a query built after one that creates
+    # more or fewer lambdas is renumbered throughout
+    (r"\b([xyz])_\d+", r"\1_"),
     (r"(ExistingRDD|LogicalRDD)\[\d+\]", r"\1[]"),
     (r"plan_id=\d+", "plan_id="),
 ]
