@@ -124,6 +124,85 @@ _NORMALIZE = [
 ]
 
 
+def _split_top(s: str) -> list[str]:
+    """``s`` split at the ``", "`` separators outside any bracket."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif depth == 0 and s.startswith(", ", i):
+            out.append(s[start:i])
+            start = i + 2
+    out.append(s[start:])
+    return out
+
+
+def _depth(line: str) -> int:
+    m = re.search(r"[+:]- ", line)
+    return m.start() if m else 0
+
+
+def _canonical_expands(plan: str) -> str:
+    """Put every distinct-aggregate ``Expand`` of a normalized plan into
+    one canonical order.
+
+    Spark's RewriteDistinctAggregates numbers the distinct groups (the
+    ``gid`` literal of each Expand row) and orders the grouped columns
+    in hash-set order of their expressions, so the same query reads
+    differently with the expression ids of whatever was planned before
+    it. Here the grouped columns (the Expand outputs before ``gid#``)
+    are sorted by name, the rows other than gid 0 by their content, and
+    the gids renumbered in that order — in the Expand line and in its
+    ancestor lines that still read ``gid#`` (the aggregates above it).
+    """
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        m = re.match(r"(.*Expand )(\[\[.*\])$", line)
+        if not m:
+            continue
+        parts = _split_top(m.group(2))
+        if len(parts) != 2:
+            continue
+        rows = [_split_top(r[1:-1]) for r in _split_top(parts[0][1:-1])]
+        out = _split_top(parts[1][1:-1])
+        if "gid#" not in out:
+            continue
+        g = out.index("gid#")
+        perm = sorted(range(g), key=lambda j: out[j]) + list(range(g, len(out)))
+        rows = [[r[j] for j in perm] for r in rows]
+        keep = [r for r in rows if r[g] == "0"]
+        rest = sorted((r for r in rows if r[g] != "0"),
+                      key=lambda r: r[:g] + r[g + 1:])
+        gid = {r[g]: str(n) for n, r in enumerate(rest, 1)}
+        new_rows = keep + [r[:g] + [gid[r[g]]] + r[g + 1:] for r in rest]
+        old_cols = ", ".join(out[:g + 1])
+        new_cols = ", ".join(out[j] for j in perm[:g + 1])
+        lines[i] = (m.group(1) + "[[" + "], [".join(
+            ", ".join(r) for r in new_rows) + "]], ["
+            + ", ".join(out[j] for j in perm) + "]")
+        d = _depth(line)
+        for k in range(i - 1, -1, -1):
+            if _depth(lines[k]) >= d:
+                continue
+            if "gid#" not in lines[k]:
+                break
+            d = _depth(lines[k])
+            lines[k] = re.sub(
+                r"gid# = (\d+)",
+                lambda x: "gid# = " + gid.get(x.group(1), x.group(1)),
+                lines[k].replace(old_cols, new_cols))
+    return "\n".join(lines)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with every run-to-run difference erased."""
+    for pat, rep in _NORMALIZE:
+        plan = re.sub(pat, rep, plan)
+    return _canonical_expands(plan)
+
+
 def dump_json(out_path: str, sf_dir: str, names: list[str]) -> None:
     import __spark_entry__ as e
     from csvplus_spark import get_spark
@@ -133,11 +212,8 @@ def dump_json(out_path: str, sf_dir: str, names: list[str]) -> None:
     qs = e.queries()
     plans = {}
     for name in names or sorted(qs):
-        plan = qs[name](spark, sf_dir)._jdf.queryExecution() \
-            .optimizedPlan().toString()
-        for pat, rep in _NORMALIZE:
-            plan = re.sub(pat, rep, plan)
-        plans[name] = plan
+        plans[name] = normalize(qs[name](spark, sf_dir)._jdf
+                                .queryExecution().optimizedPlan().toString())
         spark.catalog.clearCache()
     with open(out_path, "w") as f:
         json.dump(plans, f, indent=1, sort_keys=True)
