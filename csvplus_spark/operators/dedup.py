@@ -53,24 +53,30 @@ MINHASH_COEF = _minhash_coefficients()
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup on the normalized-text fingerprint: every doc mapped
-    to the smallest doc id sharing its fingerprint (canonical id).
-    One groupBy on a 32-char key — the 100 TB-safe exact dedup."""
+    """Exact dedup on the normalized-text fingerprint: every doc with a
+    non-NULL text mapped to the smallest doc id sharing its fingerprint
+    (canonical id). A NULL text has a NULL fingerprint, which never
+    joins, so NULL-text docs are left out of the output — the same
+    contract as the SQL oracle's ``GROUP BY fp`` + join. One groupBy on
+    a 32-char key — the 100 TB-safe exact dedup."""
     # r13 batch 5 probe, NOT kept: a lazy localCheckpoint on fp (the
     # bm25/ccnet fan-out pattern) was A/B'd and REVERTED — the two fp
     # consumers shuffle by the same key, so AQE's runtime exchange
     # reuse already computes the fingerprint pass once (direct query:
-    # parity), while the collapse=True dedup paths wrap exact_dedup in
-    # their own .cache() and the nested checkpoint only added a second
+    # parity), while the collapse=True dedup paths pin their own
+    # collapse and the nested checkpoint only added a second
     # materialization + unknown-size SMJ flips (dedup_minhash_fast
     # 1.33x, dedup_keep_best_fast 1.13x local).
-    fp = df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    canon = fp.groupBy("fp").agg(F.min(id_col).alias("canonical_id"))
-    return (
-        fp.join(canon, "fp")
-        .select(F.col(id_col), F.col("canonical_id"),
-                (F.col(id_col) == F.col("canonical_id")).alias("is_canonical"))
-    )
+    _, members = _exact_groups(df, fingerprint(text_col), id_col)
+    return _canonical(members, id_col)
+
+
+def _canonical(members: DataFrame, id_col: str) -> DataFrame:
+    """``(id, canonical_id, is_canonical)`` of an :func:`_exact_groups`
+    membership table."""
+    return members.select(
+        F.col(id_col), F.col("__rep__").alias("canonical_id"),
+        (F.col(id_col) == F.col("__rep__")).alias("is_canonical"))
 
 
 def shingle_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -211,7 +217,7 @@ def ngram_jaccard_pairs(
 
     ``collapse=True`` runs all of the above over one representative
     per exact-duplicate group and expands the result
-    (:func:`_expand_rep_pairs`): byte-identical output, with the Σdf²
+    (:func:`_collapsed_text_pairs`): byte-identical output, with the Σdf²
     blocking volume measured over the DEDUPLICATED corpus —
     duplication factor f cuts it ×f² (this pair family scaled 8.3× at
     the 10× validation point without it). The cutoff argument holds in
@@ -275,8 +281,8 @@ def _ngram_pairs(df: DataFrame, threshold: float, text_col: str,
     :func:`ngram_containment_pairs` (``metric`` names which). The two
     differ only in the fallback candidate set and the score."""
     if collapse:
-        return _expand_rep_pairs(
-            df, text_col, id_col, shingles, metric,
+        return _collapsed_text_pairs(
+            df, text_col, id_col, shingles,
             lambda reps, sp: _ngram_pairs(reps, threshold, text_col, id_col,
                                           hot_df, sp, False, metric))
     ex = (shingles if shingles is not None
@@ -518,7 +524,7 @@ def minhash_dedup_pairs(
 
     ``collapse=True`` bands and verifies one representative per
     exact-duplicate group and expands the result
-    (:func:`_expand_rep_pairs`): byte-identical output,
+    (:func:`_collapsed_text_pairs`): byte-identical output,
     duplication-immune candidate volume. Every copy of a doc carries
     the same signature, so at duplication factor f the LSH candidates
     and the verify join behind them grow ×f² with zero information
@@ -531,8 +537,8 @@ def minhash_dedup_pairs(
     by test_minhash_collapsed_identity and `dedup_minhash_fast`.
     """
     if collapse:
-        return _expand_rep_pairs(
-            df, text_col, id_col, shingles, "jaccard",
+        return _collapsed_text_pairs(
+            df, text_col, id_col, shingles,
             lambda reps, sp: minhash_dedup_pairs(
                 reps, threshold, num_hashes, rows_per_band, text_col, id_col,
                 sp, hot_band_cap, hot_band_splits))
@@ -561,82 +567,141 @@ def minhash_dedup_pairs(
     return _verify_jaccard(ex, cand, threshold)
 
 
+def _exact_groups(df: DataFrame, fp: F.Column, id_col: str, *payload: str,
+                  pin: bool = False) -> tuple[DataFrame, DataFrame]:
+    """The exact-duplicate collapse every family shares (normalized
+    text, raw text, vectors, SimHash): the rows of ``df`` grouped by
+    the fingerprint ``fp``, each group kept as its min-id
+    representative.
+
+    ``grp`` is ``(__fp__, __rep__, *payload, __g__)``: one row per
+    fingerprint, the representative's ``payload`` columns and the
+    group size. ``members`` is ``(id_col, __rep__)`` for every row
+    whose fingerprint is not NULL. A NULL fingerprint still forms a
+    ``grp`` row but never joins, so each caller's fingerprint
+    expression decides what a NULL input means: a bare NULL drops the
+    row (:func:`exact_dedup`), a sentinel keeps all such rows in one
+    group (the raw-text span collapse) and a per-row key keeps each a
+    singleton (:func:`_vector_fp`). The shuffle key stays the
+    fingerprint while text or vectors ride as payload. ``pin`` pins
+    both with a lazy localCheckpoint, for callers that read them more
+    than once (uncached, each read re-runs the fingerprint pass)."""
+    vg = df.withColumn("__fp__", fp)
+    grp = vg.groupBy("__fp__").agg(
+        F.min(id_col).alias("__rep__"),
+        *[F.min_by(c, F.col(id_col)).alias(c) for c in payload],
+        F.count(F.lit(1)).alias("__g__"),
+    )
+    if pin:
+        grp = grp.localCheckpoint(eager=False)
+    members = (vg.select(F.col(id_col), "__fp__")
+               .join(grp.select("__fp__", "__rep__"), "__fp__")
+               .select(F.col(id_col), "__rep__"))
+    if pin:
+        members = members.localCheckpoint(eager=False)
+    return grp, members
+
+
+def _expand_pairs(rp: DataFrame, members: DataFrame, id_col: str,
+                  groups: DataFrame, self_value: F.Column,
+                  keep: F.Column | None = None) -> DataFrame:
+    """Expand the rep-level pairs ``rp`` = ``(c1, c2, value)`` of a
+    collapsed pair family back to member pairs, in the same schema:
+    the output side of every :func:`_exact_groups` pair collapse.
+
+    Precondition: ``rp`` holds each unordered pair of DISTINCT
+    representatives at most once, in either orientation — every
+    producer does (the shingle, band and grid/LSH paths emit c1 < c2
+    through a distinct, the SimHash blocking one row per hash pair). A
+    repeated rep pair would duplicate member pairs here unguarded.
+
+    ``groups`` is the slice of ``grp`` whose groups of ≥2 members get
+    intra-group pairs, each at ``self_value`` (a Column over ``grp``),
+    kept where ``keep`` (a Column over the value) holds. Such a group
+    enters as the rep-level SELF-pair (rep, rep, value), so one double
+    join expands cross-group and intra-group pairs together; the
+    filter keeps each unordered intra pair once, and least/greatest
+    restores c1 < c2 for cross pairs whose member ids straddle the rep
+    order. Both joins are output-sized.
+
+    Identity — the collapsed output equals the plain path's because
+    the pair value is a function of the fingerprinted content alone:
+      * text pairs (n-gram Jaccard, containment, MinHash): the metric
+        is a SET function of the shingle sets, which exact copies
+        share, so cross pairs are the rep pairs expanded over both
+        memberships and intra pairs score 1.0 — only for groups whose
+        rep has ≥1 shingle, since shingle-free docs never reach any
+        blocking or banding table in the plain paths;
+      * vectors: cosine depends only on the two arrays, and the
+        self-sim is computed ONCE per group with the expression the
+        method applies to any pair — equal arrays give the identical
+        double, so values match bit for bit (``keep`` applies the
+        threshold to it);
+      * SimHash: Hamming depends only on the hash, so a same-hash
+        group is a Hamming-0 clique and cross pairs carry their hash
+        pair's distance."""
+    c1, c2, value = rp.columns
+    selfs = (groups.filter(F.col("__g__") >= 2)
+             .select(F.col("__rep__").alias(c1), F.col("__rep__").alias(c2),
+                     self_value.alias(value)))
+    if keep is not None:
+        selfs = selfs.filter(keep)
+    m1 = members.select(F.col("__rep__").alias(c1),
+                        F.col(id_col).alias("__i1__"))
+    m2 = members.select(F.col("__rep__").alias(c2),
+                        F.col(id_col).alias("__i2__"))
+    return (rp.unionByName(selfs)
+            .join(m1, c1).join(m2, c2)
+            .filter((F.col(c1) != F.col(c2))
+                    | (F.col("__i1__") < F.col("__i2__")))
+            .select(F.least("__i1__", "__i2__").alias(c1),
+                    F.greatest("__i1__", "__i2__").alias(c2), value))
+
+
 def _exact_reps(df: DataFrame, text_col: str, id_col: str,
-                cache: bool = True) -> tuple[DataFrame, DataFrame]:
-    """The exact-duplicate collapse prologue: ``(ex, reps)`` — the
-    :func:`exact_dedup` membership table of ``df`` and the rows of
-    ``df`` that are their fingerprint's min-id representative.
-    ``cache`` keeps ``ex``: it feeds both the reps filter (which drives
-    the whole rep-space lineage) and the member expansion, and
-    uncached it re-runs the fingerprint scan per branch."""
-    ex = exact_dedup(df, text_col, id_col)
-    if cache:
-        ex = ex.cache()
-    return ex, df.join(ex.filter(F.col("is_canonical")).select(id_col), id_col)
+                pin: bool = False
+                ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The normalized-text collapse of ``df`` (:func:`exact_dedup`'s
+    fingerprint — NULL texts are dropped): ``(grp, members, reps)``
+    of :func:`_exact_groups`, ``reps`` the rows of ``df`` that
+    represent their group."""
+    grp, members = _exact_groups(df, fingerprint(text_col), id_col, pin=pin)
+    reps = df.join(members.filter(F.col(id_col) == F.col("__rep__"))
+                   .select(id_col), id_col)
+    return grp, members, reps
 
 
-def _expand_rep_pairs(df: DataFrame, text_col: str, id_col: str,
-                      shingles: DataFrame | None, metric: str,
-                      rep_pairs_of) -> DataFrame:
+def _collapsed_text_pairs(df: DataFrame, text_col: str, id_col: str,
+                          shingles: DataFrame | None,
+                          rep_pairs_of) -> DataFrame:
     """``collapse=True`` of the self-pair family (n-gram Jaccard,
     containment, MinHash): ``rep_pairs_of(reps, rep_shingles)`` runs
     the plain operator over one representative per normalized-text
-    fingerprint, and its verified pairs expand back to doc space.
-
-    Identity: ``metric`` is a SET function of the shingle sets and
-    exact copies have identical sets, so cross-cluster pairs are the
-    rep pairs expanded over both memberships (the value carries over),
-    and intra-cluster pairs score 1.0 — for clusters whose rep has ≥1
-    shingle only, since shingle-free docs never reach any blocking or
-    banding table in the plain paths. Both joins are output-sized."""
+    fingerprint, and :func:`_expand_pairs` expands its verified pairs
+    back to doc space, intra-group pairs at 1.0 for the groups whose
+    rep has ≥1 shingle."""
     if shingles is not None:
         raise ValueError(
             "collapse=True shingles the representatives itself; a "
             "caller's shingles= table covers every document")
-    ex, reps = _exact_reps(df, text_col, id_col)
+    grp, members, reps = _exact_reps(df, text_col, id_col, pin=True)
     # ONE shingle table over reps, shared by the operator and the
-    # membership check below (fan_out=False: the reps join already
+    # shingled-group check below (fan_out=False: the reps join already
     # partitioned by id — see shingle_pairs)
     sp = shingle_pairs(reps, text_col, id_col, fan_out=False)
-    rep_pairs = rep_pairs_of(reps, sp)
-    members = ex.select(F.col("canonical_id").alias("__r__"),
-                        F.col(id_col).alias("__m__"))
-    cross = (
-        rep_pairs
-        .join(members.alias("ma"), F.col("doc_id_1") == F.col("ma.__r__"))
-        .join(members.alias("mb"), F.col("doc_id_2") == F.col("mb.__r__"))
-        .select(F.least("ma.__m__", "mb.__m__").alias("doc_id_1"),
-                F.greatest("ma.__m__", "mb.__m__").alias("doc_id_2"),
-                metric)
-    )
-    shingled = sp.select(F.col("__id__").alias("__r__")).distinct()
-    mm = members.join(shingled, "__r__")
-    intra = (
-        mm.alias("p")
-        .join(mm.alias("q"),
-              (F.col("p.__r__") == F.col("q.__r__"))
-              & (F.col("p.__m__") < F.col("q.__m__")))
-        .select(F.col("p.__m__").alias("doc_id_1"),
-                F.col("q.__m__").alias("doc_id_2"),
-                F.lit(1.0).alias(metric))
-    )
-    return cross.unionByName(intra)
+    shingled = grp.join(sp.withColumnRenamed("__id__", "__rep__"),
+                        "__rep__", "left_semi")
+    return _expand_pairs(rep_pairs_of(reps, sp), members, id_col,
+                         shingled, F.lit(1.0))
 
 
-def _collapse_vectors(v: DataFrame, id_col: str, pin: bool = False
-                      ) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate vector collapse of ``(id_col, __vec__)`` rows:
-    ``grp`` is ``(__fp__, __rep__, __vec__, __g__)``, one min-id
-    representative per distinct vector with its group size, and
-    ``members`` maps every id to its ``__rep__``. ``pin`` pins both
-    with a lazy localCheckpoint.
-
-    The fingerprint is the md5 of the exact double-array rendering
-    (the dedup_exact pattern: the shuffle KEY stays 128-bit while the
-    vector rides as payload). A row is COLLAPSIBLE only when its
-    squared norm is a finite positive number; every other row gets a
-    unique ``z:id`` fingerprint and stays a singleton, exactly as on
-    the plain path, where its pairwise sim never links it:
+def _vector_fp(id_col: str) -> F.Column:
+    """The exact-duplicate fingerprint of a ``(id_col, __vec__)`` row:
+    the md5 of the exact double-array rendering when the row is
+    COLLAPSIBLE, else a unique ``z:id`` that keeps it a singleton,
+    exactly as on the plain path, where its pairwise sim never links
+    it. A row is collapsible only when its squared norm is a finite
+    positive number:
       * sq is NULL for a NULL vector AND for a vector containing a
         NULL element (the fold propagates it), and their pairwise
         cosine is NULL (r8 review: the earlier ``isNull | sq==0``
@@ -654,22 +719,8 @@ def _collapse_vectors(v: DataFrame, id_col: str, pin: bool = False
     sq = _sq_norm(F.col("__vec__"))
     collapsible = F.coalesce(
         (sq > 0.0) & (sq < F.lit(float("inf"))), F.lit(False))
-    fp = F.when(collapsible, F.md5(F.col("__vec__").cast("string"))) \
+    return F.when(collapsible, F.md5(F.col("__vec__").cast("string"))) \
         .otherwise(F.concat(F.lit("z:"), F.col(id_col).cast("string")))
-    vg = v.withColumn("__fp__", fp)
-    grp = vg.groupBy("__fp__").agg(
-        F.min(id_col).alias("__rep__"),
-        F.min_by("__vec__", F.col(id_col)).alias("__vec__"),
-        F.count(F.lit(1)).alias("__g__"),
-    )
-    if pin:
-        grp = grp.localCheckpoint(eager=False)
-    members = (vg.select(F.col(id_col), "__fp__")
-               .join(grp.select("__fp__", "__rep__"), "__fp__")
-               .select(F.col(id_col), "__rep__"))
-    if pin:
-        members = members.localCheckpoint(eager=False)
-    return grp, members
 
 
 def semantic_dedup(
@@ -725,7 +776,7 @@ def semantic_dedup(
     group minima, and a group is itself a sim=1 clique in the plain
     graph. Vectors without a finite positive norm (NULL, NULL element,
     zero, NaN, Inf) never collapse: they keep a unique fingerprint and
-    run exactly as on the plain path (see _collapse_vectors);
+    run exactly as on the plain path (see _vector_fp);
     thresholds within 1e-12 of 1.0 disable the collapse (a float
     self-cosine can fall below such a threshold, so group-clique
     membership is no longer guaranteed).
@@ -748,7 +799,7 @@ def semantic_dedup(
     v = keyed_fan_out(v, id_col)
     members = None
     if collapse:
-        grp, members = _collapse_vectors(v, id_col)
+        grp, members = _exact_groups(v, _vector_fp(id_col), id_col, "__vec__")
         work = grp.select(F.col("__rep__").alias(id_col), "__vec__")
     else:
         work = v
@@ -860,12 +911,7 @@ def incremental_dedup(new_docs: DataFrame, seen: DataFrame,
     fp = new_docs.select(F.col(id_col), fingerprint(text_col).alias("fp"))
     fresh = fp.join(seen.select(F.col(seen_fp_col).alias("fp")),
                     "fp", "left_anti")
-    canon = fresh.groupBy("fp").agg(F.min(id_col).alias("canonical_id"))
-    return (
-        fresh.join(canon, "fp")
-        .select(F.col(id_col), F.col("canonical_id"),
-                (F.col(id_col) == F.col("canonical_id")).alias("is_canonical"))
-    )
+    return _canonical(_exact_groups(fresh, F.col("fp"), id_col)[1], id_col)
 
 
 def contamination_check(
@@ -1004,7 +1050,9 @@ def simhash_dup_groups(df: DataFrame, text_col: str = "text",
     from .text import simhash_table
 
     sh = simhash_table(df, text_col, id_col, n_bits)
-    canon = sh.groupBy("simhash").agg(F.min(id_col).alias("canonical_id"))
+    grp, _ = _exact_groups(sh, F.col("simhash"), id_col)
+    canon = grp.select(F.col("__fp__").alias("simhash"),
+                       F.col("__rep__").alias("canonical_id"))
     return sh.join(canon, "simhash").select(id_col, "simhash", "canonical_id")
 
 
@@ -1232,7 +1280,7 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
     the driver query `dedup_clusters_fast` (same oracle as
     `dedup_clusters`).
     """
-    ex, reps = _exact_reps(docs, text_col, id_col, cache=False)
+    grp, members, reps = _exact_reps(docs, text_col, id_col)
     # ONE shingle table, shared: ngram_jaccard_pairs caches exactly
     # this frame, so the membership check below reads the cache instead
     # of re-running tokenize + posexplode + distinct over the reps
@@ -1242,79 +1290,23 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
                             shingles=sp),
         max_iter=max_iter)
 
-    sizes = ex.groupBy("canonical_id").agg(F.count(F.lit(1)).alias("__m__"))
-    shingled = sp.select(F.col("__id__").alias("canonical_id")).distinct()
+    shingled = sp.select("__id__").withColumnRenamed("__id__", "__rep__") \
+        .distinct()
     rep_lbl = (
-        sizes
-        .join(labels.withColumnRenamed("doc_id", "canonical_id"),
-              "canonical_id", "left")
-        .join(shingled.withColumn("__sh__", F.lit(True)),
-              "canonical_id", "left")
+        grp.select("__rep__", "__g__")
+        .join(labels.withColumnRenamed("doc_id", "__rep__"),
+              "__rep__", "left")
+        .join(shingled.withColumn("__sh__", F.lit(True)), "__rep__", "left")
         .filter(F.col("cluster_id").isNotNull()
-                | ((F.col("__m__") >= 2) & F.col("__sh__").isNotNull()))
-        .select("canonical_id",
-                F.coalesce("cluster_id", F.col("canonical_id"))
-                .alias("cluster_id"))
+                | ((F.col("__g__") >= 2) & F.col("__sh__").isNotNull()))
+        .select("__rep__",
+                F.coalesce("cluster_id", F.col("__rep__")).alias("cluster_id"))
     )
     return (
-        ex.select(F.col(id_col).alias("doc_id"), "canonical_id")
-        .join(rep_lbl, "canonical_id")
+        members.select(F.col(id_col).alias("doc_id"), "__rep__")
+        .join(rep_lbl, "__rep__")
         .select("doc_id", "cluster_id")
     )
-
-
-def _expand_collapsed_pairs(rp: DataFrame, members: DataFrame,
-                            grp: DataFrame, id_col: str,
-                            threshold: float, method: str) -> DataFrame:
-    """Expand rep-level near-pairs back to id pairs (the
-    ``embedding_near_pairs`` exact-duplicate collapse, output side).
-
-    Precondition (r13 ADVICE): ``rp`` must be strictly id_1 < id_2
-    oriented at rep level and duplicate-free — both producing paths
-    enforce it today (the grid/LSH prefilters emit min/max-ordered
-    pairs through a distinct; the intra-group union contributes only
-    id_1 == id_2 self-pairs, one per group). A future path that emits
-    either orientation or repeats a rep pair would duplicate member
-    pairs here unguarded.
-
-    ``rp`` holds (id_1, id_2, sim) over group REPRESENTATIVES —
-    already threshold-filtered, so the expansion is a pure fan-out:
-    cross-group pairs via two rep-keyed joins (least/greatest restores
-    the id_1 < id_2 orientation: a member of the lower-rep group can
-    carry a higher id than its counterpart), intra-group pairs from
-    groups of ≥2 identical vectors, their sim computed ONCE per group
-    with the SAME expression the method applies to any pair — equal
-    arrays give the identical double, so values match the plain path
-    bit-for-bit.
-    """
-    from .similarity import _dot, _norm, cosine
-
-    vec = F.col("__vec__")
-    if method == "lsh":
-        self_sim = _dot(vec, vec) / (_norm(vec) * _norm(vec))
-    else:
-        self_sim = cosine(vec, vec)
-    # groups of ≥2 identical vectors enter as rep-level SELF-pairs
-    # (id_1 == id_2 == rep), so one double-join expands cross-group
-    # and intra-group pairs together; the filter keeps each unordered
-    # intra pair once and least/greatest restores id_1 < id_2 for
-    # cross pairs whose member ids straddle the rep order
-    dup = (grp.filter(F.col("__g__") >= 2)
-           .select(F.col("__rep__").alias("id_1"),
-                   F.col("__rep__").alias("id_2"),
-                   self_sim.alias("sim"))
-           .filter(F.col("sim") >= threshold))
-    m1 = members.select(F.col("__rep__").alias("id_1"),
-                        F.col(id_col).alias("__i1__"))
-    m2 = members.select(F.col("__rep__").alias("id_2"),
-                        F.col(id_col).alias("__i2__"))
-    return (rp.unionByName(dup)
-            .join(m1, "id_1").join(m2, "id_2")
-            .filter((F.col("id_1") != F.col("id_2"))
-                    | (F.col("__i1__") < F.col("__i2__")))
-            .select(F.least("__i1__", "__i2__").alias("id_1"),
-                    F.greatest("__i1__", "__i2__").alias("id_2"),
-                    "sim"))
 
 
 def embedding_near_pairs(
@@ -1416,17 +1408,25 @@ def embedding_near_pairs(
     # exact-duplicate collapse (see docstring): run the quadratic
     # stages over one rep per distinct vector, expand at the end.
     # Rows without a finite positive norm stay singletons (see
-    # _collapse_vectors).
+    # _vector_fp).
     if collapse is None:
         collapse = collapse_wanted(emb)
     collapsed = collapse and method in ("grid", "lsh")
-    members = grp = None
     if collapsed:
         # grp feeds the method pipeline, the membership join AND the
-        # intra-group self-sim; members feeds four expansion joins —
+        # intra-group self-sim; members feeds both expansion joins —
         # both pinned lazily so the fingerprint pass runs once
-        grp, members = _collapse_vectors(v, id_col, pin=True)
+        grp, members = _exact_groups(v, _vector_fp(id_col), id_col,
+                                     "__vec__", pin=True)
         v = grp.select(F.col("__rep__").alias(id_col), "__vec__")
+
+    def expand(rp: DataFrame) -> DataFrame:
+        """The rep pairs ``rp`` back in id space, when collapsed."""
+        if not collapsed:
+            return rp
+        vec = F.col("__vec__")
+        return _expand_pairs(rp, members, id_col, grp, cosine(vec, vec),
+                             F.col("sim") >= threshold)
 
     if method == "lsh":
         planes = F.array(*[
@@ -1520,9 +1520,7 @@ def embedding_near_pairs(
             .filter(F.col("sim") >= threshold)
             .select("id_1", "id_2", "sim")
         )
-        return _expand_collapsed_pairs(rp, members, grp, id_col,
-                                       threshold, method) \
-            if collapsed else rp
+        return expand(rp)
 
     if method not in ("grid", "grid_jvm"):
         raise ValueError(f"unknown method: {method!r}")
@@ -1615,8 +1613,59 @@ def embedding_near_pairs(
         .filter(F.col("sim") >= threshold)
         .select("id_1", "id_2", "sim")
     )
-    return _expand_collapsed_pairs(rp, members, grp, id_col,
-                                   threshold, method) if collapsed else rp
+    return expand(rp)
+
+
+def _simhash_blocks(grp: DataFrame, max_hamming: int,
+                    n_bits: int) -> DataFrame:
+    """``(doc_id_1, doc_id_2, hamming)``: the representatives of every
+    unordered pair of DISTINCT simhashes within ``max_hamming`` — the
+    pair graph of :func:`simhash_near_pairs` and :func:`simhash_reps`
+    over ``grp``, an :func:`_exact_groups` collapse keyed by the hash.
+
+    Chunk blocking (pigeonhole): the ``n_bits`` hash is split into
+    ``max_hamming + 1`` contiguous chunks; two hashes within Hamming
+    distance h ≤ max_hamming differ in at most h chunks, so AT LEAST
+    ONE chunk is bitwise equal — candidates are exactly the pairs that
+    collide on some (chunk_id, chunk_value), found by ONE equi-join,
+    then verified with bit_count(xor). 100% recall by construction, no
+    nested-loop join; the only shuffle is keyed by (chunk, value),
+    which is near-uniform because simhash bits are hash votes. The
+    join and its dedup run over distinct hashes, not docs: Hamming
+    depends only on the hash, so duplicate-text docs (Hamming 0) are
+    one node and the candidate volume shrinks by the square of the
+    duplication factor (271k doc-pairs vs 13.5k hash-pairs on the
+    sf0.1 template corpus)."""
+    n_chunks = max_hamming + 1
+    base, rem = divmod(n_bits, n_chunks)
+    pieces, off = [], 0
+    for c in range(n_chunks):
+        w = base + (1 if c < rem else 0)
+        pieces.append(
+            F.struct(
+                F.lit(c).alias("chunk"),
+                F.shiftrightunsigned(F.col("__fp__"), off)
+                .bitwiseAND(F.lit((1 << w) - 1)).alias("val"),
+            ))
+        off += w
+    t = (
+        grp.select("__fp__", "__rep__", F.explode(F.array(*pieces)).alias("c"))
+        .select("__fp__", "__rep__",
+                F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
+    )
+    return (
+        t.alias("a")
+        .join(t.alias("b"),
+              (F.col("a.chunk") == F.col("b.chunk"))
+              & (F.col("a.val") == F.col("b.val"))
+              & (F.col("a.__fp__") < F.col("b.__fp__")))
+        .select(F.col("a.__rep__").alias("doc_id_1"),
+                F.col("b.__rep__").alias("doc_id_2"),
+                F.bit_count(F.col("a.__fp__").bitwiseXOR(F.col("b.__fp__")))
+                .alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
 
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
@@ -1646,135 +1695,49 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
     build) are identical — while output drops from O(f²) to O(n).
     ``None`` (default) keeps the full pair contract.
 
-    Chunk blocking (pigeonhole): the ``n_bits`` hash is split into
-    ``max_hamming + 1`` contiguous chunks; two hashes within Hamming
-    distance h ≤ max_hamming differ in at most h chunks, so AT LEAST
-    ONE chunk is bitwise equal — candidates are exactly the pairs that
-    collide on some (chunk_id, chunk_value), found by ONE equi-join,
-    then verified with bit_count(xor). 100% recall by construction, no
-    nested-loop join; the only shuffle is keyed by (chunk, value),
-    which is near-uniform because simhash bits are hash votes.
-    The chunk join and its dedup run over DISTINCT simhash values, not
-    docs: Hamming depends only on the hash, so duplicate-text docs
-    (Hamming 0) collapse into one graph node and the candidate volume
-    shrinks by the square of the duplication factor (271k doc-pairs vs
-    13.5k hash-pairs on the sf0.1 template corpus). Verified hash
-    pairs are then expanded back to doc pairs — same-hash intra pairs
-    at Hamming 0 plus cross-hash pairs via two hash-keyed joins —
-    which is output-sized work, and the expensive dropDuplicates runs
-    on the small hash-pair set instead of the doc-pair set.
+    Shape: docs collapse to one node per distinct simhash
+    (:func:`_exact_groups`), the chunk-blocked pair graph runs over
+    those nodes (:func:`_simhash_blocks`), and the verified hash pairs
+    expand back to doc pairs (:func:`_expand_pairs`: same-hash intra
+    pairs at Hamming 0 plus cross-hash pairs via two rep-keyed joins)
+    — output-sized work, with the expensive pair dedup on the small
+    hash-pair set instead of the doc-pair set.
     """
     from .text import simhash_table
 
-    # narrow (id, simhash) table computed ONCE: read by the node set,
-    # the intra expansion, and both sides of the cross expansion — one
-    # row per doc, 16 bytes wide, safe to pin at any scale
+    # narrow (id, simhash) table computed ONCE: read by the node set
+    # and the membership join — one row per doc, 16 bytes wide, safe
+    # to pin at any scale; grp and members are pinned for the blocking
+    # self-join and the expansion joins that read them twice
     sh = simhash_table(df, text_col, id_col, n_bits).localCheckpoint()
-    hashes = sh.select("simhash").distinct()
-    n_chunks = max_hamming + 1
-    base, rem = divmod(n_bits, n_chunks)
-    pieces, off = [], 0
-    for c in range(n_chunks):
-        w = base + (1 if c < rem else 0)
-        pieces.append(
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftrightunsigned(F.col("simhash"), off)
-                .bitwiseAND(F.lit((1 << w) - 1)).alias("val"),
-            ))
-        off += w
-    t = (
-        hashes.select("simhash", F.explode(F.array(*pieces)).alias("c"))
-        .select("simhash",
-                F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
-    )
-    hpairs = (
-        t.alias("a")
-        .join(t.alias("b"),
-              (F.col("a.chunk") == F.col("b.chunk"))
-              & (F.col("a.val") == F.col("b.val"))
-              & (F.col("a.simhash") < F.col("b.simhash")))
-        .select(F.col("a.simhash").alias("__h1__"),
-                F.col("b.simhash").alias("__h2__"))
-        .dropDuplicates(["__h1__", "__h2__"])
-        .withColumn("hamming",
-                    F.bit_count(F.col("__h1__").bitwiseXOR(F.col("__h2__"))))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    grp, members = _exact_groups(sh, F.col("simhash"), id_col, pin=True)
+    rp = _simhash_blocks(grp, max_hamming, n_bits)
+    zero = F.lit(0)
     if max_pairs_per_group is None:
-        intra = (
-            sh.alias("a")
-            .join(sh.alias("b"),
-                  (F.col("a.simhash") == F.col("b.simhash"))
-                  & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("doc_id_1"),
-                    F.col(f"b.{id_col}").alias("doc_id_2"),
-                    F.lit(0).cast("integer").alias("hamming"))
-        )
-        d1 = sh.select(F.col("simhash").alias("__h1__"),
-                       F.col(id_col).alias("__i1__"))
-        d2 = sh.select(F.col("simhash").alias("__h2__"),
-                       F.col(id_col).alias("__i2__"))
-        cross = (
-            hpairs.join(d1, "__h1__").join(d2, "__h2__")
-            .select(F.least("__i1__", "__i2__").alias("doc_id_1"),
-                    F.greatest("__i1__", "__i2__").alias("doc_id_2"),
-                    F.col("hamming").cast("integer").alias("hamming"))
-        )
-        return intra.unionByName(cross)
-    # capped expansion: per-hash (size, min-id rep) is a distinct-
-    # hash-sized aggregate; every branch below is output-bounded —
-    # full pairs only where the group fits the cap, star/bridge rows
+        return _expand_pairs(rp, members, id_col, grp, zero)
+    # capped expansion: every branch below is output-bounded — full
+    # pairs only where the group (pair) fits the cap, star/bridge rows
     # elsewhere — so the materialized pair set is O(n + hash_pairs)
     # at ANY duplication factor
     cap = int(max_pairs_per_group)
-    grp = sh.groupBy("simhash").agg(
-        F.count(F.lit(1)).alias("__g__"),
-        F.min(id_col).alias("__rep__")).localCheckpoint(eager=False)
-    shg = sh.join(grp, "simhash")
-    small = shg.filter((F.col("__g__") * (F.col("__g__") - 1)) / 2 <= cap)
-    intra_full = (
-        small.alias("a")
-        .join(small.alias("b"),
-              (F.col("a.simhash") == F.col("b.simhash"))
-              & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("doc_id_1"),
-                F.col(f"b.{id_col}").alias("doc_id_2"),
-                F.lit(0).cast("integer").alias("hamming"))
-    )
-    intra_star = (
-        shg.filter((F.col("__g__") * (F.col("__g__") - 1)) / 2 > cap)
+    big = (F.col("__g__") * (F.col("__g__") - 1)) / 2 > cap
+    hp = rp
+    for c, g in (("doc_id_1", "__g1__"), ("doc_id_2", "__g2__")):
+        hp = hp.join(grp.select(F.col("__rep__").alias(c),
+                                F.col("__g__").alias(g)), c)
+    wide = F.col("__g1__") * F.col("__g2__") > cap
+    full = _expand_pairs(hp.filter(~wide).select(*rp.columns), members,
+                         id_col, grp.filter(~big), zero)
+    star = (
+        members.join(grp.filter(big).select("__rep__"), "__rep__")
         .filter(F.col(id_col) != F.col("__rep__"))
         .select(F.col("__rep__").alias("doc_id_1"),  # rep = min id < id
-                F.col(id_col).alias("doc_id_2"),
-                F.lit(0).cast("integer").alias("hamming"))
+                F.col(id_col).alias("doc_id_2"), zero.alias("hamming"))
     )
-    g1 = grp.select(F.col("simhash").alias("__h1__"),
-                    F.col("__g__").alias("__g1__"),
-                    F.col("__rep__").alias("__r1__"))
-    g2 = grp.select(F.col("simhash").alias("__h2__"),
-                    F.col("__g__").alias("__g2__"),
-                    F.col("__rep__").alias("__r2__"))
-    hp = hpairs.join(g1, "__h1__").join(g2, "__h2__")
-    hp_small = hp.filter(F.col("__g1__") * F.col("__g2__") <= cap)
-    d1 = sh.select(F.col("simhash").alias("__h1__"),
-                   F.col(id_col).alias("__i1__"))
-    d2 = sh.select(F.col("simhash").alias("__h2__"),
-                   F.col(id_col).alias("__i2__"))
-    cross_full = (
-        hp_small.join(d1, "__h1__").join(d2, "__h2__")
-        .select(F.least("__i1__", "__i2__").alias("doc_id_1"),
-                F.greatest("__i1__", "__i2__").alias("doc_id_2"),
-                F.col("hamming").cast("integer").alias("hamming"))
-    )
-    cross_bridge = (
-        hp.filter(F.col("__g1__") * F.col("__g2__") > cap)
-        .select(F.least("__r1__", "__r2__").alias("doc_id_1"),
-                F.greatest("__r1__", "__r2__").alias("doc_id_2"),
-                F.col("hamming").cast("integer").alias("hamming"))
-    )
-    return (intra_full.unionByName(intra_star)
-            .unionByName(cross_full).unionByName(cross_bridge))
+    bridge = hp.filter(wide).select(
+        F.least("doc_id_1", "doc_id_2").alias("doc_id_1"),
+        F.greatest("doc_id_1", "doc_id_2").alias("doc_id_2"), "hamming")
+    return full.unionByName(star).unionByName(bridge)
 
 
 def simhash_reps(df: DataFrame, max_hamming: int = 3,
@@ -1801,66 +1764,27 @@ def simhash_reps(df: DataFrame, max_hamming: int = 3,
     0) collapse into one node before the self-join, cutting both the
     candidate volume and the CC edge set by the square of the
     duplication factor (measured 271k doc-pairs → 13.5k hash-pairs
-    over 3,812 distinct hashes at sf0.1). Labels start at min(doc id) per hash and propagate min
-    over hash edges; docs then pick up their hash's label with one
-    final join.
+    over 3,812 distinct hashes at sf0.1). Each node is its hash's
+    min-id representative, so CC labels over the representatives ARE
+    doc ids: the min over a component of (min doc per hash) is the min
+    doc id in the component. Docs pick up their representative's label
+    with one final join.
     """
     from .text import simhash_table
 
-    # computed once, read twice (node aggregation + final label join)
+    # computed once, read twice (node aggregation + membership join)
     sh = simhash_table(df, text_col, id_col, n_bits).localCheckpoint()
-    nodes = (
-        sh.groupBy("simhash").agg(F.min(id_col).alias("__lbl__"))
-        .localCheckpoint()  # reused by the self-join AND the CC loop
-    )
-
-    n_chunks = max_hamming + 1
-    base, rem = divmod(n_bits, n_chunks)
-    pieces, off = [], 0
-    for c in range(n_chunks):
-        w = base + (1 if c < rem else 0)
-        pieces.append(
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftrightunsigned(F.col("simhash"), off)
-                .bitwiseAND(F.lit((1 << w) - 1)).alias("val"),
-            ))
-        off += w
-    t = nodes.select(
-        "simhash", F.explode(F.array(*pieces)).alias("c")
-    ).select("simhash", F.col("c.chunk").alias("chunk"),
-             F.col("c.val").alias("val"))
-    hedges = (
-        t.alias("a")
-        .join(t.alias("b"),
-              (F.col("a.chunk") == F.col("b.chunk"))
-              & (F.col("a.val") == F.col("b.val"))
-              & (F.col("a.simhash") < F.col("b.simhash")))
-        .select(F.col("a.simhash").alias("h1"), F.col("b.simhash").alias("h2"))
-        .dropDuplicates(["h1", "h2"])
-        .filter(F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))) <= max_hamming)
-    )
-    edges = hedges.union(
-        hedges.select(F.col("h2").alias("h1"), F.col("h1").alias("h2")))
-
-    # CC in HASH space (pointer jumping needs labels and node ids in
-    # the same key space), then one aggregate maps each component to
-    # its min doc id: min over component of (min doc per hash) ==
-    # min doc id in the component — identical to propagating doc-id
-    # labels directly, in O(log diameter) rounds instead of O(diameter)
-    comp = _cc_min_label(
-        edges.select(F.col("h1").alias("a"), F.col("h2").alias("b")),
-        nodes.select(F.col("simhash").alias("a")))
-    rep = (
-        comp.join(nodes.withColumnRenamed("simhash", "a"), "a")
-        .groupBy("label").agg(F.min("__lbl__").alias("rep_id"))
-    )
-    hash_rep = comp.join(rep, "label") \
-        .select(F.col("a").alias("simhash"), "rep_id")
-    return (
-        sh.join(hash_rep, "simhash")
-        .select(F.col(id_col), "rep_id")
-    )
+    # reused by the self-join, the CC loop and the final join
+    grp, members = _exact_groups(sh, F.col("simhash"), id_col, pin=True)
+    hedges = _simhash_blocks(grp, max_hamming, n_bits).select(
+        F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b"))
+    labels = _cc_min_label(
+        hedges.union(hedges.select(F.col("b").alias("a"),
+                                   F.col("a").alias("b"))),
+        grp.select(F.col("__rep__").alias("a")))
+    return members.join(
+        labels.withColumnsRenamed({"a": "__rep__", "label": "rep_id"}),
+        "__rep__").select(F.col(id_col), "rep_id")
 
 
 def snapshot_diff(current: DataFrame, previous: DataFrame,
@@ -1941,8 +1865,8 @@ def minhash_join(left: DataFrame, right: DataFrame,
     test_minhash_join_collapsed_identity and `fuzzy_join_fast`.
     """
     if collapse:
-        ml, left = _exact_reps(left, text_col, id_col)
-        mr, right = _exact_reps(right, text_col, id_col)
+        _, ml, left = _exact_reps(left, text_col, id_col, pin=True)
+        _, mr, right = _exact_reps(right, text_col, id_col, pin=True)
     # a collapsed side is the output of its reps join, already
     # partitioned by id — no fan-out (see shingle_pairs)
     exl = shingle_pairs(left, text_col, id_col, fan_out=not collapse).cache()
@@ -1964,7 +1888,7 @@ def minhash_join(left: DataFrame, right: DataFrame,
         F.col("doc_id_2").alias("right_id"), "jaccard")
     if not collapse:
         return pairs
-    ml, mr = (m.select(F.col("canonical_id").alias("__r__"),
+    ml, mr = (m.select(F.col("__rep__").alias("__r__"),
                        F.col(id_col).alias("__m__")) for m in (ml, mr))
     return (
         pairs

@@ -70,7 +70,7 @@ def build_training_set(
     # existing d2 checkpoint, and the write+read of O(corpus) bytes
     # costs about what the saved tokenize pass does (interleaved A/B
     # inconclusive inside the box noise band). Shape left as-is.
-    _, d2 = _exact_reps(d1, text_col, id_col, cache=False)
+    _, _, d2 = _exact_reps(d1, text_col, id_col)
     sh2 = None
     if with_centrality:
         # d2 fans out into canonicalization AND the centrality graph —

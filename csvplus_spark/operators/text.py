@@ -787,44 +787,6 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     )
 
 
-def _collapse_by_raw_text(df: DataFrame, text_col: str, id_col: str,
-                          collapse: bool | None):
-    """Group EXACT-duplicate documents (md5 of the RAW text — byte
-    equality, so line splits and token streams are identical within a
-    group) to their min-id representative (r14, r13 verdict item 5 /
-    guide §8 "decide with small rows").
-
-    Returns ``(grp, members)`` — ``grp`` = one row per distinct text
-    ``(__tfp__, __rep__, text, __g__)`` with ``__g__`` the group size,
-    ``members`` = ``(id, __rep__)`` for every input doc — or
-    ``(None, None)`` when collapsing is off. ``collapse=None`` (auto)
-    probes the input's decoded size (see scanprobe): the fingerprint
-    aggregate + membership join are pure overhead on a small
-    duplicate-free corpus, and the f× shrink of every span/line
-    aggregate is the whole win on a duplicated one. NULL texts get a
-    sentinel fingerprint (md5 of NULL is NULL, and NULL join keys
-    would drop those docs from the expansion) — all NULL texts share
-    one group, which is exact: they all produce zero lines/tokens."""
-    if collapse is None:
-        collapse = collapse_wanted(df)
-    if not collapse:
-        return None, None
-    fpt = df.select(
-        F.col(id_col), F.col(text_col),
-        F.coalesce(F.md5(F.col(text_col)), F.lit("__null__"))
-        .alias("__tfp__"))
-    grp = fpt.groupBy("__tfp__").agg(
-        F.min(id_col).alias("__rep__"),
-        F.min_by(text_col, F.col(id_col)).alias(text_col),
-        F.count(F.lit(1)).alias("__g__"),
-    ).localCheckpoint(eager=False)
-    members = (fpt.select(F.col(id_col), "__tfp__")
-               .join(grp.select("__tfp__", "__rep__"), "__tfp__")
-               .select(F.col(id_col), "__rep__")
-               .localCheckpoint(eager=False))
-    return grp, members
-
-
 def _span_table(src: DataFrame, k: int, text_col: str,
                 id_col: str) -> DataFrame:
     """(doc_id, pos, span) — every k-token window of every doc (the
@@ -882,21 +844,55 @@ def repeated_spans(df: DataFrame, k: int = 5, min_docs: int = 2,
     while the window/aggregate/join work shrinks f×
     (test_repeated_spans_collapsed_identity pins it).
     """
+    spans, _, members = _qualified_spans(df, k, min_docs, text_col, id_col,
+                                         collapse)
+    if members is None:
+        return spans
+    return (spans.withColumnRenamed("doc_id", "__rep__")
+            .join(members, "__rep__")
+            .select(F.col(id_col).alias("doc_id"), "pos", "span",
+                    "n_docs"))
+
+
+def _qualified_spans(df: DataFrame, k: int, min_docs: int, text_col: str,
+                     id_col: str, collapse: bool | None):
+    """The shared body of :func:`repeated_spans` and
+    :func:`remove_repeated_spans`: ``(spans, src, members)``, with
+    ``spans`` the ``(doc_id, pos, span, n_docs)`` rows of every span in
+    ≥ ``min_docs`` docs over the doc table ``src``.
+
+    Plain, ``src`` is ``df`` and ``members`` None. ``collapse=None``
+    (auto) probes the input's decoded size (see scanprobe): the
+    fingerprint aggregate + membership join are pure overhead on a
+    small duplicate-free corpus, and the f× shrink of every span
+    aggregate is the whole win on a duplicated one. Collapsed, ``src`` is one
+    ``(id_col, text_col)`` row per distinct RAW text — its min-id rep
+    (:func:`dedup._exact_groups` over the md5 of the raw text: byte
+    equality, so line splits and token streams are identical within a
+    group) — and ``members`` maps every doc to its rep. NULL texts get
+    a sentinel fingerprint (md5 of NULL is NULL, and a NULL key would
+    drop those docs from the expansion): all NULL texts share one
+    group, which is exact, since they all produce zero tokens."""
+    from .dedup import _exact_groups
+
     if k < 1:
         raise ValueError(f"repeated_spans: k must be >= 1, got {k}")
-    grp, members = _collapse_by_raw_text(df, text_col, id_col, collapse)
-    if grp is None:
+    if collapse is None:
+        collapse = collapse_wanted(df)
+    if not collapse:
         spans = _span_table(df, k, text_col, id_col)
         freq = (
             spans.groupBy("span")
             .agg(F.count_distinct("doc_id").alias("n_docs"))
             .filter(F.col("n_docs") >= min_docs)
         )
-        return spans.join(freq, "span") \
-            .select("doc_id", "pos", "span", "n_docs")
-    rep_spans = _span_table(
-        grp.select(F.col("__rep__").alias(id_col), F.col(text_col)),
-        k, text_col, id_col)
+        return (spans.join(freq, "span")
+                .select("doc_id", "pos", "span", "n_docs"), df, None)
+    grp, members = _exact_groups(
+        df, F.coalesce(F.md5(F.col(text_col)), F.lit("__null__")), id_col,
+        text_col, pin=True)
+    src = grp.select(F.col("__rep__").alias(id_col), F.col(text_col))
+    rep_spans = _span_table(src, k, text_col, id_col)
     freq = (
         rep_spans.select("span", "doc_id").distinct()
         .join(grp.select(F.col("__rep__").alias("doc_id"), "__g__"),
@@ -905,10 +901,7 @@ def repeated_spans(df: DataFrame, k: int = 5, min_docs: int = 2,
         .filter(F.col("n_docs") >= min_docs)
     )
     return (rep_spans.join(freq, "span")
-            .withColumnRenamed("doc_id", "__rep__")
-            .join(members, "__rep__")
-            .select(F.col(id_col).alias("doc_id"), "pos", "span",
-                    "n_docs"))
+            .select("doc_id", "pos", "span", "n_docs"), src, members)
 
 
 def remove_repeated_spans(df: DataFrame, k: int = 5, min_docs: int = 2,
@@ -977,25 +970,13 @@ def remove_repeated_spans(df: DataFrame, k: int = 5, min_docs: int = 2,
                     .alias("cleaned_text"))
         )
 
-    grp, members = _collapse_by_raw_text(df, text_col, id_col, collapse)
-    if grp is None:
-        spans = repeated_spans(df, k=k, min_docs=min_docs,
-                               text_col=text_col, id_col=id_col,
-                               collapse=False)
-        return _cleaned(df, spans)
-    reps = grp.select(F.col("__rep__").alias(id_col), F.col(text_col))
-    rep_spans = _span_table(reps, k, text_col, id_col)
-    freq = (
-        rep_spans.select("span", "doc_id").distinct()
-        .join(grp.select(F.col("__rep__").alias("doc_id"), "__g__"),
-              "doc_id")
-        .groupBy("span").agg(F.sum("__g__").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
-    )
-    rep_clean = _cleaned(reps, rep_spans.join(freq.select("span"), "span"))
+    spans, src, members = _qualified_spans(df, k, min_docs, text_col,
+                                           id_col, collapse)
+    cleaned = _cleaned(src, spans)
+    if members is None:
+        return cleaned
     return (members
-            .join(rep_clean.withColumnRenamed("doc_id", "__rep__"),
-                  "__rep__")
+            .join(cleaned.withColumnRenamed("doc_id", "__rep__"), "__rep__")
             .select(F.col(id_col).alias("doc_id"), "cleaned_text"))
 
 
