@@ -96,6 +96,18 @@ def _vector_dim(v: DataFrame) -> int | None:
     return first[0][0] if first else None
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, corpus_id, rank, sim)``: the ``k`` best rows of
+    every query in ``scored``, by sim descending, then lower corpus id
+    — the total order every cosine search here and its oracle rank
+    by."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(),
+                                               F.col("corpus_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "corpus_id", "rank", "sim"))
+
+
 def cosine(a, b) -> F.Column:
     """Cosine similarity of two float-array columns (double math)."""
     return _dot(a, b) / (_norm(a) * _norm(b))
@@ -167,12 +179,7 @@ def brute_force_topk(
         .filter(F.col("__pr__") <= k)
     )
     # stage 2: global per-query rank over the ≤ 64·k survivors
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("corpus_id"))
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "sim")
-    )
+    return _top_k(pre, k)
 
 
 def _plane_signs(plane_id: int, dim: int) -> list[float]:
@@ -278,12 +285,7 @@ def ivf_topk(
         scored.withColumn("sim", cosine(F.col("__qv__"), F.col("__vec__")))
         .dropDuplicates(["query_id", "corpus_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def auto_n_cells(n_rows: int, per_cell: int = 4096, floor: int = 16,
@@ -424,12 +426,7 @@ def ivf_seeded_topk(
     # distinct needed
     scored = scored.withColumn(
         "sim", cosine(F.col("__qv__"), F.col("__cv__")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def ivf_build(corpus: DataFrame, path: str, n_clusters: int | None = None,
@@ -531,12 +528,7 @@ def ivf_search(spark, path: str, queries: DataFrame, k: int = 5,
         scored.withColumn("sim", cosine(F.col("__qv__"), F.col("vec")))
         .dropDuplicates(["query_id", "corpus_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 def hyperplane_bits(vec_col: F.Column, dim: int, n_bits: int = 16,
@@ -614,12 +606,7 @@ def lsh_topk(
         cand.join(qv, "query_id").join(cv, "corpus_id")
         .withColumn("sim", cosine(F.col("__qv__"), F.col("__cv__")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "sim")
-    )
+    return _top_k(scored, k)
 
 
 #: plane ids below this are reserved for the LSH tables (dedup + topk);
@@ -839,12 +826,7 @@ def grid_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     )
     if exclude_self:
         rescored = rescored.filter(F.col("query_id") != F.col("corpus_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("corpus_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "sim")
-    )
+    return _top_k(rescored, k)
 
 
 def ann_recall(exact: DataFrame, approx: DataFrame,
@@ -1234,11 +1216,7 @@ def ivf2_seeded_topk(
         scored = scored.filter(F.col("query_id") != F.col("corpus_id"))
     scored = scored.withColumn(
         "sim", cosine(F.col("__qv__"), F.col("__corpusv__")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(),
-                                               F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "rank", "sim"))
+    return _top_k(scored, k)
 
 
 def mean_pool_embeddings(df: DataFrame, group_col: str,
