@@ -5,7 +5,8 @@ Every operator here is built from a few shared folds, each defined
 once so the DuckDB oracle replays one expression, not several copies:
   * ``_dot`` / ``_sq_norm`` / ``_norm`` / ``cosine`` — sequential
     left folds over ``zip_with`` / ``transform``, engine-exact;
-  * ``_d2`` — the left-fold squared L2 distance;
+  * ``_d2`` — the left-fold squared L2 distance, skipping NULL
+    elements as the oracle's ``list_sum`` does;
   * ``_pack`` + ``_dists`` — a centroid table packed into ONE broadcast
     row and folded in-row to ``array<struct<__null__, __d2__, key>>``:
     the assignment stage of seeded IVF, SemDeDup, KMeans, PQ and
@@ -49,9 +50,14 @@ def _norm(a) -> F.Column:
 
 
 def _d2(a, b) -> F.Column:
-    """Exact squared L2 distance: the left fold the SQL oracle replays."""
+    """Exact squared L2 distance: the left fold the SQL oracle replays
+    with DuckDB's ``list_sum``, which skips a NULL term (a NULL element
+    on either side) and is NULL only when no term is left — a NULL
+    vector or centroid. The first kept term starts the sum, so values
+    without NULLs are the plain ``0.0 + t1 + t2 ...`` fold's."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, x: acc + x)
+                       F.lit(None).cast("double"),
+                       lambda acc, x: F.coalesce(acc + x, acc, x))
 
 
 def _pack(table: DataFrame, name: str, *fields: str) -> DataFrame:
