@@ -189,7 +189,9 @@ def ngram_jaccard_pairs(
     ``shingles``: precomputed (__id__, __s__) table for exactly the
     docs of ``df`` (e.g. a checkpointed table shared with a sibling
     stage — see build_training_set's A/B note); must be the
-    shingle_pairs() shape. Semantics identical to recomputing.
+    shingle_pairs() shape. Semantics identical to recomputing. The
+    table is read as given: pinning it is the caller's choice, and it
+    is not cached a second time.
 
     Blocking on shared COLD shingles (document frequency ≤ ``hot_df``):
     the self-equi-join + count computes each candidate pair's cold
@@ -285,8 +287,10 @@ def _ngram_pairs(df: DataFrame, threshold: float, text_col: str,
             df, text_col, id_col, shingles,
             lambda reps, sp: _ngram_pairs(reps, threshold, text_col, id_col,
                                           hot_df, sp, False, metric))
+    # a caller's shingles= table is the caller's to pin (re-caching a
+    # checkpointed frame persists it twice); only our own is cached
     ex = (shingles if shingles is not None
-          else shingle_pairs(df, text_col, id_col)).cache()
+          else shingle_pairs(df, text_col, id_col).cache())
     sizes = _shingle_sizes(ex)
 
     def _inter_join(src: DataFrame) -> DataFrame:
@@ -543,8 +547,9 @@ def minhash_dedup_pairs(
                 reps, threshold, num_hashes, rows_per_band, text_col, id_col,
                 sp, hot_band_cap, hot_band_splits))
     # ONE shingle pass shared by the band path and the exact verify
+    # (cached only when built here, as in _ngram_pairs)
     ex = (shingles if shingles is not None
-          else shingle_pairs(df, text_col, id_col)).cache()
+          else shingle_pairs(df, text_col, id_col).cache())
     bands = minhash_bands(df, num_hashes, rows_per_band, text_col, id_col,
                           pairs=ex).cache()
     if hot_band_cap is not None:
@@ -685,10 +690,10 @@ def _collapsed_text_pairs(df: DataFrame, text_col: str, id_col: str,
             "collapse=True shingles the representatives itself; a "
             "caller's shingles= table covers every document")
     grp, members, reps = _exact_reps(df, text_col, id_col, pin=True)
-    # ONE shingle table over reps, shared by the operator and the
-    # shingled-group check below (fan_out=False: the reps join already
-    # partitioned by id — see shingle_pairs)
-    sp = shingle_pairs(reps, text_col, id_col, fan_out=False)
+    # ONE cached shingle table over reps, shared by the operator and
+    # the shingled-group check below (fan_out=False: the reps join
+    # already partitioned by id — see shingle_pairs)
+    sp = shingle_pairs(reps, text_col, id_col, fan_out=False).cache()
     shingled = grp.join(sp.withColumnRenamed("__id__", "__rep__"),
                         "__rep__", "left_semi")
     return _expand_pairs(rep_pairs_of(reps, sp), members, id_col,
@@ -825,6 +830,9 @@ def semantic_dedup(
         import numpy as np
         import pandas as pd
 
+        # a NULL vector has a NULL cosine to every vector (never a
+        # pair) and cannot be stacked
+        pdf = pdf[pdf["__vec__"].notna()]
         if len(pdf) < 2:
             return pd.DataFrame({"id_1": pd.Series(dtype=object),
                                  "id_2": pd.Series(dtype=object)})
@@ -1271,7 +1279,7 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
         near-dup) OR its fingerprint has ≥2 members with ≥1 shingle
         (the copies' own J=1 pairs).
 
-    Scale: the collapse itself is `exact_dedup` (one fingerprint
+    Scale: the collapse itself is `_exact_groups` (one fingerprint
     aggregate); everything quadratic-ish downstream (Σdf² blocking
     join, CC rounds) sees the DEDUPLICATED corpus. With duplication
     factor f the candidate volume drops ×f², the CC node set ×f.
@@ -1281,10 +1289,10 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
     `dedup_clusters`).
     """
     grp, members, reps = _exact_reps(docs, text_col, id_col)
-    # ONE shingle table, shared: ngram_jaccard_pairs caches exactly
-    # this frame, so the membership check below reads the cache instead
-    # of re-running tokenize + posexplode + distinct over the reps
-    sp = shingle_pairs(reps, text_col, id_col)
+    # ONE cached shingle table, shared: ngram_jaccard_pairs and the
+    # membership check below both read it instead of re-running
+    # tokenize + posexplode + distinct over the reps
+    sp = shingle_pairs(reps, text_col, id_col).cache()
     labels = dup_clusters(
         ngram_jaccard_pairs(reps, threshold, text_col, id_col,
                             shingles=sp),
@@ -1477,7 +1485,9 @@ def embedding_near_pairs(
             import numpy as np
             import pandas as pd
 
-            A = np.stack(pdf["__vec__"].to_numpy())
+            pdf = pdf[pdf["__vec__"].notna()]  # as in the grid _cell
+            A = (np.stack(pdf["__vec__"].to_numpy()) if len(pdf)
+                 else np.zeros((0, 0)))
             ids = pdf[id_col].to_numpy()
             nrm = np.linalg.norm(A, axis=1)
             o1, o2 = [], []
@@ -1584,6 +1594,10 @@ def embedding_near_pairs(
 
         empty = pd.DataFrame({"id_1": pd.Series(dtype=object),
                               "id_2": pd.Series(dtype=object)})
+        # a NULL vector has a NULL cosine to every vector (never a
+        # pair) and cannot be stacked
+        lpdf = lpdf[lpdf["__v1__"].notna()]
+        rpdf = rpdf[rpdf["__v2__"].notna()]
         if not len(lpdf) or not len(rpdf):
             return empty
         A = np.stack(lpdf["__v1__"].to_numpy())

@@ -897,7 +897,10 @@ def _qualified_spans(df: DataFrame, k: int, min_docs: int, text_col: str,
         rep_spans.select("span", "doc_id").distinct()
         .join(grp.select(F.col("__rep__").alias("doc_id"), "__g__"),
               "doc_id")
-        .groupBy("span").agg(F.sum("__g__").alias("n_docs"))
+        # coalesce: a sum over a group is never NULL, and the plain
+        # path's count_distinct column is not nullable either
+        .groupBy("span")
+        .agg(F.coalesce(F.sum("__g__"), F.lit(0)).alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
     )
     return (rep_spans.join(freq, "span")
