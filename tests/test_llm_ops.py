@@ -2814,3 +2814,150 @@ def test_simhash_pair_cap(spark, sf_dir):
         return {x: find(x) for x in list(parent)}
 
     assert components(cap) == components(full)  # connectivity preserved
+
+
+def test_null_element_distance_skips_term(spark):
+    """A vector with a NULL element gets the d² of its other elements,
+    as the oracles' DuckDB ``list_sum`` skips the NULL term: with
+    seeds [1,0] and [0,1], [NULL,0.9] is 0.81 from the first and 0.01
+    from the second, so kmeans_assign puts it in the second cell, the
+    same cell as _kmeans_sql() (a propagated NULL d² would send it to
+    the lowest cell instead)."""
+    import duckdb
+    import pyarrow as pa
+
+    import __spark_entry__ as e
+    from csvplus_spark.operators.similarity import kmeans_assign
+
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [None, 0.9])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+        "embedding": pa.array([r[1] for r in rows],
+                              pa.list_(pa.float32()))}))
+    want = sorted(con.execute(e._kmeans_sql(k=2, iters=0)).fetchall())
+    got = sorted(tuple(r) for r in kmeans_assign(df, 2, iters=0).collect())
+    assert got == want
+    assert dict(got)[3] == 2
+
+
+def test_collapse_identical_on_edge_cases(spark, graph_paths):
+    """Every exact-duplicate collapse returns the rows AND the schema
+    of its plain path on the inputs a collapse could get wrong: NULL,
+    empty and whitespace-only text, an empty and a single-row frame,
+    and NULL, NULL-element, zero, NaN and Inf vectors — each odd input
+    twice, so it would collapse if its fingerprint let it. SimHash has
+    no plain path: its pairs with the cap off equal an all-pairs
+    Hamming join over simhash_table, and with the cap at 1 they keep
+    those connected components in the same schema. exact_dedup's
+    contract is pinned on the way: a NULL text has a NULL fingerprint
+    and is left out, as in the oracle's SQL."""
+    import duckdb
+    import pyarrow as pa
+
+    import __spark_entry__ as e
+    from csvplus_spark.operators.dedup import (embedding_near_pairs,
+                                               exact_dedup,
+                                               minhash_dedup_pairs,
+                                               ngram_containment_pairs,
+                                               semantic_dedup,
+                                               simhash_near_pairs)
+    from csvplus_spark.operators.text import (remove_repeated_spans,
+                                              repeated_spans)
+
+    def result(df):
+        return df.schema, sorted(map(tuple, df.collect()), key=repr)
+
+    s = "doc_id long, text string"
+    fox = "the quick brown fox jumps over the lazy dog"
+    texts = {
+        "edge": spark.createDataFrame(
+            [(1, fox), (2, None), (3, fox), (4, None), (5, ""), (6, ""),
+             (7, "   "), (8, "   "), (9, fox + " again and again"),
+             (10, "The  Quick brown fox jumps over the lazy dog"),
+             (11, "tiny"), (12, "tiny")], s),
+        "empty": spark.createDataFrame([], s),
+        "single": spark.createDataFrame([(1, fox)], s),
+    }
+    text_ops = {
+        "jaccard": lambda d, c: ngram_jaccard_pairs(d, 0.5, collapse=c),
+        "containment": lambda d, c: ngram_containment_pairs(
+            d, 0.5, collapse=c),
+        "minhash": lambda d, c: minhash_dedup_pairs(d, 0.5, collapse=c),
+        "spans": lambda d, c: repeated_spans(d, k=3, collapse=c),
+        "remove_spans": lambda d, c: remove_repeated_spans(
+            d, k=3, collapse=c),
+    }
+    for name, docs in texts.items():
+        for op, fn in text_ops.items():
+            assert result(fn(docs, True)) == result(fn(docs, False)), \
+                (op, name)
+    # the edge corpus does collapse: copies pair up in both paths
+    assert (1, 3, 1.0) in result(
+        ngram_jaccard_pairs(texts["edge"], 0.5, collapse=True))[1]
+
+    nan, inf = float("nan"), float("inf")
+    v = "vec_id long, embedding array<float>"
+    vecs = {
+        "edge": spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
+             (3, [0.9, 0.1, 0.0]), (4, [0.0, 1.0, 0.0]), (5, None),
+             (6, None), (7, [None, 1.0, 0.0]), (8, [None, 1.0, 0.0]),
+             (9, [0.0, 0.0, 0.0]), (10, [0.0, 0.0, 0.0]),
+             (11, [nan, 0.0, 0.0]), (12, [nan, 0.0, 0.0]),
+             (13, [inf, 0.0, 0.0]), (14, [inf, 0.0, 0.0])], v),
+        "empty": spark.createDataFrame([], v),
+        "single": spark.createDataFrame([(1, [1.0, 0.0, 0.0])], v),
+    }
+    for name, emb in vecs.items():
+        for m in ("grid", "lsh"):
+            got = [result(embedding_near_pairs(emb, 0.4, method=m, dim=3,
+                                               collapse=c))
+                   for c in (True, False)]
+            assert got[0] == got[1], (m, name)
+        for path in graph_paths():
+            got = [result(semantic_dedup(emb, 0.4, n_cells=2, collapse=c))
+                   for c in (True, False)]
+            assert got[0] == got[1], ("semantic_dedup", path, name)
+    assert (1, 2, 1.0) in result(embedding_near_pairs(
+        vecs["edge"], 0.4, dim=3, collapse=True))[1]
+
+    def components(rows):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b, _ in rows:
+            parent[max(find(a), find(b))] = min(find(a), find(b))
+        return {x: find(x) for x in list(parent)}
+
+    for name, docs in texts.items():
+        sh = simhash_table(docs, n_bits=60)
+        ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+        ref = (sh.alias("a").join(sh.alias("b"),
+                                  (F.col("a.doc_id") < F.col("b.doc_id"))
+                                  & (ham <= 3))
+               .select(F.col("a.doc_id").alias("doc_id_1"),
+                       F.col("b.doc_id").alias("doc_id_2"),
+                       ham.alias("hamming")))
+        off = result(simhash_near_pairs(docs, 3))
+        at1 = result(simhash_near_pairs(docs, 3, max_pairs_per_group=1))
+        assert off[1] == result(ref)[1], name
+        assert at1[0] == off[0], name
+        assert components(at1[1]) == components(off[1]), name
+        if name == "edge":  # the copies' Hamming-0 pair
+            assert (1, 3, 0) in off[1]
+
+    rows = [(1, "a b c"), (2, None), (3, "a b c"), (4, None), (5, "")]
+    got = result(exact_dedup(spark.createDataFrame(rows, s)))[1]
+    assert got == [(1, 1, True), (3, 1, False), (5, 5, True)]
+    con = duckdb.connect()
+    con.register("documents", pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+        "text": pa.array([r[1] for r in rows], pa.string())}))
+    assert sorted(con.execute(e._DEDUP_EXACT_SQL).fetchall()) == got

@@ -519,3 +519,39 @@ def test_footer_memo_is_bounded(tmp_path):
     info = _footer_stats.cache_info()
     assert info.currsize == limit and info.misses == limit + 50
     _footer_stats.cache_clear()
+
+
+def test_dump_plans_profile_reads_the_same(spark, sf_dir):
+    """tools/dump_plans.py --json: two dumps of one tree read
+    identical. ``profile``'s distinct aggregates become an Expand whose
+    group numbers and column order follow expression ids — i.e. what
+    was planned before it in the process — so the normalized plan of
+    ``profile`` alone must equal its plan after other aggregate
+    queries."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(em.__file__), "tools"))
+    import dump_plans
+
+    def plan(name):
+        return dump_plans.normalize(em.queries()[name](spark, sf_dir)
+                                    ._jdf.queryExecution().optimizedPlan()
+                                    .toString())
+
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1000000")
+    try:
+        alone = plan("profile")
+        for other in ("agg_pricing_summary", "approx_distinct",
+                      "skew_report"):
+            plan(other)
+        again = plan("profile")
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert "Expand" in alone and "gid#" in alone
+    assert again == alone
