@@ -2772,6 +2772,25 @@ def test_semantic_dedup_collapse_identity(spark, graph_paths):
             assert out[5] == 0 and out[12] == 0     # dup group + near-dup share A's min id
 
 
+def _components(pairs):
+    """{id: min id of its component} over the (id_1, id_2, ...) rows
+    ``pairs`` — union-find, for comparing two pair sets' connectivity."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in pairs:
+        a, b = find(r[0]), find(r[1])
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {x: find(x) for x in list(parent)}
+
+
 def test_simhash_pair_cap(spark, sf_dir):
     """max_pairs_per_group (VERDICT r8 item 3): identity vs the
     uncapped form on low-duplication data; bounded star/bridge output
@@ -2797,23 +2816,7 @@ def test_simhash_pair_cap(spark, sf_dir):
     assert len(full) >= 2 * (40 * 39 // 2)
     assert len(cap) < len(full) / 5  # bounded, not quadratic
 
-    def components(pairs):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in pairs:
-            a, b = find(r["doc_id_1"]), find(r["doc_id_2"])
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        return {x: find(x) for x in list(parent)}
-
-    assert components(cap) == components(full)  # connectivity preserved
+    assert _components(cap) == _components(full)  # connectivity preserved
 
 
 def test_null_element_distance_skips_term(spark):
@@ -2923,19 +2926,6 @@ def test_collapse_identical_on_edge_cases(spark, graph_paths):
     assert (1, 2, 1.0) in result(embedding_near_pairs(
         vecs["edge"], 0.4, dim=3, collapse=True))[1]
 
-    def components(rows):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                x = parent[x]
-            return x
-
-        for a, b, _ in rows:
-            parent[max(find(a), find(b))] = min(find(a), find(b))
-        return {x: find(x) for x in list(parent)}
-
     for name, docs in texts.items():
         sh = simhash_table(docs, n_bits=60)
         ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
@@ -2949,7 +2939,7 @@ def test_collapse_identical_on_edge_cases(spark, graph_paths):
         at1 = result(simhash_near_pairs(docs, 3, max_pairs_per_group=1))
         assert off[1] == result(ref)[1], name
         assert at1[0] == off[0], name
-        assert components(at1[1]) == components(off[1]), name
+        assert _components(at1[1]) == _components(off[1]), name
         if name == "edge":  # the copies' Hamming-0 pair
             assert (1, 3, 0) in off[1]
 
