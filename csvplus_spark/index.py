@@ -1,34 +1,129 @@
 """``Index`` — the reference's sorted row collection, Spark-first.
 
 Reference: an Index is an eagerly materialized, in-memory sorted
-``[]Row`` with binary-search lookups (/root/reference/csvplus.go:
-610-920, README.md:102-106). On Spark an index is NOT a runtime object
-(SURVEY.md §1.3): it decomposes into
-  * a join input   → plain DataFrame (Catalyst picks broadcast-hash /
+``[]Row`` with binary-search lookups (csvplus.go:610-920,
+README.md:102-106). Here an index plays four roles (SURVEY.md §1.3):
+  * lookups (``find`` / ``has`` / ``sub_index``) → the reference's own
+    structure: the first lookup fetches the index to the driver through
+    the shared fits-on-the-driver probe (``scanprobe.driver_table``)
+    and stably sorts it by its keys once; every lookup is then a binary
+    search over that Arrow table. An index the probe refuses (too many
+    rows or bytes) keeps a prefix-key filter over its source;
+  * a join input → plain DataFrame (Catalyst picks broadcast-hash /
     sort-merge — the distributed replacement for binary search);
   * an iteration order → ``orderBy(key columns)``;
   * a persisted artifact → sorted parquet + key-column metadata.
 
-This class is a façade holding (Frame, key columns, unique flag) that
-compiles to the above. Nothing is materialized at build time — the
-sort is declared, executed lazily by whatever action consumes it —
-which removes the reference's all-in-memory constraint
-(README.md:103-106) at 100 TB.
+Building an index materializes nothing, and joins, iteration, dedup
+and persistence stay lazy, which removes the reference's all-in-memory
+constraint (README.md:103-106) at 100 TB. Snapshot contract: like the
+reference's eager Index, a driver-served index sees its source as of
+its first lookup. Joins and iteration read the source when they run,
+and so does every lookup of an index the probe refused.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Callable, Sequence
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .errors import ColumnNotFoundError, DuplicateKeyError
 from .frame import Frame
+from .operators import scanprobe
 
 _META_FILE = "_csvplus_index.json"
+
+#: the lazy unique check's message, as Spark reports it from an action
+_DUP_KEY = re.compile(r"duplicate value while creating unique index: (\{.*\})")
+
+#: key types the driver search compares as Spark's ``=`` does (outside
+#: string mode, where every key is compared as Spark's string cast)
+_NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+            T.FloatType, T.DoubleType)
+
+#: ``Index._sorted`` before the first lookup
+_UNBUILT = object()
+
+
+def _search_column(col):
+    """``(values, nulls)``: numpy copies of one sorted key column — str
+    objects, int64 or float64 values (a NULL slot holds a placeholder)
+    and the NULL flags."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    nulls = col.is_null().to_numpy(zero_copy_only=False)
+    if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+        return col.to_numpy(zero_copy_only=False), nulls
+    kind = "float64" if pa.types.is_floating(col.type) else "int64"
+    return pc.fill_null(col, 0).to_numpy().astype(kind), nulls
+
+
+def _comparable(vals, v) -> bool:
+    """True when numpy compares ``v`` with key values ``vals`` as
+    Spark's ``=`` would: a str with strings, an int in the int64 range
+    with integers or floats, a float with floats. Other values (bools,
+    numpy scalars, a float against an integer key) take the filter."""
+    if isinstance(v, bool):
+        return False
+    if vals.dtype == object:
+        return isinstance(v, str)
+    if isinstance(v, int):
+        return -(1 << 63) <= v < 1 << 63
+    return vals.dtype.kind == "f" and isinstance(v, float)
+
+
+class _Sorted:
+    """An index's rows on the driver, stably sorted by its keys with
+    NULLs last: the Arrow ``table`` (the index's columns, then one
+    hidden column per key holding the key as compared), the index's
+    Spark ``schema``, and ``keys``, one :func:`_search_column` pair per
+    key column still to search."""
+
+    def __init__(self, spark: SparkSession, table, schema, keys):
+        self.spark, self.table, self.schema, self.keys = \
+            spark, table, schema, keys
+
+    def span(self, values) -> tuple[int, int] | None:
+        """Rows ``[lo, hi)`` whose leading keys equal ``values``: one
+        ``searchsorted`` pair per key, each within the rows the earlier
+        keys fixed. None when a value is not :func:`_comparable`."""
+        import numpy as np
+
+        lo, hi = 0, self.table.num_rows
+        for (vals, nulls), v in zip(self.keys, values):
+            if v is None:
+                return 0, 0  # NULL keys never match
+            if not _comparable(vals, v):
+                return None
+            # within the fixed rows this key is sorted, its NULLs last
+            end = lo + int(np.searchsorted(nulls[lo:hi], True))
+            seg = vals[lo:end]
+            lo, hi = (lo + int(np.searchsorted(seg, v, "left")),
+                      lo + int(np.searchsorted(seg, v, "right")))
+        return lo, hi
+
+    def df(self, lo: int, hi: int) -> DataFrame:
+        """Rows ``[lo, hi)`` as a local DataFrame with the index's
+        schema, so column types and nullability are the source's."""
+        rows = self.table.slice(lo, hi - lo) \
+            .select(range(len(self.schema.fields)))
+        return self.spark.createDataFrame(rows, schema=self.schema)
+
+    def sub(self, lo: int, hi: int, fixed: int) -> "_Sorted":
+        """Rows ``[lo, hi)``, searched by the keys after the first
+        ``fixed``: zero-copy slices, already in their key order."""
+        return _Sorted(self.spark, self.table.slice(lo, hi - lo),
+                       self.schema,
+                       [(v[lo:hi], n[lo:hi]) for v, n in self.keys[fixed:]])
 
 
 class Index:
@@ -42,6 +137,9 @@ class Index:
         self.unique = unique
         #: hint: small enough to broadcast in joins (set for dimension tables)
         self.small = small
+        #: the lookups' driver copy (:class:`_Sorted`), built by the first
+        #: lookup; None once the index keeps the filter path
+        self._sorted = _UNBUILT
 
     # ------------------------------------------------------------------
 
@@ -68,40 +166,108 @@ class Index:
     def find(self, *values) -> Frame:
         """Point/prefix lookup (Index.Find, csvplus.go:625-627).
 
-        The reference's O(log n) binary search maps to a prefix-key
-        filter; over sorted/bucketed parquet this prunes partitions and
-        row groups, the distributed analogue of O(log n). A ``None``
+        The reference's O(log n) binary search, over the driver copy
+        the first lookup builds (see :meth:`_fetch_sorted`): the rows come
+        back as a local frame with the index's schema. An index the
+        probe refused, or a value the driver cannot compare like Spark,
+        takes a prefix-key filter over the source instead. A ``None``
         value matches nothing: NULL keys never match, in either mode.
         """
         if len(values) > len(self.columns):
             raise ValueError("too many values for index columns")
-        cond = None
-        for col, val in zip(self.columns, values):
-            if self.frame.string_mode and val is not None:
-                val = str(val)
-            c = self._key(col) == F.lit(val)
-            cond = c if cond is None else (cond & c)
-        df = self.frame.df if cond is None else self.frame.df.filter(cond)
+        s, span = self._span(values)
+        df = self._filtered(values) if span is None else s.df(*span)
         return Frame(df, [(c, True) for c in self.columns], self.frame.string_mode)
 
     def sub_index(self, *values) -> "Index":
         """Fix a strict prefix of key values; result is an Index on the
-        remaining columns (SubIndex, csvplus.go:632-641)."""
+        remaining columns (SubIndex, csvplus.go:632-641). A driver-served
+        index hands the sub-index a zero-copy slice of its sorted copy."""
         if len(values) >= len(self.columns):
             raise ValueError("too many values for sub-index")  # panics, csvplus.go:633-635
-        rest = self.columns[len(values):]
-        return Index(self.find(*values), rest, unique=self.unique, small=self.small)
+        sub = Index(self.find(*values), self.columns[len(values):],
+                    unique=self.unique, small=self.small)
+        s, span = self._span(values)
+        if span is not None:
+            sub._sorted = s.sub(*span, len(values))
+        return sub
 
     def has(self, *values) -> bool:
         """Membership test (has, csvplus.go:899-905)."""
-        return self.find(*values).df.limit(1).count() > 0
+        s, span = self._span(values)
+        if span is None:
+            return self.find(*values).df.limit(1).count() > 0
+        return span[1] > span[0]
+
+    def _as_keys(self, values) -> list:
+        """Lookup values as compared: in string mode, ``str`` of each."""
+        if not self.frame.string_mode:
+            return list(values)
+        return [None if v is None else str(v) for v in values]
+
+    def _span(self, values):
+        """``(driver copy, rows [lo, hi) matching values)``; the span is
+        None when the lookup takes the filter path. The first lookup
+        builds the copy (:meth:`_fetch_sorted`); it is kept on this
+        instance only, and a refusal is kept too, so a refused index
+        pays its probe once."""
+        if self._sorted is _UNBUILT:
+            self._sorted = self._fetch_sorted()
+        s = self._sorted
+        return s, (None if s is None else s.span(self._as_keys(values)))
+
+    def _filtered(self, values) -> DataFrame:
+        """The source rows whose leading keys equal ``values``: a
+        prefix-key filter, which over sorted/bucketed parquet prunes
+        partitions and row groups."""
+        cond = None
+        for col, val in zip(self.columns, self._as_keys(values)):
+            c = self._key(col) == F.lit(val)
+            cond = c if cond is None else (cond & c)
+        return self.frame.df if cond is None else self.frame.df.filter(cond)
+
+    def _fetch_sorted(self) -> "_Sorted | None":
+        """One ``scanprobe.driver_table`` probe fetches the index with
+        one hidden column per key: the key itself, or in string mode the
+        key cast to string by Spark, so Spark's cast decides what
+        matches (``1.0`` → ``"1.0"``). The table is stably sorted by
+        those columns, NULLs last. None when the probe refuses, or when
+        a key (outside string mode) is neither a binary-collated string
+        nor a number. The fetch is the index's first action, so a lazy
+        unique check fires here, as DuplicateKeyError."""
+        import pyarrow.compute as pc
+
+        df = self.df
+        schema = df.schema
+        if not self.frame.string_mode and not all(
+                schema[c].dataType == T.StringType()
+                or isinstance(schema[c].dataType, _NUMERIC)
+                for c in self.columns):
+            return None
+        hidden = [f"__cp_k{i}__" for i in range(len(self.columns))]
+        try:
+            t = scanprobe.driver_table(df.select(
+                "*", *[self._key(c).alias(h)
+                       for c, h in zip(self.columns, hidden)]))
+        except (PySparkException, Py4JJavaError) as ex:
+            m = _DUP_KEY.search(str(ex))
+            if m is None:
+                raise
+            raise DuplicateKeyError(m.group(1)) from None
+        if t is None:
+            return None
+        t = t.take(pc.sort_indices(t, [(h, "ascending") for h in hidden],
+                                   null_placement="at_end"))
+        return _Sorted(df.sparkSession, t, schema,
+                       [_search_column(t[h]) for h in hidden])
 
     # ------------------------------------------------------------------
     # uniqueness — csvplus.go:740-756
 
     def assert_unique(self, lazy: bool = False) -> "Index":
         """Duplicate-key check; raises DuplicateKeyError (eager) or a
-        runtime error at action time (lazy) with the offending key
+        runtime error at action time (lazy; a lookup's driver fetch
+        re-raises it as DuplicateKeyError) with the offending key
         rendered (csvplus.go:747-756).
 
         Eager (default, reference-faithful error timing): one
@@ -153,6 +319,7 @@ class Index:
             ])
             self.frame = Frame(df, [(c, True) for c in self.columns],
                                self.frame.string_mode)
+            self._sorted = _UNBUILT  # a copy of the unchecked frame must go
             self.unique = True
             return self
         keys = [self._key(c).alias(c) for c in self.columns]

@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import _dense_ids, _small_edges
-from .scanprobe import collapse_wanted, keyed_fan_out
+from .graph import _dense_ids
+from .scanprobe import collapse_wanted, driver_table, keyed_fan_out
 from .text import fingerprint, hash60, tokens
 
 SHINGLE_K = 3
@@ -984,14 +984,25 @@ def semantic_contamination(
     are dropped up front: their cosine is undefined (NaN) and a NaN
     column would poison grid_topk's per-cell k-th-value prefilter for
     every train vector sharing the cell.
+
+    Only bench vectors whose squared norm is a positive finite number
+    take part. This differs from the SQL oracle
+    (``_SEMANTIC_CONTAM_SQL``; pinned by tests/test_llm_ops.py::
+    test_semantic_contamination_bench_guard_vs_oracle) for two kinds
+    of bench vector, and in both the result here is the one without
+    that vector. A NULL element makes the squared norm NULL, while
+    DuckDB's ``list_sum`` skips the NULL term and scores the vector over
+    its other elements. A NaN or an Inf element makes every cosine NaN:
+    the oracle keeps the vector and its MAX returns NaN (flagged) for
+    every train vector, while here, like a zero vector, it would poison
+    grid_topk's prefilter for the train vectors sharing its cell (they
+    came back NULL), so it is dropped.
     """
-    from .similarity import grid_topk, with_double_vec
+    from .similarity import _sq_norm, grid_topk, with_double_vec
 
     b = with_double_vec(bench, vec_col)
-    b = b.filter(
-        F.aggregate(F.col("__vec__"), F.lit(0.0),
-                    lambda acc, x: acc + x * x) > 0
-    ).drop("__vec__")
+    sq = _sq_norm(F.col("__vec__"))
+    b = b.filter((sq > 0) & (sq < float("inf"))).drop("__vec__")
     nn = grid_topk(train, b, k=1, id_col=id_col, vec_col=vec_col,
                    exclude_self=False, n_blocks=n_blocks)
     return (
@@ -1074,8 +1085,8 @@ def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
     ``a``, a superset of the edge endpoints) adds isolated vertices —
     defaults to the edge endpoints. A NULL endpoint never links.
 
-    Small graphs (at most ``graph.SMALL_GRAPH_EDGES`` edges, found by
-    one bounded probe job) are labelled exactly on the driver
+    Small graphs (those :func:`scanprobe.driver_table` fetches in one
+    bounded probe job) are labelled exactly on the driver
     (:func:`_cc_on_driver`) and always reach the fixpoint; ``max_iter``
     bounds only the distributed loop below, which larger graphs run.
 
@@ -1105,7 +1116,7 @@ def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
     keep lineage flat.
     """
     edges = edges.cache()
-    small = _small_edges(edges)
+    small = driver_table(edges)
     if small is not None:
         edges.unpersist()
         return _cc_on_driver(edges, small, nodes)

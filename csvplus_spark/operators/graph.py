@@ -17,28 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csvplus_spark.errors import CsvPlusError
+from csvplus_spark.operators.scanprobe import driver_table
 
 #: one unit of PageRank mass = 2^-40 — big enough that integer-div
 #: remainders are negligible, small enough that N·Q stays << 2^63
 PR_Q = 1 << 40
-
-#: edge lists up to this many rows are finished on the driver (one
-#: bounded collect, then exact numpy rounds) instead of in per-round
-#: Spark jobs. The value caps the driver collect; it is not a measured
-#: crossover and is unverified: on one machine the driver finish won at
-#: every size measured (docs/SCALE.md "Small graphs finish on the
-#: driver"), and no benchmark workload runs above it
-SMALL_GRAPH_EDGES = 200_000
-
-
-def _small_edges(edges: DataFrame):
-    """``edges`` as an Arrow table when it holds at most
-    :data:`SMALL_GRAPH_EDGES` rows, else None — one bounded job, so a
-    large graph pays one probe and keeps its distributed loop. Callers
-    cache ``edges`` first: the probe still computes every partition,
-    and the cache lets the distributed loop reuse that work."""
-    t = edges.limit(SMALL_GRAPH_EDGES + 1).toArrow()
-    return t if t.num_rows <= SMALL_GRAPH_EDGES else None
 
 
 def _dense_ids(x, y):
@@ -135,7 +118,7 @@ def integer_pagerank(edges: DataFrame, src: str = "doc_id_1",
     edge endpoints (restrict-to-graph semantics — dangling corpus
     members carry no edges to rank on).
 
-    Small graphs (at most :data:`SMALL_GRAPH_EDGES` edges, found by one
+    Small graphs (those :func:`scanprobe.driver_table` fetches in one
     bounded probe job) run the same recurrence on the driver in exact
     int64 numpy arithmetic and come back as a small frame; the final
     ``round(q/Q)`` stays a Spark expression on either path, so the
@@ -156,7 +139,7 @@ def integer_pagerank(edges: DataFrame, src: str = "doc_id_1",
     # the driver recurrence cannot overflow int64 while den·Q does not
     # (every per-node mass and inflow stays ≤ Q); Spark's long math
     # wraps where numpy's floor division would then differ
-    small = _small_edges(e) if damping_den * PR_Q < 1 << 63 else None
+    small = driver_table(e) if damping_den * PR_Q < 1 << 63 else None
     und = (e.unionByName(e.select(F.col("__d__").alias("__s__"),
                                   F.col("__s__").alias("__d__")))
            .distinct())

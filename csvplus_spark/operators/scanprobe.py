@@ -52,6 +52,11 @@ size for the keyed gates because the duplication-heavy corpora these
 operators exist for compress 30-100x: the sf10 documents table is
 6 MB on disk and 181 MB decoded, and the compute (tokenize, md5, d²
 folds) scales with the DECODED bytes.
+
+One more build-time probe lives here because it answers the same kind
+of question for every caller: :func:`driver_table` decides whether a
+frame fits on the driver, with one row cap and one byte budget shared
+by connected components, PageRank and ``Index`` lookups.
 """
 
 from __future__ import annotations
@@ -60,6 +65,8 @@ import functools
 import os
 from urllib.parse import urlparse
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame
 
 #: uncompressed-bytes floor below which a keyed fan-out never pays:
@@ -84,6 +91,13 @@ VECTOR_FAN_OUT_MIN_BYTES = 512 * 1024
 #: their parallelism from native file splitting, and shuffling them
 #: would cost more than the single-threaded head start
 FAN_OUT_MAX_BYTES = 256 * 1024 * 1024
+
+#: the most rows :func:`driver_table` fetches. It caps the driver
+#: collect; it is not a measured crossover: on one machine the driver
+#: finish of connected components and PageRank won at every graph size
+#: measured (docs/SCALE.md "Small graphs finish on the driver"), and no
+#: benchmark workload runs above it
+DRIVER_MAX_ROWS = 200_000
 
 
 @functools.lru_cache(maxsize=4096)
@@ -218,3 +232,47 @@ def scan_disk_bytes(df: DataFrame) -> int:
     without a job (no input files, remote scheme, stat fails)."""
     sizes = _sizes(_scan_files(df), decoded=False)
     return sizes[1] if sizes else 0
+
+
+def driver_budget_bytes(spark) -> int:
+    """The Arrow bytes :func:`driver_table` keeps: one eighth of
+    ``spark.driver.memory`` (default 1g; a unitless value is MiB, as
+    Spark reads it).
+
+    Why one eighth: the fetched batches are first collected into the
+    driver JVM heap, and in local mode that heap also runs the
+    executors, whose execution and storage pool takes
+    ``spark.memory.fraction`` (0.6) of it. The Python side then holds
+    the table and one working copy of it (the Index's sorted copy, the
+    graph finishes' numpy columns), about 3x its size. An eighth keeps
+    the JVM copy within a third of the heap's non-pool share and the
+    Python peak under half the heap size: 256 MB with a 2 GB driver,
+    2 GB with the 16 GB local default. 200k edges x 16 B is 3.2 MB."""
+    mem = spark.conf.get("spark.driver.memory", "1g")
+    mib = spark.sparkContext._jvm.org.apache.spark.util.Utils \
+        .memoryStringToMb(mem)
+    return mib * 1024 * 1024 // 8
+
+
+def driver_table(df: DataFrame):
+    """``df`` as an Arrow table when it fits on the driver, else None.
+
+    One bounded job, ``df.limit(DRIVER_MAX_ROWS + 1).toArrow()``; the
+    table is kept when it holds at most :data:`DRIVER_MAX_ROWS` rows
+    and at most :func:`driver_budget_bytes`. Rows too wide for
+    ``spark.driver.maxResultSize`` (default 1g) abort the fetch; that
+    is a refusal too. A refused frame costs that one probe and its
+    caller keeps its Spark path. The probe still computes every
+    partition of ``df``, so the graph loops, which read their edges
+    again after a refusal, cache them first and the probe's work fills
+    the cache."""
+    try:
+        t = df.limit(DRIVER_MAX_ROWS + 1).toArrow()
+    except (PySparkException, Py4JJavaError) as ex:
+        if "spark.driver.maxResultSize" not in str(ex):
+            raise
+        return None
+    if t.num_rows > DRIVER_MAX_ROWS or \
+            t.nbytes > driver_budget_bytes(df.sparkSession):
+        return None
+    return t

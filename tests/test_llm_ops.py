@@ -20,14 +20,15 @@ from csvplus_spark.operators.text import lang_id, simhash_table, text_stats
 def graph_paths(monkeypatch):
     """Iterate a test body over both connected-components / PageRank
     paths: the driver finish, then the distributed Spark loop
-    (SMALL_GRAPH_EDGES = -1 sends even an empty edge list there). A
-    loop rather than parametrize keeps each test's id unchanged."""
-    from csvplus_spark.operators import graph
+    (``scanprobe.DRIVER_MAX_ROWS = -1`` sends even an empty edge list
+    there). A loop rather than parametrize keeps each test's id
+    unchanged."""
+    from csvplus_spark.operators import scanprobe
 
     def paths():
-        for name, limit in (("driver", graph.SMALL_GRAPH_EDGES),
+        for name, limit in (("driver", scanprobe.DRIVER_MAX_ROWS),
                             ("distributed", -1)):
-            monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", limit)
+            monkeypatch.setattr(scanprobe, "DRIVER_MAX_ROWS", limit)
             yield name
     return paths
 
@@ -1643,6 +1644,60 @@ def test_semantic_contamination_flags_and_nulls(spark):
     assert got[1] == (1.0, True)
     assert got[2] == (0.0, False)
     assert got[3] == (None, False)
+
+
+def test_semantic_contamination_bench_guard_vs_oracle(spark):
+    """The bench guard of semantic_contamination (a positive finite
+    ``_sq_norm``) against _SEMANTIC_CONTAM_SQL run by DuckDB, for three
+    kinds of bench vector: one with a NULL element, a NaN and an Inf
+    vector. The oracle keeps all three; the Spark guard drops them (a
+    NULL fold, a non-finite norm), so each result reads as if that bench
+    vector were absent, while the oracle scores the NULL-element vector
+    over its other terms and lets NaN cosines top its MAX — the
+    divergences the docstring records."""
+    import duckdb
+    import pyarrow as pa
+
+    import __spark_entry__ as entry
+    from csvplus_spark.operators.dedup import semantic_contamination
+
+    nan, inf = float("nan"), float("inf")
+    base = {1: [0.6, 0.0, 0.8, 0.0], 2: [1.0, 0.0, 0.0, 0.0],
+            3: [0.0, 0.0, 0.0, 1.0], 0: [0.0, 0.0, 1.0, 0.0]}
+
+    def table(rows):
+        return pa.table({
+            "vec_id": pa.array(list(rows), pa.int64()),
+            "embedding": pa.array(list(rows.values()),
+                                  pa.list_(pa.float32())),
+            "label": pa.array([0] * len(rows), pa.int32())})
+
+    def ours(t):
+        emb = spark.createDataFrame(t)
+        out = semantic_contamination(
+            emb.filter(F.col("vec_id") % 20 != 0),
+            emb.filter(F.col("vec_id") % 20 == 0), 0.4, n_blocks=2)
+        return sorted(map(tuple, out.collect()))
+
+    def oracle(t):
+        con = duckdb.connect()
+        con.register("embeddings", t)
+        # the guard of the oracle's n and bench CTEs
+        kept = dict(con.execute(
+            "SELECT vec_id, sqrt(list_sum(list_transform(list_transform("
+            "embedding, x -> CAST(x AS DOUBLE)), x -> x * x))) > 0 "
+            "FROM embeddings WHERE vec_id % 20 = 0").fetchall())
+        return kept, sorted(con.execute(entry._SEMANTIC_CONTAM_SQL)
+                            .fetchall())
+
+    without = ours(table(base))
+    assert oracle(table(base)) == ({0: True}, without)
+    for vec in ([0.6, None, 0.8, 0.0], [nan, nan, nan, nan],
+                [inf, 0.0, 0.0, 0.0]):
+        t = table({**base, 20: vec})
+        kept, want = oracle(t)
+        assert kept[20] is True and want != without, vec
+        assert ours(t) == without, vec
 
 
 def test_temperature_mix_properties(spark):

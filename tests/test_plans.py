@@ -122,18 +122,24 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_loaded_index_lookup_pushes_down(spark, sf_dir, tmp_path):
+def test_loaded_index_lookup_pushes_down(spark, sf_dir, tmp_path,
+                                        monkeypatch):
     from csvplus_spark import Index, load_table
+    from csvplus_spark.operators import scanprobe
 
     idx = load_table(spark, sf_dir, "customer", string_mode=True) \
         .unique_index_on("c_custkey")
     path = str(tmp_path / "cust_idx")
     idx.write_to(path)
-    loaded = Index.load(spark, path)
-    hit = loaded.find("42")
+    # a reloaded index within the driver cap serves lookups from its
+    # sorted driver copy: a local relation, no scan
+    hit = Index.load(spark, path).find("42")
+    assert hit.df.isLocal() and hit.count() == 1
+    # over the cap, the point lookup reaches the parquet scan as a
+    # pushed filter → row-group min/max skipping on the key-sorted file
+    monkeypatch.setattr(scanprobe, "DRIVER_MAX_ROWS", -1)
+    hit = Index.load(spark, path).find("42")
     plan = hit.df._jdf.queryExecution().executedPlan().toString()
-    # the point lookup reaches the parquet scan as a pushed filter →
-    # row-group min/max skipping on the key-sorted file
     assert "PushedFilters" in plan and "c_custkey" in plan
     assert hit.count() == 1
 
