@@ -6424,8 +6424,8 @@ def q_minhash_calibration(spark, sf_dir):
                                                shingle_pairs)
 
     docs = load_table(spark, sf_dir, "documents").df
-    ex = shingle_pairs(docs).cache()  # one shingle pass for both stages
-    sigs = minhash_signatures(docs, 32, pairs=ex).cache()
+    ex = shingle_pairs(docs).localCheckpoint(eager=False)  # one shingle pass
+    sigs = minhash_signatures(docs, 32, pairs=ex).localCheckpoint(eager=False)
     bands = minhash_bands(docs, 32, 2, pairs=ex)
     cand = (bands.alias("a")
             .join(bands.alias("b"),

@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from decimal import Decimal
 from typing import Callable, Sequence
 
 from py4j.protocol import Py4JJavaError
@@ -222,6 +223,8 @@ class Index:
         partitions and row groups."""
         cond = None
         for col, val in zip(self.columns, self._as_keys(values)):
+            if isinstance(val, int) and not -(1 << 63) <= val < 1 << 63:
+                val = Decimal(val)  # past int64: Spark's coercion decides
             c = self._key(col) == F.lit(val)
             cond = c if cond is None else (cond & c)
         return self.frame.df if cond is None else self.frame.df.filter(cond)

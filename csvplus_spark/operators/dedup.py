@@ -191,7 +191,7 @@ def ngram_jaccard_pairs(
     stage — see build_training_set's A/B note); must be the
     shingle_pairs() shape. Semantics identical to recomputing. The
     table is read as given: pinning it is the caller's choice, and it
-    is not cached a second time.
+    is not checkpointed a second time.
 
     Blocking on shared COLD shingles (document frequency ≤ ``hot_df``):
     the self-equi-join + count computes each candidate pair's cold
@@ -287,10 +287,10 @@ def _ngram_pairs(df: DataFrame, threshold: float, text_col: str,
             df, text_col, id_col, shingles,
             lambda reps, sp: _ngram_pairs(reps, threshold, text_col, id_col,
                                           hot_df, sp, False, metric))
-    # a caller's shingles= table is the caller's to pin (re-caching a
-    # checkpointed frame persists it twice); only our own is cached
-    ex = (shingles if shingles is not None
-          else shingle_pairs(df, text_col, id_col).cache())
+    # a caller's shingles= table is the caller's to pin (checkpointing
+    # a checkpointed frame persists it twice); only our own is pinned
+    ex = (shingles if shingles is not None else shingle_pairs(
+        df, text_col, id_col).localCheckpoint(eager=False))
     sizes = _shingle_sizes(ex)
 
     def _inter_join(src: DataFrame) -> DataFrame:
@@ -319,12 +319,13 @@ def _ngram_pairs(df: DataFrame, threshold: float, text_col: str,
                 ex.groupBy("__s__").agg(F.count(F.lit(1)).alias("__df__"))
                 .filter(F.col("__df__") > hot_df).select("__s__")
             )
-            exh = ex.join(hot_set, "__s__").select("__id__", "__s__").cache()
+            exh = ex.join(hot_set, "__s__").select("__id__", "__s__")
             exc = ex.join(hot_set, "__s__", "left_anti")
         else:  # narrow codegen filters, no extra shuffle
             is_hot = F.col("__s__").isin(hot_vals)
-            exh = ex.filter(is_hot).cache()
+            exh = ex.filter(is_hot)
             exc = ex.filter(~is_hot)
+        exh = exh.localCheckpoint(eager=False)
         cold = _inter_join(exc)
         # hot-heavy at own size: ≥ t of the doc's shingles are hot
         hh = (
@@ -547,11 +548,11 @@ def minhash_dedup_pairs(
                 reps, threshold, num_hashes, rows_per_band, text_col, id_col,
                 sp, hot_band_cap, hot_band_splits))
     # ONE shingle pass shared by the band path and the exact verify
-    # (cached only when built here, as in _ngram_pairs)
-    ex = (shingles if shingles is not None
-          else shingle_pairs(df, text_col, id_col).cache())
+    # (pinned only when built here, as in _ngram_pairs)
+    ex = (shingles if shingles is not None else shingle_pairs(
+        df, text_col, id_col).localCheckpoint(eager=False))
     bands = minhash_bands(df, num_hashes, rows_per_band, text_col, id_col,
-                          pairs=ex).cache()
+                          pairs=ex).localCheckpoint(eager=False)
     if hot_band_cap is not None:
         cand = _band_pairs_triangle(
             bands, hot_band_cap, hot_band_splits).distinct()
@@ -690,10 +691,11 @@ def _collapsed_text_pairs(df: DataFrame, text_col: str, id_col: str,
             "collapse=True shingles the representatives itself; a "
             "caller's shingles= table covers every document")
     grp, members, reps = _exact_reps(df, text_col, id_col, pin=True)
-    # ONE cached shingle table over reps, shared by the operator and
+    # ONE pinned shingle table over reps, shared by the operator and
     # the shingled-group check below (fan_out=False: the reps join
     # already partitioned by id — see shingle_pairs)
-    sp = shingle_pairs(reps, text_col, id_col, fan_out=False).cache()
+    sp = shingle_pairs(reps, text_col, id_col,
+                       fan_out=False).localCheckpoint(eager=False)
     shingled = grp.join(sp.withColumnRenamed("__id__", "__rep__"),
                         "__rep__", "left_semi")
     return _expand_pairs(rep_pairs_of(reps, sp), members, id_col,
@@ -1110,15 +1112,13 @@ def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
     shallow ngram cluster graph (diameter ≤ 3, CC cost isolated from
     pair generation): 0.85s / 0.81s / 1.0s — jump-from-1 is the only
     setting that wins on deep graphs without taxing shallow ones.
-    The edge list is cached (it is read every round) before the probe,
-    so on a large graph the probe's pass over the upstream fills the
-    cache the rounds read; labels are localCheckpointed each round to
-    keep lineage flat.
+    The edge list, read every round, is lazily checkpointed before the
+    probe, so on a large graph the probe's pass over the upstream fills
+    it; labels are checkpointed each round to keep lineage flat.
     """
-    edges = edges.cache()
+    edges = edges.localCheckpoint(eager=False)
     small = driver_table(edges)
     if small is not None:
-        edges.unpersist()
         return _cc_on_driver(edges, small, nodes)
     if nodes is None:
         nodes = edges.select("a").distinct()
@@ -1300,10 +1300,10 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
     `dedup_clusters`).
     """
     grp, members, reps = _exact_reps(docs, text_col, id_col)
-    # ONE cached shingle table, shared: ngram_jaccard_pairs and the
+    # ONE pinned shingle table, shared: ngram_jaccard_pairs and the
     # membership check below both read it instead of re-running
     # tokenize + posexplode + distinct over the reps
-    sp = shingle_pairs(reps, text_col, id_col).cache()
+    sp = shingle_pairs(reps, text_col, id_col).localCheckpoint(eager=False)
     labels = dup_clusters(
         ngram_jaccard_pairs(reps, threshold, text_col, id_col,
                             shingles=sp),
@@ -1462,7 +1462,7 @@ def embedding_near_pairs(
         # The narrow (id, tbl, bucket) table is pinned with
         # localCheckpoint so the self-join folds each hyperplane ONCE:
         # re-measured at sf0.1 (r3) the checkpoint wins 5.8-7.5s vs
-        # 7.5-12.8s recompute — superseding the r2 note that a .cache()
+        # 7.5-12.8s recompute — superseding the r2 note that a cache
         # barrier lost; checkpoint materializes n_tables rows/vec of
         # three longs, negligible at any scale
         bt = (
@@ -1894,8 +1894,8 @@ def minhash_join(left: DataFrame, right: DataFrame,
         _, mr, right = _exact_reps(right, text_col, id_col, pin=True)
     # a collapsed side is the output of its reps join, already
     # partitioned by id — no fan-out (see shingle_pairs)
-    exl = shingle_pairs(left, text_col, id_col, fan_out=not collapse).cache()
-    exr = shingle_pairs(right, text_col, id_col, fan_out=not collapse).cache()
+    exl, exr = (shingle_pairs(side, text_col, id_col, fan_out=not collapse)
+                .localCheckpoint(eager=False) for side in (left, right))
     bl = minhash_bands(left, num_hashes, rows_per_band, text_col,
                        id_col, pairs=exl)
     br = minhash_bands(right, num_hashes, rows_per_band, text_col,

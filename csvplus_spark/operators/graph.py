@@ -132,10 +132,10 @@ def integer_pagerank(edges: DataFrame, src: str = "doc_id_1",
                                              <= damping_den):
         raise ValueError("integer_pagerank: need iters >= 0 and "
                          "0 <= damping_num <= damping_den")
-    # cached before the probe, so on a large graph und's cache below
-    # is filled from the probe's work instead of rerunning the upstream
+    # pinned before the probe, so on a large graph und's checkpoint
+    # below fills from the probe's work instead of rerunning the upstream
     e = (edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
-         .filter(F.col("__s__") != F.col("__d__"))).cache()
+         .filter("__s__ != __d__").localCheckpoint(eager=False))
     # the driver recurrence cannot overflow int64 while den·Q does not
     # (every per-node mass and inflow stays ≤ Q); Spark's long math
     # wraps where numpy's floor division would then differ
@@ -144,14 +144,13 @@ def integer_pagerank(edges: DataFrame, src: str = "doc_id_1",
                                   F.col("__s__").alias("__d__")))
            .distinct())
     if small is not None:
-        e.unpersist()
         return _ranked(_pagerank_on_driver(und, small, iters, damping_num,
                                            damping_den), ndigits)
-    # cache: the edge list is read once per round from BOTH sides of
-    # the contribution join — uncached, every round re-runs the whole
+    # pinned: the edge list is read once per round from BOTH sides of
+    # the contribution join — unpinned, every round re-runs the whole
     # upstream pair pipeline (a MinHash LSH edge source re-banded the
     # corpus per round: 132s → 9s measured at sf0.01)
-    und = und.cache()
+    und = und.localCheckpoint(eager=False)
     deg = und.groupBy("__s__").agg(F.count(F.lit(1)).alias("__deg__"))
     n_nodes = deg.groupBy().agg(
         F.count(F.lit(1)).alias("n")).scalar()
@@ -237,7 +236,7 @@ def triangle_count(edges: DataFrame, src: str = "doc_id_1",
     e = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
                       F.greatest(F.col(src), F.col(dst)).alias("b"))
          .filter(F.col("a") != F.col("b"))
-         .distinct().cache())
+         .distinct().localCheckpoint(eager=False))
     wedge = (e.alias("x").join(e.alias("y"),
                                F.col("x.b") == F.col("y.a"))
              .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"),

@@ -262,10 +262,9 @@ def driver_table(df: DataFrame):
     and at most :func:`driver_budget_bytes`. Rows too wide for
     ``spark.driver.maxResultSize`` (default 1g) abort the fetch; that
     is a refusal too. A refused frame costs that one probe and its
-    caller keeps its Spark path. The probe still computes every
-    partition of ``df``, so the graph loops, which read their edges
-    again after a refusal, cache them first and the probe's work fills
-    the cache."""
+    caller keeps its Spark path. The graph loops, which read their
+    edges again after a refusal, checkpoint them lazily first: the
+    probe job then fills every partition of the checkpoint."""
     try:
         t = df.limit(DRIVER_MAX_ROWS + 1).toArrow()
     except (PySparkException, Py4JJavaError) as ex:

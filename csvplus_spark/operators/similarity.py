@@ -1274,13 +1274,12 @@ def kcenter_select(df: DataFrame, k: int = 8, id_col: str = "vec_id",
     batch variants (k-center with per-round multi-pick) trade
     approximation for fewer passes — out of scope here.
     """
-    # r13 (guide §2.5): fan out before caching — every round's d² folds
-    # read the cached partitions, which otherwise mirror the 1-2
+    # r13 (guide §2.5): fan out before pinning — every round's d² folds
+    # read the pinned partitions, which otherwise mirror the 1-2
     # row-group scan (see seed_voronoi_distances)
     v = (with_double_vec(df.select(id_col, vec_col))
          .select(F.col(id_col).alias("vid"), F.col("__vec__").alias("e"))
-         .transform(keyed_fan_out, "vid")
-         .cache())
+         .transform(keyed_fan_out, "vid").localCheckpoint(eager=False))
     c = (v.orderBy("vid").limit(1)
          .select(F.col("vid").alias("cid"), F.col("e").alias("ce")))
     outs = [c.select(F.lit(0).cast("int").alias("sel_order"),

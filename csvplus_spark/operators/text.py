@@ -1420,10 +1420,10 @@ def dsir_logweights(df: DataFrame, target: Column,
         F.struct(F.lit(0).alias("kind"), F.col("term").alias("feat")),
         F.struct(F.lit(1).alias("kind"),
                  F.concat_ws(" ", "__prev__", "term").alias("feat")))
-    # cache: the feature stream feeds BOTH the bucket-count aggregate
-    # and the per-doc scoring join — uncached, each reference re-runs
-    # tokenize+explode+lag (A/B at sf0.1: 3.2s → 2.3s warm, and the
-    # cache is per-partition distributed state, not driver memory;
+    # pinned: the feature stream feeds BOTH the bucket-count aggregate
+    # and the per-doc scoring join — unpinned, each reference re-runs
+    # tokenize+explode+lag (cache A/B at sf0.1: 3.2s → 2.3s warm; the
+    # checkpoint is per-partition distributed state, not driver memory;
     # same convention as minhash's shared shingle table)
     feats = (
         tok.withColumn("__prev__", F.lag("term").over(w))
@@ -1431,23 +1431,23 @@ def dsir_logweights(df: DataFrame, target: Column,
                 F.explode(F.when(F.col("__prev__").isNotNull(), pair)
                           .otherwise(F.slice(pair, 1, 1))).alias("__f__"))
         # r13 (guide §2.2, project early): bucket the feature string
-        # BEFORE the cache and never materialize it — every consumer
-        # reads only __b__, and the raw feat strings were the widest
-        # column in the cached stream
+        # BEFORE the checkpoint and never materialize it — every
+        # consumer reads only __b__, and the raw feat strings were the
+        # widest column in the pinned stream
         .select(F.col(id_col), "__tgt__", "pos",
                 F.col("__f__")["kind"].alias("kind"),
                 F.pmod(hash60(F.col("__f__")["feat"]), F.lit(n_buckets))
                 .alias("__b__"))
-        .cache())
+        .localCheckpoint(eager=False))
     # ONE pass over the feature stream: raw + target counts per bucket
     # in the same map-combined aggregate; the totals are then scalar
     # subqueries over the ≤n_buckets-row count table, NOT re-scans
     # r13 (guide §2.4): the bucket-count table is ≤n_buckets rows but
     # feeds THREE consumers (model join + the two total scalars), and
     # scalar subqueries run outside exchange-reuse scope — uncheck-
-    # pointed, each total re-scans the cached exploded corpus. The
+    # pointed, each total re-scans the pinned exploded corpus. The
     # checkpoint makes the totals read ≤n_buckets rows instead: passes
-    # over the (cached) feature stream drop 4 → 2.
+    # over the (pinned) feature stream drop 4 → 2.
     cts = feats.filter(F.col("__b__").isNotNull()).groupBy("__b__").agg(
         F.count(F.lit(1)).alias("__cr__"),
         F.sum(F.when(F.col("__tgt__"), 1).otherwise(0)).alias("__ct__")) \

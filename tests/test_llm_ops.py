@@ -1,6 +1,11 @@
 """LLM-pipeline operators: text analysis, dedup family, similarity."""
 
+import gc
 import math
+import os
+import pathlib
+import re
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,6 +36,30 @@ def graph_paths(monkeypatch):
             monkeypatch.setattr(scanprobe, "DRIVER_MAX_ROWS", limit)
             yield name
     return paths
+
+
+def _persisted(spark) -> set:
+    """Ids of the RDDs the session holds persisted blocks for."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _leftover(spark, before: set, timeout_s: float = 30.0) -> set:
+    """Persisted RDDs outside ``before`` once Python and the JVM have
+    collected their garbage, so Spark's ContextCleaner can free the
+    blocks of every checkpoint no live frame reads; polls up to
+    ``timeout_s``. Each poll runs a one-row job first: the RDD graph of
+    the last job run can stay reachable inside Spark until a later job
+    runs (seen after triangle_count). Empty when the persisted set is
+    back at its baseline."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        spark.range(1).count()
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        left = _persisted(spark) - before
+        if not left or time.monotonic() > deadline:
+            return left
+        time.sleep(0.25)
 
 
 def test_text_stats_values(spark):
@@ -2349,8 +2378,8 @@ def test_graph_paths_identical_on_edge_cases(spark, graph_paths):
     list, self-loops only, a NULL endpoint, isolated ``nodes=`` ids,
     int32 and mixed int32/int64 ids (the rest are int64), string ids,
     non-nullable columns and a chain longer than max_iter rounds could
-    cover without pointer jumping. The driver path leaves nothing
-    persisted."""
+    cover without pointer jumping. Neither path leaves anything
+    persisted once its results are dropped."""
     from csvplus_spark.operators.dedup import _cc_min_label, dup_clusters
     from csvplus_spark.operators.graph import integer_pagerank
 
@@ -2379,18 +2408,15 @@ def test_graph_paths_identical_on_edge_cases(spark, graph_paths):
     ops += [("cc/nodes", lambda e: _cc_min_label(e, nodes), sym),
             ("pr0/int32", lambda e: integer_pagerank(e, iters=0),
              inputs["int32"])]
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
     results = {}
     for path in graph_paths():
-        before = persisted()
+        before = _persisted(spark)
         for key, fn, e in ops:
             out = fn(e)
             results.setdefault(key, []).append(
                 (out.schema, sorted(map(tuple, out.collect()), key=repr)))
-        if path == "driver":  # the probe's cache is dropped again
-            assert persisted() <= before
+        del out
+        assert not _leftover(spark, before), path
     for key, (driver, distributed) in results.items():
         assert driver == distributed, key
     assert results["cc/nodes"][0][1] == sorted(
@@ -2400,6 +2426,71 @@ def test_graph_paths_identical_on_edge_cases(spark, graph_paths):
     assert results["cc/chain"][0][1] == sorted(
         [(i, 0) for i in range(61)], key=repr)
     assert results["pr/empty"][0][1] == []
+
+
+def test_operators_leave_no_cache_entry(spark, graph_paths, sf_dir):
+    """No operator registers a plan with Spark's CacheManager, which
+    holds it for the whole session: every intermediate an operator
+    reuses is a lazy local checkpoint, freed by the ContextCleaner once
+    no frame reads it. On sf0.01 and on both CC / PageRank paths, each
+    operator that used to cache leaves the CacheManager empty, and the
+    persisted-RDD set is back at its baseline once its result is
+    dropped and garbage-collected."""
+    from csvplus_spark.operators.dedup import (dup_clusters,
+                                               dup_clusters_collapsed,
+                                               minhash_join)
+    from csvplus_spark.operators.graph import (integer_pagerank,
+                                               triangle_count)
+    from csvplus_spark.operators.similarity import kcenter_select
+    from csvplus_spark.operators.text import dsir_logweights
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    docs = load_table(spark, sf, "documents").df
+    emb = load_table(spark, sf, "embeddings").df
+    # a plain edge list, so each graph operator's own reuse is checked
+    pairs = spark.createDataFrame(
+        ngram_jaccard_pairs(docs, 0.6).collect(),
+        "doc_id_1 long, doc_id_2 long, jaccard double")
+    assert pairs.count() > 0, "sf0.01 plants near-dups"
+    ops = {
+        "ngram": lambda: ngram_jaccard_pairs(docs, 0.6, hot_df=None),
+        "ngram/hot": lambda: ngram_jaccard_pairs(docs, 0.6, hot_df=3),
+        "minhash": lambda: minhash_dedup_pairs(docs, 0.6),
+        "minhash/collapse": lambda: minhash_dedup_pairs(docs, 0.6,
+                                                        collapse=True),
+        "dup_clusters": lambda: dup_clusters(pairs),
+        "dup_clusters_collapsed": lambda: dup_clusters_collapsed(docs),
+        "minhash_join": lambda: minhash_join(
+            docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")),
+        "integer_pagerank": lambda: integer_pagerank(pairs),
+        "triangle_count": lambda: triangle_count(pairs),
+        "kcenter_select": lambda: kcenter_select(emb, k=4),
+        "dsir_logweights": lambda: dsir_logweights(
+            docs, F.col("lang") == "en", n_buckets=1000),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # another test's explicit cache() is not ours
+    for path in graph_paths():
+        for name, op in ops.items():
+            before = _persisted(spark)
+            op().collect()
+            assert cache.isEmpty(), (path, name)
+            assert not _leftover(spark, before), (path, name)
+
+
+def test_operators_reuse_only_lazy_checkpoints():
+    """One mechanism reuses an intermediate inside the library: a lazy
+    local checkpoint. The operators and the driver entry module hold no
+    cache(), persist() or unpersist() call; ``Frame.cache()`` stays the
+    user's own opt-in."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    srcs = sorted((root / "csvplus_spark" / "operators").rglob("*.py"))
+    srcs.append(root / "__spark_entry__.py")
+    banned = re.compile(r"\.cache\(\)|\.persist\(|unpersist")
+    hits = [f"{p.name}:{n}" for p in srcs
+            for n, line in enumerate(p.read_text().splitlines(), 1)
+            if banned.search(line)]
+    assert hits == []
 
 
 def test_triangle_count_exact(spark):
@@ -2507,7 +2598,7 @@ def test_leakage_safe_split_never_straddles(spark, sf_dir):
     from csvplus_spark.operators.sampling import leakage_safe_split
 
     docs = load_table(spark, sf_dir, "documents").df
-    pairs = ngram_jaccard_pairs(docs, 0.6).cache()
+    pairs = ngram_jaccard_pairs(docs, 0.6).localCheckpoint(eager=False)
     out = leakage_safe_split(docs, dup_clusters(pairs))
     split_of = {r["doc_id"]: r["split"] for r in out.collect()}
     checked = 0
@@ -2590,7 +2681,8 @@ def test_kcore_rounds_reach_fixpoint(spark, sf_dir):
     from csvplus_spark.operators.graph import kcore_peel
 
     pairs = minhash_dedup_pairs(
-        load_table(spark, sf_dir, "documents").df, 0.6).cache()
+        load_table(spark, sf_dir, "documents").df, 0.6).localCheckpoint(
+            eager=False)
     at6 = sorted(tuple(r) for r in kcore_peel(pairs, 2, 6).collect())
     at7 = sorted(tuple(r) for r in kcore_peel(pairs, 2, 7).collect())
     assert at6 and at7 == at6  # one extra peel changes nothing

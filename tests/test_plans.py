@@ -2,6 +2,8 @@
 must actually appear in the plans (pushdown, pruning, broadcast,
 partial aggregation)."""
 
+import re
+
 import __spark_entry__ as em
 
 
@@ -196,7 +198,8 @@ def test_dsir_model_broadcasts(spark, sf_dir):
     via broadcast; the per-doc fold stays an objectless hash agg."""
     p = _plan(spark, sf_dir, "dsir")
     assert "BroadcastHashJoin" in p
-    assert "InMemoryTableScan" in p  # cached feature stream reused
+    # the feature stream is read back from its lazy local checkpoint
+    assert re.search(r"Scan ExistingRDD\[[^\]]*__tgt__", p)
 
 
 def test_weighted_sample_no_data_sized_window(spark, sf_dir):
