@@ -6426,7 +6426,7 @@ def q_minhash_calibration(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").df
     ex = shingle_pairs(docs).localCheckpoint(eager=False)  # one shingle pass
     sigs = minhash_signatures(docs, 32, pairs=ex).localCheckpoint(eager=False)
-    bands = minhash_bands(docs, 32, 2, pairs=ex)
+    bands = minhash_bands(sigs, 2)
     cand = (bands.alias("a")
             .join(bands.alias("b"),
                   (F.col("a.band") == F.col("b.band"))

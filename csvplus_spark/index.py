@@ -224,8 +224,13 @@ class Index:
         cond = None
         for col, val in zip(self.columns, self._as_keys(values)):
             if isinstance(val, int) and not -(1 << 63) <= val < 1 << 63:
-                val = Decimal(val)  # past int64: Spark's coercion decides
-            c = self._key(col) == F.lit(val)
+                # past int64: Spark's coercion decides; past DECIMAL(38),
+                # Spark's widest, the value equals no integral or
+                # decimal key (a float key is looked up by a float)
+                c = (self._key(col) == F.lit(Decimal(val))
+                     if abs(val) < 10 ** 38 else F.lit(False))
+            else:
+                c = self._key(col) == F.lit(val)
             cond = c if cond is None else (cond & c)
         return self.frame.df if cond is None else self.frame.df.filter(cond)
 

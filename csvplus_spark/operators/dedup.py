@@ -396,15 +396,14 @@ def minhash_signatures(
     return ex.groupBy("__id__").agg(*aggs)
 
 
-def minhash_bands(df: DataFrame, num_hashes: int = 32, rows_per_band: int = 2,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  pairs: DataFrame | None = None) -> DataFrame:
-    """LSH band table (id, band, sig array): docs agreeing on ALL rows
-    of any band are candidates. The S-curve P(cand) = 1-(1-J^r)^b —
-    r=2, b=16 keeps misses ~1e-7 at J≥0.8 while background-similarity
-    false candidates (~J²) stay near zero."""
-    per_doc = minhash_signatures(df, num_hashes, text_col, id_col, pairs=pairs)
-    n_bands = num_hashes // rows_per_band
+def minhash_bands(sigs: DataFrame, rows_per_band: int = 2) -> DataFrame:
+    """LSH band table (id, band, sig array) of the
+    :func:`minhash_signatures` table ``sigs``, whose signature columns
+    give the hash count: docs agreeing on ALL rows of any band are
+    candidates. The S-curve P(cand) = 1-(1-J^r)^b — r=2, b=16 keeps
+    misses ~1e-7 at J≥0.8 while background-similarity false candidates
+    (~J²) stay near zero."""
+    n_bands = (len(sigs.columns) - 1) // rows_per_band
     bands = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -414,7 +413,7 @@ def minhash_bands(df: DataFrame, num_hashes: int = 32, rows_per_band: int = 2,
         for b in range(n_bands)
     ])
     return (
-        per_doc.select("__id__", F.explode(bands).alias("b"))
+        sigs.select("__id__", F.explode(bands).alias("b"))
         .select(F.col("__id__").alias("id"),
                 F.col("b.band").alias("band"), F.col("b.sig").alias("sig"))
     )
@@ -551,8 +550,8 @@ def minhash_dedup_pairs(
     # (pinned only when built here, as in _ngram_pairs)
     ex = (shingles if shingles is not None else shingle_pairs(
         df, text_col, id_col).localCheckpoint(eager=False))
-    bands = minhash_bands(df, num_hashes, rows_per_band, text_col, id_col,
-                          pairs=ex).localCheckpoint(eager=False)
+    bands = minhash_bands(minhash_signatures(df, num_hashes, pairs=ex),
+                          rows_per_band).localCheckpoint(eager=False)
     if hot_band_cap is not None:
         cand = _band_pairs_triangle(
             bands, hot_band_cap, hot_band_splits).distinct()
@@ -705,10 +704,9 @@ def _collapsed_text_pairs(df: DataFrame, text_col: str, id_col: str,
 def _vector_fp(id_col: str) -> F.Column:
     """The exact-duplicate fingerprint of a ``(id_col, __vec__)`` row:
     the md5 of the exact double-array rendering when the row is
-    COLLAPSIBLE, else a unique ``z:id`` that keeps it a singleton,
-    exactly as on the plain path, where its pairwise sim never links
-    it. A row is collapsible only when its squared norm is a finite
-    positive number:
+    COLLAPSIBLE, else a unique ``z:id`` that keeps it a singleton, run
+    exactly as on the plain path. A row is collapsible only when its
+    squared norm is a finite positive number:
       * sq is NULL for a NULL vector AND for a vector containing a
         NULL element (the fold propagates it), and their pairwise
         cosine is NULL (r8 review: the earlier ``isNull | sq==0``
@@ -716,11 +714,14 @@ def _vector_fp(id_col: str) -> F.Column:
         to the md5 branch, merging them and breaking byte-identity);
       * zero-norm vectors have a NULL cosine in both engines;
       * NaN / Inf vectors (r13 ADVICE): Spark orders NaN above every
-        double, so ``sq > 0`` alone admits them, and their intra-group
-        self-sim (NaN) would pass a Spark-side ``sim >= threshold``
-        filter while embedding_near_pairs' uncollapsed NumPy prefilter
-        drops those pairs — ``sq < inf`` is false for both NaN
-        (ordered greatest) and Inf."""
+        double, so ``sq > 0`` alone admits them; ``sq < inf`` is false
+        for both NaN (ordered greatest) and Inf. Their cosine is NaN
+        (NULL against a vector with a NULL), and NaN passes
+        ``sim >= threshold`` on every path (the BLAS candidates keep
+        NaN for the exact rescore), so a collapse would link them as
+        the plain path does — the guard keeps them singletons anyway,
+        so the collapse's identity argument covers finite vectors only
+        and rests on no NaN ordering."""
     from .similarity import _sq_norm
 
     sq = _sq_norm(F.col("__vec__"))
@@ -754,13 +755,14 @@ def semantic_dedup(
     centroids (``ivf_build``) without changing any downstream shape.
 
     Scale: centroids broadcast (n_cells rows), assignment is narrow,
-    and the within-cell comparison is one BLAS matmul per cell inside
-    a grouped applyInPandas (Arrow transfer) with an exact fold-cosine
-    rescore of the survivors — per-cell cost is |cell|², the paper's
-    own design point (cells per corpus grow with n so |cell| stays
-    bounded; LAION-scale runs use ~11k cells). CC is the shared
-    HashToMin + pointer-jump loop. No all-pairs, no driver state
-    beyond the n_cells seed collect.
+    and the within-cell comparison is similarity's BLAS candidate
+    kernel per cell inside a grouped applyInPandas (Arrow transfer)
+    with its exact rescore of the candidates (the recipe and its
+    margin rule are in similarity's module docstring) — per-cell cost
+    is |cell|², the paper's own design point (cells per corpus grow
+    with n so |cell| stays bounded; LAION-scale runs use ~11k cells).
+    CC is the shared HashToMin + pointer-jump loop. No all-pairs, no
+    driver state beyond the n_cells seed collect.
 
     ``n_cells=None`` (default) sizes the cells from a one-column
     corpus count (``auto_n_cells``: ceil(n/4096), floor 16) so the
@@ -788,10 +790,8 @@ def semantic_dedup(
     self-cosine can fall below such a threshold, so group-clique
     membership is no longer guaranteed).
     """
-    from pyspark.sql import Window
-
-    from .similarity import (auto_n_cells, cosine, seed_voronoi_distances,
-                             with_double_vec)
+    from .similarity import (_near_candidates, _rescore, auto_n_cells,
+                             seed_voronoi_distances, with_double_vec)
 
     v = with_double_vec(emb, vec_col).select(F.col(id_col), F.col("__vec__"))
     if n_cells is None:
@@ -819,50 +819,19 @@ def semantic_dedup(
     assign = ad.select(
         F.col(id_col).alias("__sid__"), F.col("__vec__"),
         F.array_min(F.col("__ds__"))["cell"].alias("cell"))
-    # per-cell BLAS prefilter + exact fold rescore (the grid pattern):
-    # one numpy matmul per cell replaces |cell|² interpreted fold
-    # cosines (measured 69s → seconds at 20k vectors); the 1e-6 margin
-    # dwarfs BLAS-vs-fold summation differences (~1e-14), and the
-    # rescore uses the SAME fold as the oracle, so the kept pair set
-    # is bit-identical to the plain self-join form
-    margin = 1e-6
+    # per-cell BLAS candidates + exact rescore (similarity's shared
+    # recipe): one numpy matmul per cell replaces |cell|² interpreted
+    # fold cosines (measured 69s → seconds at 20k vectors)
     id_dt = emb.schema[id_col].dataType.simpleString()
 
     def _cell(pdf):
-        import numpy as np
-        import pandas as pd
+        return _near_candidates(threshold, (pdf["__sid__"], pdf["__vec__"]))
 
-        # a NULL vector has a NULL cosine to every vector (never a
-        # pair) and cannot be stacked
-        pdf = pdf[pdf["__vec__"].notna()]
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_1": pd.Series(dtype=object),
-                                 "id_2": pd.Series(dtype=object)})
-        A = np.stack(pdf["__vec__"].to_numpy())
-        with np.errstate(divide="ignore", invalid="ignore"):
-            n = np.linalg.norm(A, axis=1)
-            S = (A @ A.T) / np.outer(n, n)
-        # complement filter (`NOT (S < t)`) so degenerate entries are
-        # DEFERRED to the exact rescore rather than decided here: a
-        # zero-norm (failed-embedding) pair is NaN in numpy but NULL
-        # in both Spark and DuckDB (0.0/0.0), and the engines' final
-        # `sim >= t` drops NULL — the prefilter must never be the
-        # place where float-edge semantics are decided
-        ii, jj = np.nonzero(~(S < threshold - margin))
-        keep = ii < jj
-        ids = pdf["__sid__"].to_numpy()
-        return pd.DataFrame({"id_1": ids[ii[keep]], "id_2": ids[jj[keep]]})
-
-    cand = (assign.groupBy("cell")
-            .applyInPandas(_cell, f"id_1 {id_dt}, id_2 {id_dt}"))
-    v1 = work.select(F.col(id_col).alias("id_1"),
-                     F.col("__vec__").alias("__v1__"))
-    v2 = work.select(F.col(id_col).alias("id_2"),
-                     F.col("__vec__").alias("__v2__"))
+    cand = assign.groupBy("cell").applyInPandas(
+        _cell, f"id_1 {id_dt}, id_2 {id_dt}")
     pairs = (
-        cand.join(v1, "id_1").join(v2, "id_2")
-        .withColumn("__sim__", cosine(F.col("__v1__"), F.col("__v2__")))
-        .filter(F.col("__sim__") >= threshold)
+        _rescore(cand, work)
+        .filter(F.col("sim") >= threshold)
         .select(F.col("id_1").alias("doc_id_1"),
                 F.col("id_2").alias("doc_id_2"))
     )
@@ -983,9 +952,8 @@ def semantic_contamination(
     each with an exact fold-cosine rescore, so values are
     bit-reproducible by a SQL oracle; nothing quadratic materializes
     and neither side is ever broadcast whole. Zero-norm BENCH vectors
-    are dropped up front: their cosine is undefined (NaN) and a NaN
-    column would poison grid_topk's per-cell k-th-value prefilter for
-    every train vector sharing the cell.
+    are dropped up front: their cosine is undefined, so they can
+    contaminate nothing.
 
     Only bench vectors whose squared norm is a positive finite number
     take part. This differs from the SQL oracle
@@ -996,9 +964,8 @@ def semantic_contamination(
     DuckDB's ``list_sum`` skips the NULL term and scores the vector over
     its other elements. A NaN or an Inf element makes every cosine NaN:
     the oracle keeps the vector and its MAX returns NaN (flagged) for
-    every train vector, while here, like a zero vector, it would poison
-    grid_topk's prefilter for the train vectors sharing its cell (they
-    came back NULL), so it is dropped.
+    every train vector, while here it is dropped, as a vector with no
+    defined similarity to anything, like a zero vector.
     """
     from .similarity import _sq_norm, grid_topk, with_double_vec
 
@@ -1382,13 +1349,16 @@ def embedding_near_pairs(
     byte-identical to the uncollapsed form at any duplication factor,
     while candidate volume drops from O((n·f)²) to O(n²) +
     output-sized expansion — at duplication factor f the per-pair
-    shuffle and fold work shrinks by f². Non-FINITE-norm vectors (NULL
-    / NULL-element / zero-norm / NaN / Inf) never collapse: their
-    pairwise sim is NULL or NaN in the plain path's NumPy prefilter
-    and never links them, so they must stay singletons (r13 ADVICE —
-    Spark orders NaN above every double, so a bare ``sq > 0`` guard
-    admitted them). ``grid_jvm`` stays uncollapsed as the independent
-    reference form the parity tests check the collapsed paths against.
+    shuffle and fold work shrinks by f². Vectors without a finite
+    positive norm (NULL / NULL-element / zero-norm / NaN / Inf) never
+    collapse (see _vector_fp). ``grid_jvm`` stays uncollapsed as the
+    independent reference form the parity tests check the collapsed
+    paths against.
+
+    ``grid`` and ``lsh`` score their blocks with similarity's BLAS
+    candidate kernel and exact rescore (its module docstring), so
+    their pairs and sims — NaN ones included — are those of
+    ``grid_jvm`` and ``allpairs``; ``lsh`` may only miss pairs.
 
     ``collapse=None`` (auto, r14): the fingerprint/membership
     machinery costs two checkpoints and a groupBy that are pure
@@ -1398,7 +1368,8 @@ def embedding_near_pairs(
     see scanprobe). Either way the output is identical — pinned by
     test_embedding_collapsed_identity.
     """
-    from .similarity import cosine, hyperplane_bits, with_double_vec
+    from .similarity import (_near_candidates, _rescore, cosine,
+                             hyperplane_bits, with_double_vec)
 
     # r13 (guide §2.5): fan out before the per-vector hyperplane /
     # grid-cell folds — the embeddings parquet reads as 1-2 row groups
@@ -1471,76 +1442,31 @@ def embedding_near_pairs(
                     F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
             .localCheckpoint()
         )
-        # per-BUCKET BLAS prefilter, exact rescore (the grid path's
-        # margin trick applied to LSH): each (tbl, bucket) group scores
-        # ALL its pairs in one numpy matmul, so vectors ship once per
-        # bucket MEMBERSHIP (n_tables rows/vec) instead of once per
+        # per-BUCKET BLAS candidates, exact rescore (similarity's
+        # shared recipe): each (tbl, bucket) group scores ALL its pairs
+        # in one numpy matmul, so vectors ship once per bucket
+        # MEMBERSHIP (n_tables rows/vec) instead of once per
         # CANDIDATE. On template corpora where candidates approach a
         # constant fraction of all pairs (measured 41% at sf0.1), the
         # old shape — candidate-id joins pulling both vectors, then one
         # interpreted fold per pair — shuffled |cand|·2·dim doubles and
         # ran |cand| interpreted folds; this shape's shuffle is
-        # n·n_tables vector rows and the folds run only on survivors
-        # within margin of the threshold (output-sized). The margin
-        # (1e-6) dwarfs BLAS-vs-fold summation differences (~1e-14
-        # relative at dim 64); survivors are rescored with the SAME
-        # left-fold cosine as the oracle, so output values stay
-        # bit-identical. Per-task memory is bounded by the row-block
-        # loop; a pathological hot bucket still costs |bucket|² BLAS
-        # compute — inherent to LSH candidate volume, not this layout.
-        margin = 1e-6
+        # n·n_tables vector rows and the folds run only on the
+        # candidates (output-sized). A pathological hot bucket still
+        # costs |bucket|² BLAS compute — inherent to LSH candidate
+        # volume, not this layout.
         id_dt = v.schema[id_col].dataType.simpleString()
-        gv = bt.join(v.select(F.col(id_col), "__vec__"), id_col)
 
         def _bucket(pdf):
-            import numpy as np
-            import pandas as pd
-
-            pdf = pdf[pdf["__vec__"].notna()]  # as in the grid _cell
-            A = (np.stack(pdf["__vec__"].to_numpy()) if len(pdf)
-                 else np.zeros((0, 0)))
-            ids = pdf[id_col].to_numpy()
-            nrm = np.linalg.norm(A, axis=1)
-            o1, o2 = [], []
-            blk = 4096
-            for s in range(0, len(A), blk):
-                S = (A[s:s + blk] @ A.T) / np.outer(nrm[s:s + blk], nrm)
-                ii, jj = np.nonzero(S >= threshold - margin)
-                ii = ii + s
-                keep = ii < jj
-                o1.append(ids[ii[keep]])
-                o2.append(ids[jj[keep]])
-            id1 = np.concatenate(o1) if o1 else np.array([], dtype=ids.dtype)
-            id2 = np.concatenate(o2) if o2 else np.array([], dtype=ids.dtype)
-            return pd.DataFrame({"id_1": np.minimum(id1, id2),
-                                 "id_2": np.maximum(id1, id2)})
+            return _near_candidates(threshold, (pdf[id_col], pdf["__vec__"]))
 
         cand = (
-            gv.groupBy("tbl", "bucket")
+            bt.join(v.select(F.col(id_col), "__vec__"), id_col)
+            .groupBy("tbl", "bucket")
             .applyInPandas(_bucket, f"id_1 {id_dt}, id_2 {id_dt}")
             .distinct()
         )
-        # norms are per-VECTOR, not per-pair: fold them once over the n
-        # input rows and carry the scalar through the joins, so the
-        # exact rescore does ONE interpreted fold per survivor (the dot)
-        # — sim = dot/(n1*n2) is the same expression shape as cosine()
-        # and the oracle, so values stay bit-identical
-        from .similarity import _dot, _norm
-
-        vn = v.withColumn("__nrm__", _norm(F.col("__vec__")))
-        v1 = vn.select(F.col(id_col).alias("id_1"),
-                       F.col("__vec__").alias("__v1__"),
-                       F.col("__nrm__").alias("__n1__"))
-        v2 = vn.select(F.col(id_col).alias("id_2"),
-                       F.col("__vec__").alias("__v2__"),
-                       F.col("__nrm__").alias("__n2__"))
-        rp = (
-            cand.join(v1, "id_1").join(v2, "id_2")
-            .withColumn("sim", _dot(F.col("__v1__"), F.col("__v2__"))
-                        / (F.col("__n1__") * F.col("__n2__")))
-            .filter(F.col("sim") >= threshold)
-            .select("id_1", "id_2", "sim")
-        )
+        rp = _rescore(cand, v).filter(F.col("sim") >= threshold)
         return expand(rp)
 
     if method not in ("grid", "grid_jvm"):
@@ -1586,58 +1512,25 @@ def embedding_near_pairs(
                     F.greatest("__id1__", "__id2__").alias("id_2"), "sim")
         )
 
-    # grid (default): per-cell BLAS prefilter, exact rescore.
-    # Each grid cell's |bi|×|bj| similarity matrix is one numpy matmul
-    # inside a cogrouped applyInPandas (Arrow transfer, ~100× the
-    # throughput of per-pair interpreted folds). The prefilter keeps
-    # pairs at >= threshold − margin, where the margin (1e-6) dwarfs
-    # the worst-case difference between BLAS pairwise summation and the
-    # left-fold dot product (~1e-14 relative at dim 64); survivors are
-    # then rescored with the SAME fold-based cosine as the JVM path and
-    # filtered exactly, so the output — values included — is
-    # bit-identical to grid_jvm and the DuckDB oracle.
-    margin = 1e-6
+    # grid (default): each grid cell's |bi|×|bj| block is scored by
+    # similarity's BLAS kernel inside a cogrouped applyInPandas (Arrow
+    # transfer, ~100× the throughput of per-pair interpreted folds),
+    # and the exact rescore makes the output — values included —
+    # bit-identical to grid_jvm and the DuckDB oracle
     id_dt = v.schema[id_col].dataType.simpleString()
 
     def _cell(key, lpdf, rpdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({"id_1": pd.Series(dtype=object),
-                              "id_2": pd.Series(dtype=object)})
-        # a NULL vector has a NULL cosine to every vector (never a
-        # pair) and cannot be stacked
-        lpdf = lpdf[lpdf["__v1__"].notna()]
-        rpdf = rpdf[rpdf["__v2__"].notna()]
-        if not len(lpdf) or not len(rpdf):
-            return empty
-        A = np.stack(lpdf["__v1__"].to_numpy())
-        B = np.stack(rpdf["__v2__"].to_numpy())
-        S = (A @ B.T) / np.outer(np.linalg.norm(A, axis=1),
-                                 np.linalg.norm(B, axis=1))
-        ii, jj = np.nonzero(S >= threshold - margin)
-        id1 = lpdf["__id1__"].to_numpy()[ii]
-        id2 = rpdf["__id2__"].to_numpy()[jj]
-        if key[0] == key[1]:  # diagonal cell: same vectors on both sides
-            keep = id1 < id2
-            id1, id2 = id1[keep], id2[keep]
-        else:  # disjoint blocks: normalize orientation
-            id1, id2 = np.minimum(id1, id2), np.maximum(id1, id2)
-        return pd.DataFrame({"id_1": id1, "id_2": id2})
+        # a diagonal cell holds the same vectors on both sides
+        return _near_candidates(
+            threshold, (lpdf["__id1__"], lpdf["__v1__"]),
+            None if key[0] == key[1] else (rpdf["__id2__"], rpdf["__v2__"]))
 
     cand = (
         left.groupBy("bi", "bj")
         .cogroup(right.groupBy("bi", "bj"))
         .applyInPandas(_cell, f"id_1 {id_dt}, id_2 {id_dt}")
     )
-    v1 = v.select(F.col(id_col).alias("id_1"), F.col("__vec__").alias("__v1__"))
-    v2 = v.select(F.col(id_col).alias("id_2"), F.col("__vec__").alias("__v2__"))
-    rp = (
-        cand.join(v1, "id_1").join(v2, "id_2")
-        .withColumn("sim", cosine(F.col("__v1__"), F.col("__v2__")))
-        .filter(F.col("sim") >= threshold)
-        .select("id_1", "id_2", "sim")
-    )
+    rp = _rescore(cand, v).filter(F.col("sim") >= threshold)
     return expand(rp)
 
 
@@ -1896,10 +1789,9 @@ def minhash_join(left: DataFrame, right: DataFrame,
     # partitioned by id — no fan-out (see shingle_pairs)
     exl, exr = (shingle_pairs(side, text_col, id_col, fan_out=not collapse)
                 .localCheckpoint(eager=False) for side in (left, right))
-    bl = minhash_bands(left, num_hashes, rows_per_band, text_col,
-                       id_col, pairs=exl)
-    br = minhash_bands(right, num_hashes, rows_per_band, text_col,
-                       id_col, pairs=exr)
+    bl, br = (minhash_bands(minhash_signatures(side, num_hashes, pairs=ex),
+                            rows_per_band)
+              for side, ex in ((left, exl), (right, exr)))
     cand = (
         bl.alias("a")
         .join(br.alias("b"),

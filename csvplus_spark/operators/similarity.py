@@ -24,6 +24,21 @@ Search is exact (``brute_force_topk`` for a broadcast query batch,
 ``grid_topk`` for large batches) or approximate: sign-LSH, IVF and
 two-level IVF candidates are exact-reranked with ``cosine``; PQ ranks
 by asymmetric ``_d2`` distances to the codebook.
+
+Every BLAS-scored search — ``grid_topk`` and, in dedup.py,
+``semantic_dedup`` and ``embedding_near_pairs`` (``grid``, ``lsh``) —
+is one candidate-then-exact-verify recipe:
+  * ``_cosine_candidates`` scores the non-NULL vectors of two blocks
+    with one NumPy matmul per ``_BLAS_ROWS`` left rows and keeps the
+    pairs a rule passes. The threshold rule (``_near_candidates``)
+    keeps a pair unless its BLAS cosine is ``< threshold −
+    COSINE_MARGIN``, so every NaN goes on; ``grid_topk`` keeps each
+    row's pairs within 2·``COSINE_MARGIN`` of its k-th finite BLAS
+    cosine, plus every non-finite one;
+  * ``_rescore`` is the exact verify, ``cosine`` bit for bit at one
+    fold per candidate. It alone decides every kept pair, NaN and
+    NULL included, as the fold-cosine reference forms and the DuckDB
+    oracle do.
 """
 
 from __future__ import annotations
@@ -117,6 +132,85 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
 def cosine(a, b) -> F.Column:
     """Cosine similarity of two float-array columns (double math)."""
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+#: how far below its cut a BLAS cosine may fall and stay a candidate:
+#: pairwise BLAS sums and the left fold of ``_dot`` / ``_norm`` differ
+#: by ~1e-14 relative at dim 64, so no exact answer is lost
+COSINE_MARGIN = 1e-6
+
+#: left rows per matmul in ``_cosine_candidates``: bounds one block's
+#: score matrix at _BLAS_ROWS × |right| doubles
+_BLAS_ROWS = 4096
+
+
+def _cosine_candidates(left, right, keep):
+    """``(left ids, right ids)`` arrays of the pairs whose BLAS cosine
+    passes ``keep(S, lids, rids)``, a boolean mask over one block
+    ``S`` of the score matrix. ``left`` and ``right`` are ``(ids,
+    vectors)`` pairs of pandas Series; NULL vectors are dropped (their
+    cosine is NULL on every path, never a pair, and they cannot be
+    stacked). A zero-norm, NaN, Inf or NULL-element vector scores NaN
+    or ±Inf here; ``keep`` decides whether the rescore sees it."""
+    import numpy as np
+
+    lm, rm = left[1].notna().to_numpy(), right[1].notna().to_numpy()
+    lids, rids = left[0].to_numpy()[lm], right[0].to_numpy()[rm]
+    if not len(lids) or not len(rids):
+        return lids[:0], rids[:0]
+    A = np.stack(left[1].to_numpy()[lm])
+    B = np.stack(right[1].to_numpy()[rm])
+    o1, o2 = [], []
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        na, nb = np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)
+        for s in range(0, len(A), _BLAS_ROWS):
+            S = (A[s:s + _BLAS_ROWS] @ B.T) / np.outer(na[s:s + _BLAS_ROWS],
+                                                       nb)
+            ii, jj = np.nonzero(keep(S, lids[s:s + _BLAS_ROWS], rids))
+            o1.append(lids[s + ii])
+            o2.append(rids[jj])
+    return np.concatenate(o1), np.concatenate(o2)
+
+
+def _near_candidates(threshold: float, left, right=None):
+    """The threshold family's candidates as a pandas ``(id_1, id_2)``
+    frame, ``id_1 < id_2``: every pair of ``left`` × ``right`` (of
+    ``left`` with itself when ``right`` is None, ids ordered) whose
+    BLAS cosine is not ``< threshold − COSINE_MARGIN``. NaN fails
+    every comparison, so it is kept and the rescore decides it: a
+    zero-norm pair, say, is NaN here but NULL in Spark and DuckDB."""
+    import numpy as np
+    import pandas as pd
+
+    cut = threshold - COSINE_MARGIN
+    i, j = _cosine_candidates(left, left if right is None else right,
+                              lambda S, li, rj: ~(S < cut))
+    if right is None:  # each unordered pair once, and no self-pair
+        keep = i < j
+        i, j = i[keep], j[keep]
+    return pd.DataFrame({"id_1": np.minimum(i, j), "id_2": np.maximum(i, j)})
+
+
+def _rescore(cand: DataFrame, left: DataFrame,
+             right: DataFrame | None = None) -> DataFrame:
+    """``cand``'s two id columns plus ``sim``, the exact cosine of each
+    pair. ``left`` (and ``right``, default ``left``) is an ``(id,
+    vector)`` frame joined on cand's first (second) column. Norms are
+    per vector, folded once per input row, so a candidate costs ONE
+    fold, the dot; ``_dot / (n1 * n2)`` is :func:`cosine`'s expression,
+    so the values are its values bit for bit."""
+    c1, c2 = cand.columns
+
+    def side(df: DataFrame, c: str, i: int) -> DataFrame:
+        idc, vec = df.columns
+        return df.select(F.col(idc).alias(c), F.col(vec).alias(f"__v{i}__"),
+                         _norm(F.col(vec)).alias(f"__n{i}__"))
+
+    return (cand.join(side(left, c1, 1), c1)
+            .join(side(left if right is None else right, c2, 2), c2)
+            .select(c1, c2, (_dot(F.col("__v1__"), F.col("__v2__"))
+                             / (F.col("__n1__") * F.col("__n2__")))
+                    .alias("sim")))
 
 
 def with_double_vec(df: DataFrame, vec_col: str = "embedding",
@@ -726,24 +820,20 @@ def grid_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
               exclude_self: bool = True,
               n_blocks: int | None = None) -> DataFrame:
     """Exact cosine top-k for LARGE query batches — output identical
-    to brute_force_topk (columns, values, tie order), different
-    physical plan.
+    to brute_force_topk (columns, values, tie order) for every non-NULL
+    query, different physical plan.
 
     brute_force_topk broadcasts the queries and scores every
     (query, corpus) pair with the interpreted fold cosine — the right
     plan for a handful of queries, but for |q| ≈ |corpus| (self-kNN,
     label propagation) the |q|·n interpreted folds dominate (measured:
-    2k×2k self-kNN 53s at sf0.1). Here scoring follows the
-    dedup_embedding grid recipe (dedup.py::embedding_near_pairs): the
-    (q-block × c-block) grid is scored per cell as ONE numpy matmul in
-    a cogrouped applyInPandas, each cell keeping a provable
-    per-query-superset of its local top-k — every pair whose BLAS sim
-    is within ``margin`` of the cell's per-query k-th BLAS sim, where
-    margin (1e-6) dwarfs the worst-case BLAS-vs-fold summation
-    difference (~1e-14 relative at dim 64). Survivors (≤ ~k per query
-    per c-block) are rescored with the SAME fold cosine as
-    brute_force_topk, so ranks, ties, and the sim VALUES are
-    bit-identical to it and to the DuckDB oracle. Equality is pinned by
+    2k×2k self-kNN 53s at sf0.1). Here the (q-block × c-block) grid is
+    scored per cell by the module's BLAS kernel in a cogrouped
+    applyInPandas, each cell keeping a provable per-query superset of
+    its local top-k (the k-th-value rule in the module docstring), and
+    the exact ``_rescore`` ranks the survivors (≤ ~k per query per
+    c-block), so ranks, ties and sim VALUES are brute_force_topk's and
+    the DuckDB oracle's. Equality is pinned by
     tests/test_llm_ops.py::test_grid_topk_matches_brute_force.
 
     Scale shape: vectors ship once per grid row/column (×√cells), each
@@ -751,11 +841,13 @@ def grid_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     final per-query window sees ≤ n_blocks·k rows — no |q|-task funnel,
     no corpus-wide broadcast.
 
-    Edge: zero-norm vectors have undefined cosine (NaN) in BOTH paths;
-    brute_force_topk would rank their NaN sims (Spark orders NaN above
-    every number), the BLAS prefilter drops them (NaN fails every
-    comparison). Filter zero vectors out first (normalize_embeddings
-    does) — neither ordering of an undefined similarity is meaningful.
+    Edge: a zero-norm, NaN or Inf vector has a non-finite BLAS cosine,
+    which the cell always keeps, so the rescore ranks its NULL or NaN
+    sim exactly as brute_force_topk does (NaN first, NULL last). A
+    NULL vector is dropped by the kernel: a NULL query gets no rows,
+    where brute_force_topk returns k rows with NULL sims, and a NULL
+    corpus vector is never a neighbor, where brute_force_topk ranks
+    its NULL sim last.
     """
     spark = queries.sparkSession
     q = with_double_vec(queries, vec_col).select(
@@ -794,42 +886,35 @@ def grid_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
         .select("corpus_id", "__cv__",
                 F.col("gq2").alias("gq"), F.col("gc2").alias("gc"))
 
-    margin = 1e-6
     qid_dt = q.schema["query_id"].dataType.simpleString()
     cid_dt = c.schema["corpus_id"].dataType.simpleString()
-    excl = exclude_self
+
+    def keep(S, qi, cj):
+        import numpy as np
+
+        if exclude_self:
+            S[qi[:, None] == cj] = -2.0
+        # the k-th value counts finite cosines only; every non-finite
+        # one is kept for the rescore to rank
+        fin = np.isfinite(S)
+        kth = (np.partition(np.where(fin, S, -np.inf), -k, axis=1)[:, -k]
+               if S.shape[1] >= k else np.full(len(S), -np.inf))
+        return ~fin | (S >= (kth - 2 * COSINE_MARGIN)[:, None])
 
     def _cell(key, lpdf, rpdf):
-        import numpy as np
         import pandas as pd
 
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame({"query_id": pd.Series(dtype=object),
-                                 "corpus_id": pd.Series(dtype=object)})
-        A = np.stack(lpdf["__qv__"].to_numpy())
-        B = np.stack(rpdf["__cv__"].to_numpy())
-        S = (A @ B.T) / np.outer(np.linalg.norm(A, axis=1),
-                                 np.linalg.norm(B, axis=1))
-        qids = lpdf["query_id"].to_numpy()
-        cids = rpdf["corpus_id"].to_numpy()
-        if excl:
-            S[qids[:, None] == cids[None, :]] = -2.0
-        if S.shape[1] > k:
-            kth = np.partition(S, -k, axis=1)[:, -k]
-        else:
-            kth = S.min(axis=1)
-        ii, jj = np.nonzero(S >= (kth - 2 * margin)[:, None])
-        return pd.DataFrame({"query_id": qids[ii], "corpus_id": cids[jj]})
+        qids, cids = _cosine_candidates((lpdf["query_id"], lpdf["__qv__"]),
+                                        (rpdf["corpus_id"], rpdf["__cv__"]),
+                                        keep)
+        return pd.DataFrame({"query_id": qids, "corpus_id": cids})
 
     cand = (
         left.groupBy("gq", "gc")
         .cogroup(right.groupBy("gq", "gc"))
         .applyInPandas(_cell, f"query_id {qid_dt}, corpus_id {cid_dt}")
     )
-    rescored = (
-        cand.join(q, "query_id").join(c, "corpus_id")
-        .withColumn("sim", cosine(F.col("__qv__"), F.col("__cv__")))
-    )
+    rescored = _rescore(cand, q, c)
     if exclude_self:
         rescored = rescored.filter(F.col("query_id") != F.col("corpus_id"))
     return _top_k(rescored, k)

@@ -269,8 +269,8 @@ def test_lookup_paths_types_and_fallbacks(spark, index_paths):
     """Every column type comes back with the source's type and
     nullability; values the driver cannot compare like Spark (a bool, a
     float against an int key, a str against an int key, an int past
-    int64) and a key type it does not search (date) take the filter on
-    both runs."""
+    int64 or past DECIMAL(38)) and a key type it does not search (date)
+    take the filter on both runs."""
     schema = ("k long not null, s string, b boolean, dt date, ts timestamp, "
               "dec decimal(10,2), arr array<double>, f float")
     rows = [(7, "x", True, datetime.date(2020, 1, 2),
@@ -284,12 +284,15 @@ def test_lookup_paths_types_and_fallbacks(spark, index_paths):
         return [by_k.find(7), by_k.find(8), by_k.find(7.0), by_k.find("7"),
                 by_k.find(True), by_k.has(2 ** 40), by_f.find(1.5),
                 f.index_on("dt").find(datetime.date(2020, 1, 2)),
-                by_k.find(2 ** 70), by_k.has(-(2 ** 70))]
+                by_k.find(2 ** 70), by_k.has(-(2 ** 70)),
+                by_k.find(10 ** 38), by_k.has(-(10 ** 38)),
+                by_f.find(2 ** 200), by_k.has(2 ** 200)]
 
     got = index_paths(body)
     assert [len(g[1]) for g in got if isinstance(g, tuple)] == \
-        [1, 1, 1, 1, 0, 1, 1, 0]
-    assert got[-1] is False  # past int64: no match, and no error
+        [1, 1, 1, 1, 0, 1, 1, 0, 0, 0]
+    # past int64, and past DECIMAL(38): no match, and no error
+    assert got[9] is got[11] is got[13] is False
     assert got[0][0]["k"].nullable is False
 
 

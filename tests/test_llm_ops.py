@@ -259,6 +259,73 @@ def test_embedding_grid_matches_allpairs(spark, sf_dir):
         assert got == naive and got, m
 
 
+def _nan_safe(rows):
+    """Result rows as a sorted list, NaN spelled ``"nan"``: NaN never
+    equals itself, so two identical outputs would compare unequal."""
+    return sorted((tuple("nan" if isinstance(x, float) and math.isnan(x)
+                         else x for x in r) for r in rows), key=repr)
+
+
+def _edge_vectors(spark):
+    """Ordinary 3-d vectors beside NULL, NULL-element, zero, NaN, +Inf
+    and -Inf vectors, each of those twice."""
+    nan, inf = float("nan"), float("inf")
+    odd = [None, [None, 1.0, 0.0], [0.0, 0.0, 0.0], [nan, 0.0, 0.0],
+           [inf, 0.0, 0.0], [0.0, -inf, 1.0]]
+    plain = [[1.0, 0.0, 0.0], [0.9, 0.1, 0.0], [0.0, 1.0, 0.0],
+             [0.5, 0.5, 0.1], [-1.0, 0.2, 0.0], [0.2, 0.3, 0.9],
+             [0.1, 0.9, 0.2], [0.0, 0.1, 1.0]]
+    rows = [(i, v) for i, v in enumerate(plain)] + [
+        (100 + 10 * i + t, v) for i, v in enumerate(odd) for t in range(2)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_embedding_edge_vectors_match_allpairs(spark):
+    """On NULL, NULL-element, zero, NaN and ±Inf vectors the BLAS
+    candidate paths agree with the fold-cosine reference forms: the
+    rescore, not the prefilter, decides every NaN and NULL sim. ``grid``
+    equals ``grid_jvm`` and ``allpairs`` (NaN pairs included, since NaN
+    passes Spark's ``sim >= threshold``), and every ``lsh`` pair is an
+    ``allpairs`` pair with its exact sim."""
+    from csvplus_spark.operators.dedup import embedding_near_pairs
+
+    emb = _edge_vectors(spark)
+
+    def pairs(**kw):
+        return _nan_safe(embedding_near_pairs(emb, 0.4, dim=3, **kw)
+                         .select("id_1", "id_2", "sim").collect())
+
+    naive = pairs(method="allpairs")
+    assert any(s == "nan" for _, _, s in naive)
+    for kw in ({}, {"n_blocks": 2}, {"method": "grid_jvm"},
+               {"collapse": True}):
+        assert pairs(**kw) == naive, kw
+    for c in (False, True):
+        lsh = pairs(method="lsh", collapse=c)
+        assert lsh and set(lsh) <= set(naive) \
+            and len(set(lsh)) == len(lsh), c
+
+
+def test_grid_topk_null_vectors(spark):
+    """A NULL vector among the queries and the corpus: grid_topk does
+    not raise, gives the NULL query no rows, and every other query the
+    rows of brute_force_topk — including the zero, NaN and Inf queries
+    and corpus vectors, whose non-finite BLAS cosines go to the
+    rescore."""
+    from csvplus_spark.operators.similarity import (brute_force_topk,
+                                                    grid_topk)
+
+    emb = _edge_vectors(spark).filter(
+        (F.col("vec_id") < 100) | (F.col("vec_id") % 10 == 0))
+    for k, excl in ((5, True), (2, False)):
+        want = _nan_safe(r for r in brute_force_topk(
+            emb, emb, k=k, exclude_self=excl).collect()
+            if r["query_id"] != 100)
+        got = grid_topk(emb, emb, k=k, n_blocks=2,
+                        exclude_self=excl).collect()
+        assert _nan_safe(got) == want, (k, excl)
+
+
 def test_embedding_lsh_is_exact_subset(spark, sf_dir):
     from csvplus_spark.operators.dedup import embedding_near_pairs
 
@@ -277,14 +344,13 @@ def test_embedding_collapsed_identity(spark, sf_dir):
     with injected exact-duplicate vectors, for BOTH the grid and lsh
     paths — pair set AND bit-exact sims, including the intra-group
     (identical-vector) pairs; a zero-vector twin pair must stay absent
-    from both outputs (NULL cosine never links), and so must NaN/Inf
-    twin pairs (r13 ADVICE: Spark orders NaN above every double, so an
-    unguarded collapse admitted non-finite vectors whose self-sim NaN
-    passes Spark's ``sim >= threshold`` while the plain path's NumPy
-    prefilter drops it). collapse is passed EXPLICITLY both ways: the
-    r14 default is the scanprobe auto gate, which at test SF resolves
-    to False — the identity being pinned is the collapsed machinery
-    itself."""
+    from both outputs (NULL cosine never links). NaN/Inf twins have a
+    NaN cosine to every vector, which passes Spark's
+    ``sim >= threshold``: their pairs in the grid output equal those of
+    ``allpairs``, the fold-cosine reference. collapse is passed
+    EXPLICITLY both ways: the r14 default is the scanprobe auto gate,
+    which at test SF resolves to False — the identity being pinned is
+    the collapsed machinery itself."""
     from csvplus_spark.operators.dedup import embedding_near_pairs
 
     emb = load_table(spark, sf_dir, "embeddings").df \
@@ -299,19 +365,25 @@ def test_embedding_collapsed_identity(spark, sf_dir):
          (9_000_005, [float("inf")] * 64), (9_000_006, [float("inf")] * 64)],
         "vec_id long, embedding array<float>")
     corpus = emb.unionByName(copies).unionByName(copies2).unionByName(zeros)
+
+    def odd(df):  # the pairs of a zero, NaN or Inf vector
+        return _nan_safe(r for r in df.collect()
+                         if r["id_1"] >= 9_000_001 or r["id_2"] >= 9_000_001)
+
     for m in ("grid", "lsh"):
-        plain = {(r["id_1"], r["id_2"], r["sim"])
-                 for r in embedding_near_pairs(
-                     corpus, 0.4, method=m, collapse=False).collect()}
-        fast = {(r["id_1"], r["id_2"], r["sim"])
-                for r in embedding_near_pairs(
-                    corpus, 0.4, method=m, collapse=True).collect()}
+        plain = _nan_safe(embedding_near_pairs(
+            corpus, 0.4, method=m, collapse=False).collect())
+        fast = _nan_safe(embedding_near_pairs(
+            corpus, 0.4, method=m, collapse=True).collect())
         assert fast == plain, m
         # the injected copies alone form intra-group pairs
         assert any(i + 1_000_000 == j for i, j, _ in plain), m
-        # zero/NaN/Inf twins never link, in either path
-        assert not any(i >= 9_000_001 or j >= 9_000_001
-                       for i, j, _ in plain), m
+        # a zero vector's cosine is NULL to every finite vector (NaN to
+        # a NaN/Inf one), so it links to no ordinary vector nor its twin
+        assert not any(j in (9_000_001, 9_000_002)
+                       for _, j, _ in plain), m
+    assert odd(embedding_near_pairs(corpus, 0.4, collapse=False)) == \
+        odd(embedding_near_pairs(corpus, 0.4, method="allpairs"))
 
 
 @pytest.mark.parametrize("n_bits", [32, 60])
@@ -2493,6 +2565,21 @@ def test_operators_reuse_only_lazy_checkpoints():
     assert hits == []
 
 
+def test_one_blas_cosine_kernel():
+    """The BLAS cosine candidates, their margin and the exact rescore
+    live in similarity.py alone: dedup.py stacks no vectors, takes no
+    norm in NumPy and spells no margin, and similarity.py spells the
+    margin once — a copy of the recipe elsewhere fails here."""
+    ops = pathlib.Path(__file__).resolve().parent.parent \
+        / "csvplus_spark" / "operators"
+    dedup = (ops / "dedup.py").read_text()
+    assert [b for b in ("np.stack", "np.linalg.norm", "1e-6")
+            if b in dedup] == []
+    sim = (ops / "similarity.py").read_text()
+    assert sim.count("1e-6") == 1
+    assert len(re.findall(r"^COSINE_MARGIN = ", sim, re.M)) == 1
+
+
 def test_triangle_count_exact(spark):
     """Triangle membership: K4 gives 3 per node; adding a pendant
     edge adds no triangles; a square (4-cycle) has none."""
@@ -3016,8 +3103,8 @@ def test_collapse_identical_on_edge_cases(spark, graph_paths):
     from csvplus_spark.operators.text import (remove_repeated_spans,
                                               repeated_spans)
 
-    def result(df):
-        return df.schema, sorted(map(tuple, df.collect()), key=repr)
+    def result(df):  # NaN-safe: NaN sims pair NaN vectors on every path
+        return df.schema, _nan_safe(df.collect())
 
     s = "doc_id long, text string"
     fox = "the quick brown fox jumps over the lazy dog"
