@@ -1476,7 +1476,9 @@ def _dedup_reps_pairs(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").df
     keep = exact_dedup(docs).filter("is_canonical").select("doc_id")
-    return minhash_dedup_pairs(docs.join(keep, "doc_id"), 0.6)
+    # one doc per exact-duplicate group already: nothing to collapse
+    return minhash_dedup_pairs(docs.join(keep, "doc_id"), 0.6,
+                               collapse=False)
 
 
 def q_pagerank_reps(spark, sf_dir):

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csvplus_spark.errors import CsvPlusError
+
 from .graph import _dense_ids
 from .scanprobe import collapse_wanted, driver_table, keyed_fan_out
 from .text import fingerprint, hash60, tokens
@@ -33,6 +35,11 @@ SHINGLE_K = 3
 #: Mersenne prime 2^31-1 — universal-hash modulus; (a*h+b) stays under
 #: 2^62 so the arithmetic is exact in int64 in Spark AND DuckDB
 MINHASH_P = 2147483647
+
+#: the most rounds the distributed connected-components loop
+#: (:func:`_cc_min_label`) runs; a graph whose labels are not a
+#: fixpoint by then raises instead of returning partial components
+CC_MAX_ROUNDS = 20
 
 
 def _minhash_coefficients(n: int = 64) -> list[tuple[int, int]]:
@@ -181,7 +188,7 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     hot_df: int | None = HOT_SHINGLE_DF,
     shingles: DataFrame | None = None,
-    collapse: bool = False,
+    collapse: bool | None = None,
 ) -> DataFrame:
     """EXACT near-dup pairs: Jaccard over word-trigram shingle sets.
     Returns (doc_id_1, doc_id_2, jaccard).
@@ -217,17 +224,14 @@ def ngram_jaccard_pairs(
     KNOWS no shingle is hot enough to make a quadratic bucket (e.g.
     boilerplate already stripped upstream).
 
-    ``collapse=True`` runs all of the above over one representative
-    per exact-duplicate group and expands the result
+    A collapse (``collapse``, resolved by
+    :func:`scanprobe.collapse_wanted`) runs all of the above over one
+    representative per exact-duplicate group and expands the result
     (:func:`_collapsed_text_pairs`): byte-identical output, with the Σdf²
     blocking volume measured over the DEDUPLICATED corpus —
-    duplication factor f cuts it ×f² (this pair family scaled 8.3× at
-    the 10× validation point without it). The cutoff argument holds in
-    rep space like in any other corpus. It cannot take ``shingles``
-    (that table covers every doc, not the representatives). Off by
-    default: on an already-deduplicated corpus the fingerprint pass is
-    pure overhead. Pinned by test_ngram_collapsed_identity and the
-    driver query `dedup_ngram_fast` (same oracle as `dedup_ngram`).
+    duplication factor f cuts it ×f². It cannot take ``shingles``
+    (that table covers every doc, not the representatives). Pinned by
+    test_ngram_collapsed_identity and `dedup_ngram_fast`.
     """
     return _ngram_pairs(df, threshold, text_col, id_col, hot_df, shingles,
                         collapse, "jaccard")
@@ -240,7 +244,7 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     hot_df: int | None = HOT_SHINGLE_DF,
     shingles: DataFrame | None = None,
-    collapse: bool = False,
+    collapse: bool | None = None,
 ) -> DataFrame:
     """EXACT containment near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|)
     over word-trigram shingle sets — catches SUBSET/SUPERSET
@@ -262,14 +266,12 @@ def ngram_containment_pairs(
     intersections are then completed per candidate exactly as in the
     Jaccard path.
 
-    ``collapse=True`` is the exact-duplicate collapse of
+    ``collapse`` is the exact-duplicate collapse of
     :func:`ngram_jaccard_pairs`: containment is a SET function of the
     shingle sets too, so the identity holds verbatim (cross pairs
     inherit the rep pair's containment, intra pairs score exactly 1.0
-    ≥ any threshold). The plain path's 30× duplication probe hits the
-    copies² shuffle-disk wall exactly like the raw cluster graph did;
-    this is the scale path. Pinned by
-    test_containment_collapsed_identity and `dedup_containment_fast`.
+    ≥ any threshold). Pinned by test_containment_collapsed_identity
+    and `dedup_containment_fast`.
     """
     return _ngram_pairs(df, threshold, text_col, id_col, hot_df, shingles,
                         collapse, "containment")
@@ -277,14 +279,14 @@ def ngram_containment_pairs(
 
 def _ngram_pairs(df: DataFrame, threshold: float, text_col: str,
                  id_col: str, hot_df: int | None,
-                 shingles: DataFrame | None, collapse: bool,
+                 shingles: DataFrame | None, collapse: bool | None,
                  metric: str) -> DataFrame:
     """Shared body of :func:`ngram_jaccard_pairs` and
     :func:`ngram_containment_pairs` (``metric`` names which). The two
     differ only in the fallback candidate set and the score."""
-    if collapse:
+    if _text_collapse(df, shingles, collapse):
         return _collapsed_text_pairs(
-            df, text_col, id_col, shingles,
+            df, text_col, id_col,
             lambda reps, sp: _ngram_pairs(reps, threshold, text_col, id_col,
                                           hot_df, sp, False, metric))
     # a caller's shingles= table is the caller's to pin (checkpointing
@@ -508,7 +510,7 @@ def minhash_dedup_pairs(
     shingles: DataFrame | None = None,
     hot_band_cap: int | None = None,
     hot_band_splits: int = 16,
-    collapse: bool = False,
+    collapse: bool | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, exact-verified.
 
@@ -522,27 +524,25 @@ def minhash_dedup_pairs(
     ``hot_band_cap`` (opt-in): buckets beyond this size run the
     output-identical triangle decomposition of
     :func:`_band_pairs_triangle` — set it when a boilerplate-heavy
-    corpus leaves near-identical (not byte-identical — use
-    ``collapse=True`` for those) signature groups big enough that one
+    corpus leaves near-identical (not byte-identical — a collapse
+    handles those) signature groups big enough that one
     (band, sig) key's m² pairs dominate a task.
 
-    ``collapse=True`` bands and verifies one representative per
+    ``collapse`` bands and verifies one representative per
     exact-duplicate group and expands the result
     (:func:`_collapsed_text_pairs`): byte-identical output,
-    duplication-immune candidate volume. Every copy of a doc carries
-    the same signature, so at duplication factor f the LSH candidates
-    and the verify join behind them grow ×f² with zero information
-    (measured: `dedup_minhash` 28s at the 10× point, 32s at 30× — both
-    dominated by copy×copy candidates). Identity: bands and exact
-    Jaccard depend only on the text, so (a, b) is a candidate iff
-    (rep_a, rep_b) is, at the same Jaccard; copies collide in EVERY
-    band, so the plain path emits every intra-group pair at J = 1.0
-    when the doc has ≥1 shingle. It cannot take ``shingles``. Pinned
-    by test_minhash_collapsed_identity and `dedup_minhash_fast`.
+    duplication-immune candidate volume (every copy of a doc carries
+    the same signature, so at duplication factor f the candidates grow
+    ×f²). Identity: bands and exact Jaccard depend only on the text,
+    so (a, b) is a candidate iff (rep_a, rep_b) is, at the same
+    Jaccard; copies collide in EVERY band, so the plain path emits
+    every intra-group pair at J = 1.0 when the doc has ≥1 shingle. It
+    cannot take ``shingles``. Pinned by test_minhash_collapsed_identity
+    and `dedup_minhash_fast`.
     """
-    if collapse:
+    if _text_collapse(df, shingles, collapse):
         return _collapsed_text_pairs(
-            df, text_col, id_col, shingles,
+            df, text_col, id_col,
             lambda reps, sp: minhash_dedup_pairs(
                 reps, threshold, num_hashes, rows_per_band, text_col, id_col,
                 sp, hot_band_cap, hot_band_splits))
@@ -676,19 +676,29 @@ def _exact_reps(df: DataFrame, text_col: str, id_col: str,
     return grp, members, reps
 
 
+def _text_collapse(df: DataFrame, shingles: DataFrame | None,
+                   collapse: bool | None) -> bool:
+    """Whether a self-pair text family collapses: the gate's answer,
+    except that a caller's ``shingles=`` table (it covers every
+    document, not the representatives) keeps the plain path and
+    refuses ``collapse=True``."""
+    if shingles is None:
+        return collapse_wanted(df, collapse=collapse)
+    if collapse:
+        raise ValueError(
+            "collapse=True shingles the representatives itself; a "
+            "caller's shingles= table covers every document")
+    return False
+
+
 def _collapsed_text_pairs(df: DataFrame, text_col: str, id_col: str,
-                          shingles: DataFrame | None,
                           rep_pairs_of) -> DataFrame:
-    """``collapse=True`` of the self-pair family (n-gram Jaccard,
+    """The collapsed path of the self-pair family (n-gram Jaccard,
     containment, MinHash): ``rep_pairs_of(reps, rep_shingles)`` runs
     the plain operator over one representative per normalized-text
     fingerprint, and :func:`_expand_pairs` expands its verified pairs
     back to doc space, intra-group pairs at 1.0 for the groups whose
     rep has ≥1 shingle."""
-    if shingles is not None:
-        raise ValueError(
-            "collapse=True shingles the representatives itself; a "
-            "caller's shingles= table covers every document")
     grp, members, reps = _exact_reps(df, text_col, id_col, pin=True)
     # ONE pinned shingle table over reps, shared by the operator and
     # the shingled-group check below (fan_out=False: the reps join
@@ -737,8 +747,7 @@ def semantic_dedup(
     n_cells: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_iter: int = 20,
-    collapse: bool = True,
+    collapse: bool | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-space
     semantic dedup where CLUSTERING IS THE BLOCKING — assign vectors
@@ -772,23 +781,21 @@ def semantic_dedup(
     the old fixed default of 16 handed an unwary production caller
     |cell| = n/16 quadratic cost).
 
-    ``collapse=True`` (default, r8): EXACT-duplicate vectors collapse
-    to their min-id representative before cell assignment, and only
-    reps flow through the BLAS / rescore / CC stages — the same
-    duplication-immune trick as :func:`dup_clusters_collapsed`.
-    The sf10 probe measured the plain path at 23.7× per 10× data at
-    duplication factor 100 (the CC stage walks ×f² duplicate-pair
-    edges); the collapsed path is output-BYTE-IDENTICAL because
-    duplicates share their rep's cell (identical distances + the same
-    (d2, cell) tie-break), cosine depends only on vector values, seeds
-    are still drawn from the FULL id space (``seed_src``), reps are
-    group minima, and a group is itself a sim=1 clique in the plain
-    graph. Vectors without a finite positive norm (NULL, NULL element,
-    zero, NaN, Inf) never collapse: they keep a unique fingerprint and
-    run exactly as on the plain path (see _vector_fp);
-    thresholds within 1e-12 of 1.0 disable the collapse (a float
-    self-cosine can fall below such a threshold, so group-clique
-    membership is no longer guaranteed).
+    ``collapse`` (resolved by :func:`scanprobe.collapse_wanted`):
+    EXACT-duplicate vectors collapse to their min-id representative
+    before cell assignment, and only reps flow through the BLAS /
+    rescore / CC stages — the same duplication-immune trick as
+    :func:`dup_clusters_collapsed`. The collapsed path is
+    output-BYTE-IDENTICAL because duplicates share their rep's cell
+    (identical distances + the same (d2, cell) tie-break), cosine
+    depends only on vector values, seeds are still drawn from the FULL
+    id space (``seed_src``), reps are group minima, and a group is
+    itself a sim=1 clique in the plain graph. Vectors without a finite
+    positive norm (NULL, NULL element, zero, NaN, Inf) never collapse:
+    they keep a unique fingerprint and run exactly as on the plain
+    path (see _vector_fp); thresholds within 1e-12 of 1.0 disable the
+    collapse (a float self-cosine can fall below such a threshold, so
+    group-clique membership is no longer guaranteed).
     """
     from .similarity import (_near_candidates, _rescore, auto_n_cells,
                              seed_voronoi_distances, with_double_vec)
@@ -798,7 +805,8 @@ def semantic_dedup(
         n_cells = auto_n_cells(v.count())
     if n_cells < 1:
         raise ValueError(f"semantic_dedup: n_cells must be >= 1, got {n_cells}")
-    collapse = collapse and threshold <= 1.0 - 1e-12
+    collapse = threshold <= 1.0 - 1e-12 and \
+        collapse_wanted(emb, collapse=collapse)
     # r13 (guide §2.5): fan out before the per-vector fingerprint /
     # norm folds — the embeddings parquet reads as 1-2 row groups at
     # bench scales (see similarity.seed_voronoi_distances); the
@@ -835,8 +843,7 @@ def semantic_dedup(
         .select(F.col("id_1").alias("doc_id_1"),
                 F.col("id_2").alias("doc_id_2"))
     )
-    labels = dup_clusters(pairs, max_iter=max_iter) \
-        .withColumnRenamed("doc_id", id_col)
+    labels = dup_clusters(pairs).withColumnRenamed("doc_id", id_col)
     if collapse:
         # expand reps back to members: a member's canonical is its
         # rep's cluster (or the rep itself — a rep-space singleton
@@ -1032,20 +1039,8 @@ def canonicalize_clusters(
     )
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_bits: int = 32) -> DataFrame:
-    """Docs sharing an identical SimHash → same near-dup group."""
-    from .text import simhash_table
-
-    sh = simhash_table(df, text_col, id_col, n_bits)
-    grp, _ = _exact_groups(sh, F.col("simhash"), id_col)
-    canon = grp.select(F.col("__fp__").alias("simhash"),
-                       F.col("__rep__").alias("canonical_id"))
-    return sh.join(canon, "simhash").select(id_col, "simhash", "canonical_id")
-
-
-def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
-                  max_iter: int = 20) -> DataFrame:
+def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None
+                  ) -> DataFrame:
     """Connected components by min-label propagation WITH pointer
     jumping: (a, label) where label = the smallest node id in a's
     component.
@@ -1056,8 +1051,10 @@ def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
 
     Small graphs (those :func:`scanprobe.driver_table` fetches in one
     bounded probe job) are labelled exactly on the driver
-    (:func:`_cc_on_driver`) and always reach the fixpoint; ``max_iter``
-    bounds only the distributed loop below, which larger graphs run.
+    (:func:`_cc_on_driver`) and always reach the fixpoint; the
+    distributed loop below, which larger graphs run, raises a
+    :class:`CsvPlusError` when :data:`CC_MAX_ROUNDS` rounds leave it
+    short of one.
 
     Each iteration does (1) a neighbor-min sweep (HashToMin step) and
     (2) a pointer jump — every node re-reads the PREVIOUS round's label
@@ -1090,7 +1087,7 @@ def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
     if nodes is None:
         nodes = edges.select("a").distinct()
     labels = nodes.select("a").withColumn("label", F.col("a"))
-    for it in range(max_iter):
+    for it in range(CC_MAX_ROUNDS):
         neighbor = (
             edges.join(labels.withColumnRenamed("a", "b")
                        .withColumnRenamed("label", "nl"), "b")
@@ -1116,10 +1113,11 @@ def _cc_min_label(edges: DataFrame, nodes: DataFrame | None = None,
                 .filter(F.col("n.label") != F.col("o.label")).limit(1).count()
             )
             if not changed:
-                labels = new_labels
-                break
+                return new_labels
         labels = new_labels
-    return labels
+    raise CsvPlusError(
+        f"connected components did not converge in CC_MAX_ROUNDS="
+        f"{CC_MAX_ROUNDS} rounds")
 
 
 def _cc_on_driver(edges: DataFrame, small, nodes: DataFrame | None
@@ -1162,8 +1160,8 @@ def _cc_on_driver(edges: DataFrame, small, nodes: DataFrame | None
     return spark.createDataFrame(table, schema)
 
 
-def dup_clusters(pairs: DataFrame, id1: str = "doc_id_1", id2: str = "doc_id_2",
-                 max_iter: int = 20) -> DataFrame:
+def dup_clusters(pairs: DataFrame, id1: str = "doc_id_1", id2: str = "doc_id_2"
+                 ) -> DataFrame:
     """Connected components over the near-dup pair graph → (doc_id,
     cluster_id) with cluster_id = min doc id in the component.
 
@@ -1176,7 +1174,7 @@ def dup_clusters(pairs: DataFrame, id1: str = "doc_id_1", id2: str = "doc_id_2",
     edges = edges.union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    labels = _cc_min_label(edges, max_iter=max_iter)
+    labels = _cc_min_label(edges)
     return labels.select(F.col("a").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -1226,8 +1224,8 @@ def cluster_representatives(docs: DataFrame, clusters: DataFrame,
 
 
 def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
-                           text_col: str = "text", id_col: str = "doc_id",
-                           max_iter: int = 20) -> DataFrame:
+                           text_col: str = "text", id_col: str = "doc_id"
+                           ) -> DataFrame:
     """``dup_clusters(ngram_jaccard_pairs(docs))`` with exact-duplicate
     collapse: byte-identical output, duplication-immune cost.
 
@@ -1273,8 +1271,7 @@ def dup_clusters_collapsed(docs: DataFrame, threshold: float = 0.6,
     sp = shingle_pairs(reps, text_col, id_col).localCheckpoint(eager=False)
     labels = dup_clusters(
         ngram_jaccard_pairs(reps, threshold, text_col, id_col,
-                            shingles=sp),
-        max_iter=max_iter)
+                            shingles=sp))
 
     shingled = sp.select("__id__").withColumnRenamed("__id__", "__rep__") \
         .distinct()
@@ -1335,8 +1332,8 @@ def embedding_near_pairs(
     With ``block_col`` set, pairs are restricted to equal user-provided
     blocks (equi-join on the block key).
 
-    ``collapse`` (r13; r14 default ``None`` = auto) applies the
-    exact-duplicate collapse of :func:`semantic_dedup` /
+    ``collapse`` (resolved by :func:`scanprobe.collapse_wanted`)
+    applies the exact-duplicate collapse of :func:`semantic_dedup` /
     :func:`simhash_near_pairs` to the ``grid`` and ``lsh`` paths:
     identical vectors share every grid block comparison outcome and
     every LSH bucket (both depend only on the vector values), and
@@ -1351,22 +1348,13 @@ def embedding_near_pairs(
     output-sized expansion — at duplication factor f the per-pair
     shuffle and fold work shrinks by f². Vectors without a finite
     positive norm (NULL / NULL-element / zero-norm / NaN / Inf) never
-    collapse (see _vector_fp). ``grid_jvm`` stays uncollapsed as the
-    independent reference form the parity tests check the collapsed
-    paths against.
+    collapse (see _vector_fp). Pinned by
+    test_embedding_collapsed_identity.
 
     ``grid`` and ``lsh`` score their blocks with similarity's BLAS
     candidate kernel and exact rescore (its module docstring), so
     their pairs and sims — NaN ones included — are those of
-    ``grid_jvm`` and ``allpairs``; ``lsh`` may only miss pairs.
-
-    ``collapse=None`` (auto, r14): the fingerprint/membership
-    machinery costs two checkpoints and a groupBy that are pure
-    overhead on a small duplicate-free input (the r13 driver bench
-    paid ~0.5-2 s per query at sf0.1), so auto collapses only when
-    the input probes big (or unprobeable — the scale-safe default;
-    see scanprobe). Either way the output is identical — pinned by
-    test_embedding_collapsed_identity.
+    ``allpairs``; ``lsh`` may only miss pairs.
     """
     from .similarity import (_near_candidates, _rescore, cosine,
                              hyperplane_bits, with_double_vec)
@@ -1395,14 +1383,14 @@ def embedding_near_pairs(
                     F.col(f"b.{id_col}").alias("id_2"), "sim")
         )
 
+    if method not in ("grid", "lsh"):
+        raise ValueError(f"unknown method: {method!r}")
     # exact-duplicate collapse (see docstring): run the quadratic
     # stages over one rep per distinct vector, expand at the end.
     # Rows without a finite positive norm stay singletons (see
     # _vector_fp).
-    if collapse is None:
-        collapse = collapse_wanted(emb)
-    collapsed = collapse and method in ("grid", "lsh")
-    if collapsed:
+    collapse = collapse_wanted(emb, collapse=collapse)
+    if collapse:
         # grp feeds the method pipeline, the membership join AND the
         # intra-group self-sim; members feeds both expansion joins —
         # both pinned lazily so the fingerprint pass runs once
@@ -1412,7 +1400,7 @@ def embedding_near_pairs(
 
     def expand(rp: DataFrame) -> DataFrame:
         """The rep pairs ``rp`` back in id space, when collapsed."""
-        if not collapsed:
+        if not collapse:
             return rp
         vec = F.col("__vec__")
         return _expand_pairs(rp, members, id_col, grp, cosine(vec, vec),
@@ -1469,9 +1457,6 @@ def embedding_near_pairs(
         rp = _rescore(cand, v).filter(F.col("sim") >= threshold)
         return expand(rp)
 
-    if method not in ("grid", "grid_jvm"):
-        raise ValueError(f"unknown method: {method!r}")
-
     spark = emb.sparkSession
     if n_blocks is None:
         # size blocks for the Arrow matmul: ~1k vectors per block keeps
@@ -1500,23 +1485,11 @@ def embedding_near_pairs(
         .select(F.col(id_col).alias("__id2__"), F.col("__vec__").alias("__v2__"),
                 F.col("bi2").alias("bi"), F.col("bj2").alias("bj"))
 
-    if method == "grid_jvm":
-        # pure-JVM scoring: one interpreted cosine per pair — the
-        # reference form the Arrow path is verified against
-        return (
-            left.join(right, ["bi", "bj"])
-            .filter((F.col("bi") < F.col("bj")) | (F.col("__id1__") < F.col("__id2__")))
-            .withColumn("sim", cosine(F.col("__v1__"), F.col("__v2__")))
-            .filter(F.col("sim") >= threshold)
-            .select(F.least("__id1__", "__id2__").alias("id_1"),
-                    F.greatest("__id1__", "__id2__").alias("id_2"), "sim")
-        )
-
     # grid (default): each grid cell's |bi|×|bj| block is scored by
     # similarity's BLAS kernel inside a cogrouped applyInPandas (Arrow
     # transfer, ~100× the throughput of per-pair interpreted folds),
     # and the exact rescore makes the output — values included —
-    # bit-identical to grid_jvm and the DuckDB oracle
+    # bit-identical to allpairs and the DuckDB oracle
     id_dt = v.schema[id_col].dataType.simpleString()
 
     def _cell(key, lpdf, rpdf):
@@ -1752,7 +1725,8 @@ def snapshot_diff(current: DataFrame, previous: DataFrame,
 def minhash_join(left: DataFrame, right: DataFrame,
                  threshold: float = 0.6, num_hashes: int = 32,
                  rows_per_band: int = 2, text_col: str = "text",
-                 id_col: str = "doc_id", collapse: bool = False) -> DataFrame:
+                 id_col: str = "doc_id",
+                 collapse: bool | None = None) -> DataFrame:
     """Fuzzy CROSS-TABLE join by MinHash-LSH: near-duplicate pairs
     (left_id, right_id, jaccard ≥ threshold) between two corpora —
     aligning a new crawl snapshot against the previous one without
@@ -1768,13 +1742,13 @@ def minhash_join(left: DataFrame, right: DataFrame,
     shuffle once on (band, sig); candidate volume is governed by true
     cross-corpus similarity, not |L|·|R|.
 
-    ``collapse=True`` collapses each side to one representative per
-    normalized-text fingerprint, joins the reps, and expands the
-    verified rep pairs through both membership tables with
-    output-sized joins: byte-identical output, duplication-immune cost
-    (at duplication factors f_L, f_R the plain join's candidate AND
-    output volumes grow ×(f_L·f_R) — measured: 30× exact-copy scaling
-    took fuzzy_join 1.74s→15.7s). Identity: signatures and exact
+    ``collapse`` (resolved over both sides by
+    :func:`scanprobe.collapse_wanted`) collapses each side to one
+    representative per normalized-text fingerprint, joins the reps,
+    and expands the verified rep pairs through both membership tables
+    with output-sized joins: byte-identical output, duplication-immune
+    cost (at duplication factors f_L, f_R the plain join's candidate
+    AND output volumes grow ×(f_L·f_R)). Identity: signatures and exact
     Jaccard depend only on the text, so (a, b) is a plain-path pair
     iff (rep_a, rep_b) is a rep-space pair with the same jaccard —
     including identical-text cross-table pairs, whose reps collide in
@@ -1782,6 +1756,7 @@ def minhash_join(left: DataFrame, right: DataFrame,
     docs never reach banding in EITHER path. Pinned by
     test_minhash_join_collapsed_identity and `fuzzy_join_fast`.
     """
+    collapse = collapse_wanted(left, right, collapse=collapse)
     if collapse:
         _, ml, left = _exact_reps(left, text_col, id_col, pin=True)
         _, mr, right = _exact_reps(right, text_col, id_col, pin=True)

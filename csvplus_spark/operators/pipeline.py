@@ -56,7 +56,9 @@ def build_training_set(
     one shingle equi-join with the probe side as build side; the split
     is a pure hash filter. Nothing here collects to the driver.
     """
-    from .dedup import _exact_reps, canonicalize_clusters, contamination_check
+    from .dedup import (_exact_reps, canonicalize_clusters,
+                        contamination_check, ngram_jaccard_pairs,
+                        shingle_pairs)
     from .sampling import train_val_test_split
     from .text import text_stats
 
@@ -80,19 +82,14 @@ def build_training_set(
         # shingle_pairs(d2) table (one tokenize+explode pass instead
         # of two — the dominant shared cost at corpus scale)
         d2 = d2.localCheckpoint(eager=False)
-        from .dedup import ngram_jaccard_pairs, shingle_pairs
-
         sh2 = shingle_pairs(d2, text_col, id_col).localCheckpoint(
             eager=False)
-        canon = canonicalize_clusters(
-            d2, pairs=ngram_jaccard_pairs(d2, jaccard_threshold,
-                                          text_col, id_col,
-                                          shingles=sh2),
-            threshold=jaccard_threshold,
-            text_col=text_col, id_col=id_col)
-    else:
-        canon = canonicalize_clusters(d2, threshold=jaccard_threshold,
-                                      text_col=text_col, id_col=id_col)
+    # d2 holds one doc per exact-duplicate group: nothing to collapse
+    canon = canonicalize_clusters(
+        d2, pairs=ngram_jaccard_pairs(d2, jaccard_threshold, text_col,
+                                      id_col, shingles=sh2,
+                                      collapse=False),
+        threshold=jaccard_threshold, text_col=text_col, id_col=id_col)
     d3 = d2.join(canon.filter(F.col("keep")).select(id_col), id_col)
     if probes is not None:
         cont = contamination_check(d3, probes, corpus_text=text_col,

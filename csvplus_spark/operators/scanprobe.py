@@ -43,9 +43,13 @@ fuzzy_join_fast); a few unsplittable remote objects are exactly the
 costs more than the single-threaded head start (r13: ~60 queries
 0.4-0.9x). Round-robin (:func:`fan_out`, ahead of Python-heavy
 stages) fires only on small, local, narrow input. Collapse
-(:func:`collapse_wanted`): unknowable size means collapse, the
-scale-safe default. :func:`scan_disk_bytes` lends the same walk to the
-blob partition estimate of ``multimodal.repartition_for_blobs``.
+(:func:`collapse_wanted`) resolves ``collapse=None`` for all eight
+exact-duplicate collapse families (the n-gram Jaccard, containment and
+MinHash pairs, ``minhash_join``, ``semantic_dedup``,
+``embedding_near_pairs`` and the two span operators): unknowable size
+means collapse, the scale-safe default. :func:`scan_disk_bytes` lends
+the same walk to the blob partition estimate of
+``multimodal.repartition_for_blobs``.
 
 Uncompressed bytes (parquet ``total_byte_size``) rather than file
 size for the keyed gates because the duplication-heavy corpora these
@@ -153,18 +157,24 @@ def _sizes(files: list[str], decoded: bool,
     return row_groups, total
 
 
-def collapse_wanted(df: DataFrame) -> bool:
-    """The auto (``collapse=None``) exact-duplicate collapse gate of
-    ``embedding_near_pairs`` and the span operators: the fingerprint
-    and membership machinery only pays when the quadratic stages are
-    expensive, so collapse when the input's decoded size reaches
-    ``KEYED_FAN_OUT_MIN_BYTES`` — or is unknowable (checkpoint,
-    remote), the scale-safe default. Stops reading footers once the
-    floor is reached: no later file can turn the answer."""
-    files = _scan_files(df)
+def collapse_wanted(*dfs: DataFrame, collapse: bool | None = None) -> bool:
+    """The one exact-duplicate collapse decision, for every family
+    that has a ``collapse`` argument: an explicit True or False is the
+    caller's and passes through; None collapses when the decoded size
+    of any input in ``dfs`` reaches ``KEYED_FAN_OUT_MIN_BYTES`` or
+    cannot be known (checkpoint, remote), the scale-safe default. The
+    fingerprint pass only pays when the quadratic stages are expensive.
+    Stops reading footers once the floor is reached: no later file can
+    turn the answer."""
+    if collapse is not None:
+        return collapse
     floor = KEYED_FAN_OUT_MIN_BYTES
-    sizes = _sizes(files, decoded=True, stop=floor) if files else None
-    return sizes is None or sizes[1] >= floor
+    for df in dfs:
+        files = _scan_files(df)
+        sizes = _sizes(files, decoded=True, stop=floor) if files else None
+        if sizes is None or sizes[1] >= floor:
+            return True
+    return False
 
 
 def scan_fan_out_wanted(df: DataFrame,

@@ -74,10 +74,6 @@ def bpe_token_count(col: str = "text") -> Column:
     ).cast("long")
 
 
-def char_count(col: str = "text") -> Column:
-    return F.length(F.col(col))
-
-
 def punct_ratio(col: str = "text") -> Column:
     """Punctuation chars / total chars (0 for empty text)."""
     text = F.col(col)
@@ -92,12 +88,6 @@ def _in_set(words: list[str]):
         return t.isin(words)
 
     return pred
-
-
-def stopword_ratio(col: str = "text", lang: str = "en") -> Column:
-    toks = tokens(col)
-    n_stop = F.size(F.filter(toks, _in_set(LANG_STOPWORDS[lang])))
-    return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def quality_score(col: str = "text") -> Column:
@@ -833,7 +823,7 @@ def repeated_spans(df: DataFrame, k: int = 5, min_docs: int = 2,
     and one equi-join back. The doc-frequency aggregate is map-side
     combined; no driver state, no all-pairs anywhere.
 
-    ``collapse`` (r14, auto by scanprobe size — r13 verdict item 5):
+    ``collapse`` (resolved by :func:`scanprobe.collapse_wanted`):
     EXACT-duplicate raw texts share identical token streams, so every
     stage up to the final expansion runs once per DISTINCT text: the
     span table is built over min-id reps, the doc-frequency aggregate
@@ -861,15 +851,12 @@ def _qualified_spans(df: DataFrame, k: int, min_docs: int, text_col: str,
     ``spans`` the ``(doc_id, pos, span, n_docs)`` rows of every span in
     ≥ ``min_docs`` docs over the doc table ``src``.
 
-    Plain, ``src`` is ``df`` and ``members`` None. ``collapse=None``
-    (auto) probes the input's decoded size (see scanprobe): the
-    fingerprint aggregate + membership join are pure overhead on a
-    small duplicate-free corpus, and the f× shrink of every span
-    aggregate is the whole win on a duplicated one. Collapsed, ``src`` is one
-    ``(id_col, text_col)`` row per distinct RAW text — its min-id rep
-    (:func:`dedup._exact_groups` over the md5 of the raw text: byte
-    equality, so line splits and token streams are identical within a
-    group) — and ``members`` maps every doc to its rep. NULL texts get
+    Plain, ``src`` is ``df`` and ``members`` None. Collapsed, ``src``
+    is one ``(id_col, text_col)`` row per distinct RAW text — its
+    min-id rep (:func:`dedup._exact_groups` over the md5 of the raw
+    text: byte equality, so line splits and token streams are
+    identical within a group) — and ``members`` maps every doc to its
+    rep. NULL texts get
     a sentinel fingerprint (md5 of NULL is NULL, and a NULL key would
     drop those docs from the expansion): all NULL texts share one
     group, which is exact, since they all produce zero tokens."""
@@ -877,9 +864,7 @@ def _qualified_spans(df: DataFrame, k: int, min_docs: int, text_col: str,
 
     if k < 1:
         raise ValueError(f"repeated_spans: k must be >= 1, got {k}")
-    if collapse is None:
-        collapse = collapse_wanted(df)
-    if not collapse:
+    if not collapse_wanted(df, collapse=collapse):
         spans = _span_table(df, k, text_col, id_col)
         freq = (
             spans.groupBy("span")
@@ -929,7 +914,7 @@ def remove_repeated_spans(df: DataFrame, k: int = 5, min_docs: int = 2,
     token-bounded, and the doc key is high-cardinality so the
     aggregate parallelizes.
 
-    ``collapse`` (r14, auto by scanprobe size — r13 verdict item 5):
+    ``collapse`` (resolved by :func:`scanprobe.collapse_wanted`):
     EXACT-duplicate raw texts yield the identical cleaned_text, so the
     whole rewrite (span table, coverage explode, anti-join, rebuild)
     runs once per DISTINCT text and fans the per-rep result out to
